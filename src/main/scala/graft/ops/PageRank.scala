@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Fixed-point integer PageRank — the shared recurrence behind
   * `g8_pagerank` (cold start) and `g13_pagerank_incremental` (warm
   * start over a standing rank table), plus the streaming rank ledger
-  * ([[graft.streaming.RankIngest]]).
+  * ([[graft.streaming.EdgeLedger.rank]]).
   *
   * The recurrence (d = 0.85, base 0.15, SCALE = 10⁶):
   *   pr'(v) = 150000 + Σ over in-neighbors u of (pr(u)·85) div (100·deg(u))

@@ -108,9 +108,11 @@ object Triangles {
     * every streaming triangle system pays (id/arrival-stable
     * orientations are the standard choice for exactly this reason).
     *
-    * Inputs are simple undirected edge lists (id_a < id_b, distinct);
-    * batch edges already present in the corpus are the caller's to
-    * exclude (a replayed edge would re-count its triangles). */
+    * Inputs are simple undirected edge lists (id_a < id_b, distinct).
+    * The corpus may already hold the batch (its duplicate adjacency
+    * entries collapse in the canonical-triple pass), but batch edges
+    * stored by an EARLIER batch are the caller's to exclude (a
+    * replayed edge would re-count its triangles). */
   def newTrianglesPerNode(corpusEdges: DataFrame, batchEdges: DataFrame,
       broadcastEdgeLimit: Long = 4L << 20): DataFrame = {
     val ec = corpusEdges.select(col("id_a").cast("long").as("a"),

@@ -432,7 +432,7 @@ object ExtendedQueries {
     // FIVE cold-start power iterations. The fixed-point integer
     // recurrence, determinism argument, and per-iteration staging
     // discipline live in ops.PageRank (shared with the g13 warm-start
-    // incremental tier and the RankIngest streaming ledger). The
+    // incremental tier and the streaming rank ledger). The
     // staging A/B at sf0.1 measured neutral (3.1-4.0 s both ways) —
     // staged anyway: it bounds plan depth and recovery cost as the
     // iteration count grows (the Pregel discipline), for free. The

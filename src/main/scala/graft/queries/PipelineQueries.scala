@@ -730,7 +730,7 @@ object PipelineQueries {
     // (compile time dominated execution 4:1 on that host) inverted on
     // the r17 host: interpreted plans serialize the whole expression
     // tree into every task closure (observed 6.6 MiB task binaries vs
-    // ~1 MiB codegen'd), and the paired same-JVM A/B (graft.Probe,
+    // ~1 MiB codegen'd), and a paired same-JVM A/B (scratch harness,
     // min-of-3, sf0.1, local[32]) measured codegen 4.66 s vs
     // interpreted 12.85 s — 2.8× — with identical results (the scoring
     // is integer-lattice arithmetic either way). Codegen is also

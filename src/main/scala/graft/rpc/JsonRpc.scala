@@ -42,8 +42,10 @@ final case class RpcCall(method: String, params: List[JValue])
 trait JsonRpcClient {
   /** Send calls as one JSON-RPC batch; the result at index i is the
     * id-correlated response to calls(i). Left = per-request server
-    * error; throws [[ThrottledException]] on a batch-level throttle and
-    * [[RpcClientException]] on transport failure. */
+    * error; throws [[ThrottledException]] on a batch-level throttle,
+    * [[RpcClientException]] on transport failure, and an unwrapped
+    * InterruptedException (interrupt flag set) when the caller is
+    * interrupted. */
   def batch(calls: Seq[RpcCall]): Seq[Either[RpcServerException, JValue]]
 
   def call(method: String, params: JValue*): JValue =
@@ -233,9 +235,13 @@ final class HttpJsonRpcClient(endpoint: String, timeoutMs: Long) extends JsonRpc
           send(attemptsLeft - 1)
         case e: java.io.IOException =>
           throw new RpcClientException(s"$endpoint transport failure: ${e.getMessage}", e)
+        // an interrupt is a stop (e.g. a streaming query's stop() during
+        // a head probe), not a transport failure: it must reach the
+        // caller unwrapped, or the pool would evict a healthy endpoint
+        // and Spark would report a failed query instead of a stop
         case e: InterruptedException =>
           Thread.currentThread().interrupt()
-          throw new RpcClientException(s"$endpoint interrupted", e)
+          throw e
       }
     val resp = send(HttpJsonRpcClient.TransportRetries)
     resp.statusCode() match {

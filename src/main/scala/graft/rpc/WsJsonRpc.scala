@@ -186,6 +186,9 @@ final class WsJsonRpcClient(endpoint: String, timeoutMs: Long) extends JsonRpcCl
           .buildAsync(URI.create(endpoint), listener)
           .get(timeoutMs, TimeUnit.MILLISECONDS)
         catch {
+          case ie: InterruptedException =>
+            Thread.currentThread().interrupt()
+            throw ie
           case e: Exception =>
             throw new RpcClientException(s"$endpoint websocket connect failed: ${e.getMessage}", e)
         }
@@ -204,7 +207,10 @@ final class WsJsonRpcClient(endpoint: String, timeoutMs: Long) extends JsonRpcCl
         // replaced it); either way this window's calls were never
         // delivered, so the thrown Disconnected drives their replay.
         dropped(ws, s"$endpoint send failed: ${e.getMessage}")
-        throw new Disconnected(s"$endpoint send failed: ${e.getMessage}")
+        e match {
+          case ie: InterruptedException => Thread.currentThread().interrupt(); throw ie
+          case _ => throw new Disconnected(s"$endpoint send failed: ${e.getMessage}")
+        }
     }
   }
 
@@ -264,6 +270,11 @@ final class WsJsonRpcClient(endpoint: String, timeoutMs: Long) extends JsonRpcCl
             // and re-wrapping it as a transport failure would make the
             // pool evict a healthy endpoint instead — HTTP parity
             case s: RpcServerException => throw s
+            // a stop, not a socket failure: rethrow unwrapped (the HTTP
+            // transport's interrupt rule)
+            case ie: InterruptedException =>
+              Thread.currentThread().interrupt()
+              throw ie
             case _: TimeoutException =>
               throw new RpcClientException(s"$endpoint websocket response timeout (${timeoutMs}ms)")
             case other =>

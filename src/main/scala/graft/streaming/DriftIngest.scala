@@ -15,7 +15,7 @@ import graft.ops.Drift
   * distributional, and it should fire at ingest time, not at the next
   * full-corpus profile.
   *
-  * State discipline: counts are ADDITIVE (the GraphIngest ledger kind
+  * State discipline: counts are ADDITIVE (the triangle ledger's kind
   * — the standing distribution is a plain per-key SUM over epoch
   * partitions), so there is no snapshot seeding; replay safety is the
   * usual pair of rules — every standing read bounded STRICTLY BELOW

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The standing-state parquet conventions shared by every ingest gate
-  * (Ingest, ErIngest, GraphIngest, RankIngest, ReachIngest) — one
-  * definition instead of five verbatim copies, so a fix to any rule
-  * lands everywhere at once:
+  * (Ingest, ErIngest, DriftIngest and the graph ledgers of
+  * [[EdgeLedger]]) — one definition instead of verbatim copies, so a
+  * fix to any rule lands everywhere at once:
   *
   *  - [[standing]]: missing dir / marker-only dir = empty state (None);
   *    any OTHER read problem propagates loudly — silently treating a
@@ -20,11 +20,12 @@ import org.apache.spark.sql.functions._
   *    parquet write leaves a schema-less marker-only dir a later read
   *    cannot infer a schema from; skipping is replay-safe.
   *  - [[latestSnapshot]]: newest snapshot with batch_id strictly below
-  *    a bound — the replay rule for non-additive ledgers (rank/hop
-  *    snapshots): an epoch's seed is always the snapshot written
-  *    BEFORE it, so a replay recomputes the identical result. The
-  *    max-epoch probe is one scalar aggregate (metadata-scale), and
-  *    partition columns read back type-inferred (int) — cast first.
+  *    a bound — the replay rule for non-additive ledgers (rank, hop,
+  *    label, core and truss snapshots): an epoch's seed is always the
+  *    snapshot written BEFORE it, so a replay recomputes the identical
+  *    result. The max-epoch probe is one scalar aggregate
+  *    (metadata-scale), and partition columns read back type-inferred
+  *    (int) — cast first.
   */
 object StandingStore {
 

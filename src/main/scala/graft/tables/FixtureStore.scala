@@ -36,7 +36,7 @@ private[graft] object FixtureStore {
     * binary lacks the newer keys; its getters would silently fall back
     * to inline builds, charging standing-state build cost to the very
     * queries a round claims moved it out (the r17 ADVICE finding, which
-    * hit Probe's unsalted root and Bench's provided-root path). The
+    * hit an A/B harness's unsalted root and Bench's provided-root path). The
     * version is recorded next to the `_source_dir` marker and checked
     * wherever the marker is. */
   val FixtureSetVersion: String = "r17"
@@ -199,7 +199,7 @@ private[graft] object FixtureStore {
 
   /** True when the root was prepared for `dir` by a binary with the
     * CURRENT fixture-set version — the one check every at-rest
-    * consumer (Bench, Probe, atRest itself) must make before serving. */
+    * consumer (Bench, atRest itself) must make before serving. */
   def markerCurrent(spark: SparkSession, root: String, dir: String): Boolean =
     readMarker(spark, root).contains(dir) &&
       readVersion(spark, root).contains(FixtureSetVersion)

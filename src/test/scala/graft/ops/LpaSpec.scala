@@ -98,7 +98,7 @@ class LpaSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(got === refWarm(merged, standingLbl, 2), s"seed $seed diverged")
       // the warm chain equals folding: propagate(standing,3) then 2
-      // more rounds on merged — the CommunityIngest ledger contract
+      // more rounds on merged — the community ledger contract
       val fold = Lpa.warmStart(
           Lpa.propagate(standing.toDF("src", "dst"), rounds = 3),
           merged.toDF("src", "dst"), rounds = 2)

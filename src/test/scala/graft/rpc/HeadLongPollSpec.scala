@@ -61,4 +61,32 @@ class HeadLongPollSpec extends SparkSpec {
       q.stop() // interrupt ends any in-flight long-poll immediately
     } finally stub.stop()
   }
+
+  test("stop() while the head probe is in flight ends the query cleanly") {
+    // the stub's head does not advance, so the stream long-polls; the
+    // second pool member accepts the next probe and never answers, so
+    // stop() lands inside the probe's round trip, not between probes
+    val stub = new StubRpcServer(chainHeight = 5)
+    val hung = new HungEndpoint
+    try {
+      val ckpt = java.nio.file.Files.createTempDirectory("stopprobe_ckpt").toString
+      val q = spark.readStream.format("blocks")
+        .option("start", "5").option("maxBlock", "100000")
+        .option("blocksPerTrigger", "50")
+        .option("numPartitions", "1")
+        .option("fetcher", classOf[RpcBlockDataFetcher].getName)
+        .option("endpoints", s"${hung.url},${stub.url}") // the stub is probed first
+        .option("headWaitMs", "60000")
+        .option("headProbeMs", "25")
+        .load()
+        .selectExpr("number")
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .start()
+      assert(hung.accepted.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the head probe never reached the hung endpoint")
+      q.stop()
+      assert(q.exception.isEmpty, s"stop() during a head probe failed the query: ${q.exception}")
+    } finally { hung.close(); stub.stop() }
+  }
 }

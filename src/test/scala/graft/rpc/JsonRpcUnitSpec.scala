@@ -159,6 +159,36 @@ class JsonRpcUnitSpec extends AnyFunSuite {
     assert(Seq(a, b, c).map(_.hits.get()) === Seq(1, 1, 1))
   }
 
+  // the ws client over a hung endpoint blocks in its handshake
+  Seq[(String, String => JsonRpcClient)](
+    "http" -> (url => new HttpJsonRpcClient(url, 30000L)),
+    "ws" -> (url => new WsJsonRpcClient(url.replaceFirst("^http", "ws"), 30000L))
+  ).foreach { case (transport, client) =>
+    test(s"$transport: an interrupt mid-request reaches the caller unwrapped and evicts nothing") {
+      val hung = new HungEndpoint
+      val live = new ScriptedClient("live")
+      // rotation probes (index+1) first, so the hung endpoint is tried first
+      val pool = new PooledJsonRpcClient(Seq(live, client(hung.url)))
+      @volatile var outcome: Throwable = null
+      @volatile var flagSet = false
+      val caller = new Thread(() =>
+        try pool.call("eth_blockNumber")
+        catch { case t: Throwable => outcome = t; flagSet = Thread.currentThread().isInterrupted })
+      try {
+        caller.start()
+        assert(hung.accepted.await(10, TimeUnit.SECONDS), "request never reached the hung endpoint")
+        caller.interrupt()
+        caller.join(10000)
+        assert(outcome.isInstanceOf[InterruptedException],
+          s"caller ended with ${Option(outcome).getOrElse("a result from the failover endpoint")}")
+        assert(flagSet, "interrupt flag must stay set for the caller")
+        // a stop is not a transport failure: no failover, no eviction
+        assert(live.hits.get() === 0)
+        assert(pool.coolingDown === Set.empty)
+      } finally hung.close()
+    }
+  }
+
   test("requests-per-second cap: wire entries are paced into per-second windows") {
     val served = new AtomicInteger(0)
     val instant = new JsonRpcClient {
