@@ -140,10 +140,9 @@ case class MisraGriesAgg(
 }
 
 object MisraGries {
-  /** One Misra–Gries update step, shared by the batch aggregate and
-    * the streaming twin so the two cannot drift: increment a resident
-    * counter, insert below capacity (via `copy`, for callers whose
-    * items alias reused buffers), or decrement-all on overflow (the
+  /** One Misra–Gries update step of the aggregate: increment a
+    * resident counter, insert below capacity (via `copy`, for callers
+    * whose items alias reused buffers), or decrement-all on overflow (the
     * new item's implicit 1 decrements to 0 — it is not inserted;
     * zeros drop). Each decrement cancels one prior increment, so
     * total decrement work is O(N) amortized over a stream. */

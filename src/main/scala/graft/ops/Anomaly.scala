@@ -9,12 +9,10 @@ import org.apache.spark.sql.functions._
   * (current row excluded — an anomaly must not mask itself by
   * inflating its own baseline).
   *
-  * Extracted from the t7_anomaly query body so the streaming twin
-  * ([[graft.streaming.StreamAnomaly]]) can converge against the same
-  * batch operator (the Funnel/Retention discipline). Determinism: the
-  * window accumulates s1/s2 as DECIMALS (order-independent — the
-  * a10_moments/o4 discipline; double window sums depend on frame
-  * arrival order), then ONE fixed double expression derives
+  * The t7_anomaly query body. Determinism: the window accumulates
+  * s1/s2 as DECIMALS (order-independent — the a10_moments/o4
+  * discipline; double window sums depend on frame arrival order),
+  * then ONE fixed double expression derives
   * mean/variance/z, so any engine that replays the same trailing set
   * reproduces the doubles bit-for-bit. Windows with < `minPrior`
   * prior events emit no verdict (a 2-sample sigma is noise).

@@ -46,9 +46,8 @@ object EntityResolution {
 
   /** Verified (id_a, id_b) self-match pairs of a (id, name) relation
     * under the conjunctive rule — the pipeline resolve() clusters and
-    * the incremental/streaming tiers reuse for their batch-internal
-    * pairs. */
-  private[graft] def matchPairs(recs: DataFrame, k: Int, tau: Double): DataFrame = {
+    * assignBatch reuses for its batch-internal pairs. */
+  private def matchPairs(recs: DataFrame, k: Int, tau: Double): DataFrame = {
     val trigramSets = recs
       .select(col("id").as("doc_id"), charTrigrams(col("name")).as("ts"))
       .filter(size(col("ts")) > 0)

@@ -43,9 +43,7 @@ object Lpa {
     * standing chain and the warm chain and hash-matches exactly (the
     * g13 PageRank-warm-start discipline). Unlike PageRank there is no
     * contraction guarantee — the claim is determinism + batch
-    * absorption, not convergence to the cold fixpoint; the community
-    * ledger ([[graft.streaming.EdgeLedger.community]]) is pinned to
-    * this exact fold. */
+    * absorption, not convergence to the cold fixpoint. */
   def warmStart(seedLabels: DataFrame, edges: DataFrame, rounds: Int): DataFrame =
     run(edges, Some(seedLabels.select(col("node").cast("long"),
       col("lbl").cast("long"))), rounds)

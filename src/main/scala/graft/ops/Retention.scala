@@ -8,13 +8,11 @@ import org.apache.spark.sql.functions._
   * later period's activity fraction reported per (cohort, offset) —
   * the weekly-retention triangle every growth dashboard draws.
   *
-  * Extracted from the o9_retention query body so the streaming twin
-  * ([[graft.streaming.StreamRetention]]) can converge against the same
-  * batch operator (the Funnel/StreamFunnel discipline). Semantics are
-  * all-integer up to the final ratio: floor(us/period) is exact for
-  * micros timestamps (≈1.7e15 stays far under 2^53, so the double
-  * quotient's floor can't misround), and the one double division is
-  * the reported rate itself.
+  * The o9_retention query body. Semantics are all-integer up to the
+  * final ratio: floor(us/period) is exact for micros timestamps
+  * (≈1.7e15 stays far under 2^53, so the double quotient's floor
+  * can't misround), and the one double division is the reported rate
+  * itself.
   *
   * Shape (unchanged from the query): one anchor aggregate (map-side
   * combined min per user), one (user, cohort, offset)-distinct
@@ -33,9 +31,7 @@ object Retention {
       .groupBy(user.as("user_id")).agg(min(tsUs).as("su"))
       .select(col("user_id"), floor(col("su") / periodUs).as("cw"))
 
-  /** Distinct (user_id, cw, off) activity facts, off in [0, maxOffset].
-    * This is the exactly-once fact set the streaming twin emits
-    * incrementally. */
+  /** Distinct (user_id, cw, off) activity facts, off in [0, maxOffset]. */
   def activity(events: DataFrame, user: Column, tsUs: Column, typeCol: Column,
       signupType: String, periodUs: Long, maxOffset: Int): DataFrame = {
     val ch = cohort(events, user, tsUs, typeCol, signupType, periodUs)

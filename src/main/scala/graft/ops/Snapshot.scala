@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * the join, so the full-outer shuffle carries two narrow columns, never
   * the document bodies; at 100 TB both snapshots hash map-side and the
   * join is one co-partitioned exchange per side on doc_id (or zero if
-  * both snapshots are bucketed by doc_id at rest — see ops/Bucketing).
+  * both snapshots are bucketed by doc_id at rest).
   */
 object Snapshot {
 

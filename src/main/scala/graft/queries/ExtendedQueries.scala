@@ -390,10 +390,8 @@ object ExtendedQueries {
   }
 
   private val t7Anomaly: QFn = (s, dir) => {
-    // Rolling z-score anomaly detection — body extracted to
-    // ops.Anomaly.rolling so the streaming twin (StreamAnomaly)
-    // converges against the same batch operator; semantics, decimal
-    // determinism, and shape documented there.
+    // Rolling z-score anomaly detection — semantics, decimal
+    // determinism, and shape documented in ops.Anomaly.rolling.
     graft.ops.Anomaly.rolling(Tables.events(s, dir), col("event_id"),
       col("user_id"), col("value"), Seq(col("event_id")))
   }
@@ -419,9 +417,8 @@ object ExtendedQueries {
       capacity = 1200)
 
   private val o9Retention: QFn = (s, dir) => {
-    // Cohort retention — body extracted to ops.Retention.matrix so the
-    // streaming twin (StreamRetention) converges against the same batch
-    // operator; semantics, shape, and output contract documented there.
+    // Cohort retention — semantics, shape, and output contract
+    // documented in ops.Retention.matrix.
     graft.ops.Retention.matrix(Tables.events(s, dir),
       col("user_id"), col("ts_us"), col("event_type"))
   }

@@ -15,9 +15,9 @@ import graft.ops.Drift
   * distributional, and it should fire at ingest time, not at the next
   * full-corpus profile.
   *
-  * State discipline: counts are ADDITIVE (the triangle ledger's kind
-  * — the standing distribution is a plain per-key SUM over epoch
-  * partitions), so there is no snapshot seeding; replay safety is the
+  * State discipline: counts are ADDITIVE (the standing distribution
+  * is a plain per-key SUM over epoch partitions), so there is no
+  * snapshot seeding; replay safety is the
   * usual pair of rules — every standing read bounded STRICTLY BELOW
   * the epoch's own batch_id, and both writes keyed on batch_id with
   * dynamic partition overwrite, so a replay (in or out of order)

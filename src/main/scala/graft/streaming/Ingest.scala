@@ -5,30 +5,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Continuous corpus ingestion — the streaming twin of
-  * `Dedup.incrementalExact`. New documents arrive as a stream; each
-  * micro-batch drops docs already in the standing corpus (stream-static
-  * anti join against the content-hash index) and replays/dups within
-  * the stream itself (watermarked stateful dedup, state bounded by the
-  * watermark, not by stream length).
+/** Continuous near-dup corpus ingestion — the `ingest` command's
+  * engine and the streaming counterpart of `Dedup.incrementalMinhashPairs`.
+  * New documents arrive as a parquet file stream; [[startNearDupIngest]]
+  * runs [[processNearDupBatch]] once per micro-batch, keyed by the
+  * epoch id. A batch doc survives only if no smaller-id doc in the
+  * batch shares a MinHash band with it and no standing-corpus doc
+  * does (a probe of the standing band index). Optional gates ride in
+  * the same step: a linear quality classifier, benchmark
+  * decontamination, the CDC chunk gate ([[CdcGate]]) and the embedding
+  * gate ([[EmbedGate]]); a drift monitor ([[DriftIngest]]) can watch
+  * the raw batch first.
   *
-  * Scale: the static index side is a parquet table bucketed by hash —
-  * each micro-batch probes it with a hash-keyed join without rewriting
-  * or re-scanning the corpus; dedup state shards across executors via
-  * the state store. Downstream, the surviving docs append to the corpus
-  * AND its hash index (e.g. via `foreachBatch`), so the next batch's
-  * probe sees them.
+  * Scale: every standing index is epoch-partitioned parquet probed by
+  * an equi-join on its key, so per-batch work is O(batch) and the
+  * corpus is never re-scanned. Replays are idempotent: each sink is
+  * written with dynamic partition overwrite on `batch_id`
+  * ([[StandingStore.writePartition]]).
   */
 object Ingest {
-
-  def dedupedStream(newDocs: DataFrame, corpusHashes: DataFrame,
-      tsCol: String = "ingest_ts", watermark: String = "10 minutes"): DataFrame =
-    newDocs.withColumn("text_hash", md5(col("text")))
-      .withWatermark(tsCol, watermark)
-      .join(corpusHashes, Seq("text_hash"), "left_anti")
-      .dropDuplicatesWithinWatermark(Seq("text_hash"))
-
-  // ---- streaming NEAR-dup ingest ------------------------------------------
 
   /** Chunk-grain revision gate: probe/extend a standing CDC chunk-hash
     * index at `indexPath` (same epoch-partitioned idempotent layout as

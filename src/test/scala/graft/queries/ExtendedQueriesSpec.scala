@@ -135,6 +135,54 @@ class ExtendedQueriesSpec extends SparkSpec {
     assert(rest.nonEmpty)
   }
 
+  test("o9_retention: offset 0 holds the whole cohort; offsets and rates in range") {
+    // a user's signup event is itself activity at offset 0, so every
+    // cohort's offset-0 row counts the whole cohort
+    val rows = run("o9_retention").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val off = r.getAs[Long]("week_offset")
+      val rate = r.getAs[Double]("retention")
+      assert(off >= 0L && off <= 8L, s"week_offset $off out of [0, 8]")
+      assert(rate > 0.0 && rate <= 1.0, s"retention $rate out of (0, 1]")
+      if (off == 0L) {
+        assert(r.getAs[Long]("n_active") === r.getAs[Long]("n_cohort"))
+        assert(rate === 1.0)
+      }
+    }
+    val cohorts = rows.map(_.getAs[Long]("cohort_week")).toSet
+    assert(rows.filter(_.getAs[Long]("week_offset") == 0L)
+      .map(_.getAs[Long]("cohort_week")).toSet === cohorts)
+  }
+
+  test("t7_anomaly: n in [5, 20], mean = average of the user's prior <= 20 values") {
+    import org.apache.spark.sql.functions._
+    val res = run("t7_anomaly")
+    val bounds = res.agg(min("n"), max("n")).head()
+    assert(bounds.getLong(0) >= 5L && bounds.getLong(1) <= 20L)
+    // sample both sides of the trail cap: early rows and capped rows
+    val sample = res.orderBy(col("event_id")).limit(3).collect() ++
+      res.filter(col("n") === 20L).orderBy(col("event_id")).limit(3).collect()
+    assert(sample.exists(_.getAs[Long]("n") == 20L), "no row reached the trail cap")
+    val users = sample.map(_.getAs[Long]("user_id")).distinct
+    val history = graft.tables.Tables.events(spark, dir)
+      .filter(col("user_id").isin(users.toIndexedSeq: _*))
+      .select(col("user_id"), col("event_id"), col("value")).collect()
+      .groupBy(_.getLong(0)).view
+      .mapValues(_.map(e => (e.getLong(1), e.getDouble(2))).sortBy(_._1)).toMap
+    sample.foreach { r =>
+      val id = r.getAs[Long]("event_id")
+      val prior = history(r.getAs[Long]("user_id")).filter(_._1 < id).takeRight(20)
+      assert(r.getAs[Long]("n") === prior.length.toLong, s"event $id")
+      // the operator sums DECIMAL(18,2) values, then divides as double
+      val want = prior.map(e => BigDecimal(e._2).setScale(2,
+        BigDecimal.RoundingMode.HALF_UP)).sum.toDouble / prior.length
+      val got = r.getAs[Double]("mean")
+      assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)),
+        s"event $id: mean $got vs recomputed $want")
+    }
+  }
+
   test("LSH gate queries are non-vacuous at the gate SF (sf0.01)") {
     // Round-9 finding: at 16 sign bits both queries hash-matched the
     // oracle on ZERO rows — a green light that proved nothing. The

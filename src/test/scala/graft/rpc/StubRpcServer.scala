@@ -71,24 +71,26 @@ final class StubRpcServer(chainHeight: Long = Long.MaxValue, maxBatch: Int = Int
   def url: String = s"http://127.0.0.1:${server.getAddress.getPort}/"
   def stop(): Unit = server.stop(0)
 
+  /** A request counts as in flight from arrival until its answer is
+    * ready, and leaves the gauge BEFORE any response byte is written:
+    * a client that reads the answer and sends its next batch at once
+    * must never find the finished request still counted. */
   private def handle(exchange: HttpExchange): Unit = {
     val now = inFlight.incrementAndGet()
     maxConcurrentRequests.getAndUpdate(m => math.max(m, now))
-    try handleInner(exchange)
-    finally inFlight.decrementAndGet()
+    val (status, body) =
+      try answer(exchange)
+      finally inFlight.decrementAndGet()
+    respond(exchange, status, body)
   }
 
-  private def handleInner(exchange: HttpExchange): Unit = {
+  private def answer(exchange: HttpExchange): (Int, String) = {
     val requestNo = httpRequests.incrementAndGet()
     val body = new String(exchange.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    if (dead.get() || requestNo > dieAfterRequests.get()) {
-      respond(exchange, 500, "dead endpoint"); return
-    }
-    if (throttleNext.getAndUpdate(n => math.max(0, n - 1)) > 0) {
-      respond(exchange, 429, """{"error":"too many requests"}"""); return
-    }
-    val out = rpcPayload(JsonMethods.parse(body))
-    respond(exchange, 200, JsonMethods.compact(JsonMethods.render(out)))
+    if (dead.get() || requestNo > dieAfterRequests.get()) (500, "dead endpoint")
+    else if (throttleNext.getAndUpdate(n => math.max(0, n - 1)) > 0)
+      (429, """{"error":"too many requests"}""")
+    else (200, JsonMethods.compact(JsonMethods.render(rpcPayload(JsonMethods.parse(body)))))
   }
 
   /** Payload-level dispatch, shared with [[StubWsRpcServer]] so the ws
