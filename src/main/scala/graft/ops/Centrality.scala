@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * The engine is a MULTI-SOURCE LABELED BFS: [[Reachability.hops]]
   * merges seeds into one min-hop frontier, but centrality needs the
   * distance from EVERY seed separately, so the frontier/visited keys
-  * are (seed, id) PAIRS. Per hop: one equi-join of the pair frontier
+  * are (seed, id) PAIRS ([[pairHops]], also the exact all-pairs
+  * harness behind the x6/x7 sketch checks). Per hop: one equi-join of the pair frontier
   * against the edge relation + one anti-join against the visited pair
   * set, frontiers eagerly staged (the g6 lineage lesson, pair-keyed).
   * Work and state are O(seeds × reached) pairs — the seed cohort is
@@ -24,33 +25,32 @@ import org.apache.spark.sql.functions._
   */
 object Centrality {
 
+  /** The multi-source labeled BFS: (seed, id, hop) for every node within
+    * `maxHop` hops of each seed — the min hop from THAT seed, each seed
+    * at hop 0 of itself. `edges`: directed (src, dst); `seeds`: (id). */
+  def pairHops(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame = {
+    val first = Staging.freshCounted(
+      seeds.select(col("id").cast("long").as("seed"))
+        .distinct()
+        .select(col("seed"), col("seed").as("id"), lit(0L).as("hop")))
+    Staging.frontier(first, first._1, maxHop) { (h, frontier, visited) =>
+      edges
+        .join(frontier.select(col("seed"), col("id").as("src")), Seq("src"))
+        .select(col("seed"), col("dst").as("id")).distinct()
+        .join(visited.select(col("seed"), col("id")), Seq("seed", "id"), "left_anti")
+        .withColumn("hop", lit(h.toLong))
+    }(_.unionByName(_))
+  }
+
   /** (node_id, centrality_ppm, n_seeds_reaching) for every non-seed
     * node within `maxHop` of at least one seed — plus seed nodes when
     * another seed reaches them (self-distance contributes nothing).
     * `edges`: directed (src, dst); `seeds`: (id). */
   def harmonic(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame = {
     require(maxHop >= 1, "harmonic: maxHop >= 1")
-    // layer 0: each seed at distance 0 of itself
-    var (visited, fCount) = Staging.freshCounted(
-      seeds.select(col("id").cast("long").as("seed"))
-        .distinct()
-        .select(col("seed"), col("seed").as("id"), lit(0L).as("hop")))
-    var frontier = visited
-    var h = 1
-    while (h <= maxHop && fCount > 0L) {
-      val staged = Staging.freshCounted(edges
-        .join(frontier.select(col("seed"), col("id").as("src")), Seq("src"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(visited.select(col("seed"), col("id")), Seq("seed", "id"), "left_anti")
-        .withColumn("hop", lit(h.toLong)))
-      frontier = staged._1
-      fCount = staged._2
-      visited = visited.unionByName(frontier)
-      h += 1
-    }
     // per-seed contribution floor(1e6 / hop) in INTEGER division (the
     // uint256/PageRank discipline: no float ever faces the oracle)
-    visited.filter(col("hop") >= 1L)
+    pairHops(edges, seeds, maxHop).filter(col("hop") >= 1L)
       .groupBy(col("id"))
       .agg(sum(expr("1000000L div hop")).as("centrality_ppm"),
         count(lit(1)).as("n_seeds_reaching"))
@@ -91,22 +91,17 @@ object Centrality {
       .select(col("seed"), col("seed").as("id"), lit(1L).as("sigma"))
       .localCheckpoint(true)
     // forward: BFS layers with path counts; each layer staged — the
-    // backward pass re-reads every one of them
-    val layers = scala.collection.mutable.ArrayBuffer(l0)
-    var visited = l0.select(col("seed"), col("id"))
-    var lastCount = l0.count() // counts the staged seed layer (cheap)
-    var h = 1
-    while (h <= maxHop && lastCount > 0L) {
-      val (next, n) = Staging.freshCounted(e
-        .join(layers.last.select(col("seed"), col("id").as("src"), col("sigma")),
-          Seq("src"))
+    // backward pass re-reads every one of them. The seed layer's count
+    // is cheap: it reads the staged blocks.
+    val (_, layers) = Staging.frontier((l0, l0.count()),
+        (l0.select(col("seed"), col("id")), Vector(l0)), maxHop) {
+      case (_, layer, (visited, _)) => e
+        .join(layer.select(col("seed"), col("id").as("src"), col("sigma")), Seq("src"))
         .groupBy(col("seed"), col("dst").as("id")).agg(sum(col("sigma")).as("sigma"))
-        .join(visited, Seq("seed", "id"), "left_anti"))
-      lastCount = n
-      layers += next
-      visited = visited.unionByName(next.select(col("seed"), col("id")))
-        .localCheckpoint(true)
-      h += 1
+        .join(visited, Seq("seed", "id"), "left_anti")
+    } { case ((visited, layers), next) =>
+      (visited.unionByName(next.select(col("seed"), col("id"))).localCheckpoint(true),
+        layers :+ next)
     }
     // backward: deepest layer carries 0; each shallower layer sums its
     // successors' scaled dependencies

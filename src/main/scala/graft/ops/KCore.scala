@@ -35,35 +35,19 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Peel `edges0` (already staged, with its known edge count) to the
-    * k-core fixpoint; returns the surviving edge set, staged, WITH its
-    * count — the convergence probe rides the staging job
-    * (Staging.freshCounted: one driver job per round, not two), and
-    * callers that need the survivor count (coreness's level loop)
-    * read it instead of re-counting. Shared by [[core]] and
-    * [[coreness]]. */
-  private def peel(edges0: DataFrame, edges0Count: Long, k: Int,
-      maxRounds: Int): (DataFrame, Long) = {
-    var cur = edges0
-    var curEdges = edges0Count
-    var rounds = 0
-    var converged = curEdges == 0L
-    while (!converged) {
-      require(rounds < maxRounds,
-        s"k_core: no fixpoint after $maxRounds peel rounds ($curEdges edges live)")
-      val keep = cur.select(col("id_a").as("v"))
-        .unionByName(cur.select(col("id_b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-      val (next, nextEdges) = Staging.freshCounted(cur
-        .join(keep.select(col("v").as("ka")), col("id_a") === col("ka"), "left_semi")
-        .join(keep.select(col("v").as("kb")), col("id_b") === col("kb"), "left_semi"))
-      converged = nextEdges == curEdges || nextEdges == 0L
-      cur = next
-      curEdges = nextEdges
-      rounds += 1
-    }
-    (cur, curEdges)
+  /** One peel round of the [[Staging.peel]] loop: keep the edges of
+    * `cur` whose endpoints both have degree >= k in `cur`, or are in
+    * the protected node set `prot` (v). Shared by [[core]],
+    * [[coreness]] and [[refreshCore]]. */
+  private def peelRound(k: Int, prot: Option[DataFrame])(cur: DataFrame): DataFrame = {
+    val deg = cur.select(col("id_a").as("v"))
+      .unionByName(cur.select(col("id_b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+    val keep = prot.fold(deg)(deg.select(col("v")).unionByName(_).distinct())
+    cur
+      .join(keep.select(col("v").as("ka")), col("id_a") === col("ka"), "left_semi")
+      .join(keep.select(col("v").as("kb")), col("id_b") === col("kb"), "left_semi")
   }
 
   /** Nodes of the k-core of `edges` with their in-core degrees.
@@ -71,8 +55,9 @@ object KCore {
   def core(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, "k_core: k >= 1")
     require(maxRounds >= 1, "k_core: maxRounds >= 1")
-    val (e0, n0) = Staging.freshCounted(edges.select(col("id_a"), col("id_b")))
-    val (cur, _) = peel(e0, n0, k, maxRounds)
+    val (cur, _) = Staging.peel(
+      Staging.freshCounted(edges.select(col("id_a"), col("id_b"))),
+      maxRounds, "k_core")(peelRound(k, None))
     cur.select(col("id_a").as("node_id"))
       .unionByName(cur.select(col("id_b").as("node_id")))
       .groupBy(col("node_id")).agg(count(lit(1)).as("core_deg"))
@@ -115,31 +100,13 @@ object KCore {
       .localCheckpoint(true)
     val coreE = flagged.filter(col("fa").isNotNull && col("fb").isNotNull)
       .select(col("id_a"), col("id_b"))
-    var (cur, curEdges) = Staging.freshCounted(
-      flagged.filter(col("fa").isNull || col("fb").isNull)
-        .select(col("id_a"), col("id_b")))
-    var rounds = 0
-    var converged = curEdges == 0L
-    while (!converged) {
-      require(rounds < maxRounds,
-        s"k_core refresh: no fixpoint after $maxRounds peel rounds ($curEdges edges live)")
-      // degree over ACTIVE edges only is the full degree for every
-      // unprotected node (all its edges are active); protected nodes
-      // survive regardless, so their undercount is harmless
-      val keep = cur.select(col("id_a").as("v"))
-        .unionByName(cur.select(col("id_b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("v"))
-        .unionByName(prot).distinct()
-      val (next, nextEdges) = Staging.freshCounted(cur
-        .join(keep.select(col("v").as("ka")), col("id_a") === col("ka"), "left_semi")
-        .join(keep.select(col("v").as("kb")), col("id_b") === col("kb"), "left_semi"))
-      converged = nextEdges == curEdges || nextEdges == 0L
-      cur = next
-      curEdges = nextEdges
-      rounds += 1
-    }
+    // degree over ACTIVE edges only is the full degree for every
+    // unprotected node (all its edges are active); protected nodes
+    // survive regardless, so their undercount is harmless
+    val (cur, _) = Staging.peel(
+      Staging.freshCounted(flagged.filter(col("fa").isNull || col("fb").isNull)
+        .select(col("id_a"), col("id_b"))),
+      maxRounds, "k_core refresh")(peelRound(k, Some(prot)))
     val coreEdges = coreE.unionByName(cur)
     coreEdges.select(col("id_a").as("node_id"))
       .unionByName(coreEdges.select(col("id_b").as("node_id")))
@@ -169,20 +136,19 @@ object KCore {
     def nodesOf(e: DataFrame) =
       e.select(col("id_a").as("v")).unionByName(e.select(col("id_b").as("v")))
         .distinct()
-    var (cur, curEdges) = Staging.freshCounted(
-      edges.select(col("id_a"), col("id_b")))
-    var levels = List.empty[DataFrame]
-    if (curEdges > 0) levels ::= nodesOf(cur) // k = 1: every node with an edge
-    var k = 2
-    while (curEdges > 0) {
-      require(k <= maxK,
-        s"coreness: ${k}-core still non-empty past maxK=$maxK ($curEdges edges live)")
-      val peeled = peel(cur, curEdges, k, maxRounds)
-      cur = peeled._1
-      curEdges = peeled._2
-      if (curEdges > 0) levels ::= nodesOf(cur)
-      k += 1
-    }
+    // level k peels the staged (k-1)-core; `levels` holds the node set
+    // of every non-empty core, deepest first (the 1-core is every node
+    // with an edge)
+    @annotation.tailrec
+    def level(k: Int, core: (DataFrame, Long), levels: List[DataFrame]): List[DataFrame] =
+      if (core._2 == 0L) levels
+      else {
+        val withCore = nodesOf(core._1) :: levels
+        require(k <= maxK,
+          s"coreness: ${k}-core still non-empty past maxK=$maxK (${core._2} edges live)")
+        level(k + 1, Staging.peel(core, maxRounds, "k_core")(peelRound(k, None)), withCore)
+      }
+    val levels = level(2, Staging.freshCounted(edges.select(col("id_a"), col("id_b"))), Nil)
     if (levels.isEmpty)
       edges.sparkSession.emptyDataFrame
         .select(lit(0L).as("node_id"), lit(0L).as("coreness")).limit(0)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * closed into triangles, which is what separates a genuine community
   * nucleus from a hub-and-spoke star.
   *
-  * Per round (the [[KCore.peel]] discipline, lifted from node degrees
+  * Per round (the [[KCore]] peel, lifted from node degrees
   * to edge supports):
   *  - triangles enumerate by DEGREE-ORDERED orientation exactly like
   *    [[Triangles.perNodeCounts]] (each triangle found once at its
@@ -50,57 +50,26 @@ object KTruss {
   def truss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 3, "k_truss: k >= 3 (the 2-truss is the whole graph)")
     require(maxRounds >= 1, "k_truss: maxRounds >= 1")
-    var (cur, curEdges) = Staging.freshCounted(
-      orient(edges.select(col("id_a"), col("id_b"))))
-    var rounds = 0
-    var result: DataFrame = null
-    while (result == null) {
-      require(rounds < maxRounds,
-        s"k_truss: no fixpoint after $maxRounds peel rounds ($curEdges edges live)")
-      val sup = supportOriented(cur)
-      // staged BEFORE the convergence count (r18, §2.6): the old shape
-      // counted the unstaged join (one full support computation), then
-      // checkpointed the surviving projection (a SECOND full support
-      // computation) — every non-final round ran its wedge join twice.
-      // freshCounted materializes once and the count rides that job;
-      // the next round's carrier is a projection over the staged leaf.
-      val (next, nextEdges) = Staging.freshCounted(
-        cur.join(sup, Seq("id_a", "id_b"))
-          .filter(col("support") >= k - 2))
-      if (nextEdges == curEdges || nextEdges == 0L) result = next
-      else {
-        cur = next.select(col("src"), col("dst"), col("rkdst"),
-          col("id_a"), col("id_b"))
-        curEdges = nextEdges
-        rounds += 1
-      }
+    // the carrier is the oriented edge set plus each edge's support in
+    // the previous round (0 before the first: an edge set that is empty
+    // from the start returns it as is). Each round's support join is
+    // staged BEFORE the convergence count (r18, §2.6): counting the
+    // unstaged join and then checkpointing its projection ran every
+    // round's wedge join twice; the next round's oriented edges are a
+    // projection over the staged leaf.
+    val (o, n) = Staging.freshCounted(
+      Triangles.orient(edges.select(col("id_a"), col("id_b")), "k_truss"))
+    val (fix, _) = Staging.peel((o.withColumn("support", lit(0L)), n), maxRounds,
+        "k_truss") { cur =>
+      val e = cur.select(col("src"), col("dst"), col("rkdst"), col("id_a"), col("id_b"))
+      e.join(supportOriented(e), Seq("id_a", "id_b"))
+        .filter(col("support") >= k - 2)
     }
-    result.select(col("id_a"), col("id_b"), col("support"))
-  }
-
-  /** Degree-rank orientation of a canonical (id_a < id_b) edge list:
-    * (src, dst, rkdst, id_a, id_b) with src the rank-min endpoint —
-    * the [[support]] preamble factored out so peel loops pay it once. */
-  private def orient(e: DataFrame): DataFrame = {
-    val deg = e.select(explode(array(col("id_a"), col("id_b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val vOk = when(col("v") >= 0 && col("v") < lit(1L << 32), col("v"))
-      .otherwise(raise_error(concat(
-        lit("k_truss: node id out of [0, 2^32): "), col("v").cast("string"))))
-    val rk = deg.select(vOk.as("v"),
-      (col("d") * lit(1L << 32) + col("v")).as("rk"))
-    e
-      .join(broadcast(rk.select(col("v").as("id_a"), col("rk").as("rka"))), "id_a")
-      .join(broadcast(rk.select(col("v").as("id_b"), col("rk").as("rkb"))), "id_b")
-      .select(
-        when(col("rka") < col("rkb"), col("id_a")).otherwise(col("id_b")).as("src"),
-        when(col("rka") < col("rkb"), col("id_b")).otherwise(col("id_a")).as("dst"),
-        greatest(col("rka"), col("rkb")).as("rkdst"),
-        col("id_a"), col("id_b"))
+    fix.select(col("id_a"), col("id_b"), col("support"))
   }
 
   /** Per-edge triangle support within an already-oriented staged
-    * relation (the [[orient]] shape): wedge join at the rank-min
+    * relation (the [[Triangles.orient]] shape): wedge join at the rank-min
     * corner, closing-edge probe, one aggregate over the three
     * canonical projections. Edges in no triangle are ABSENT. */
   private def supportOriented(o: DataFrame): DataFrame = {
@@ -116,100 +85,6 @@ object KTruss {
       .unionByName(tri.select(least(col("v1"), col("v2")).as("id_a"),
         greatest(col("v1"), col("v2")).as("id_b")))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support"))
-  }
-
-  /** WEIGHTED truss peel — the support threshold lifted from triangle
-    * COUNTS to triangle WEIGHT MASS: each triangle contributes the MIN
-    * of its three edge weights (the bottleneck-tie convention — a
-    * triangle is only as strong as its weakest tie; the alternative Σ
-    * convention rewards one heavy edge in an otherwise weak triangle,
-    * which is exactly the hub-and-spoke artifact the truss family
-    * exists to exclude), and an edge survives while its weighted
-    * support Σ_{T∋e} min-weight(T), computed WITHIN the surviving
-    * subgraph, stays ≥ `minSupport`. Same confluent-peel argument as
-    * [[truss]] (weighted support only drops when edges leave), so the
-    * fixpoint is unique and DuckDB-oracle-able by unrolled rounds with
-    * headroom. Same degree-ordered triangle enumeration and per-round
-    * staging; the closing-edge probe is an inner join (not semi) so
-    * the third weight rides into the min.
-    *
-    * `edges`: (id_a < id_b, w) distinct with POSITIVE integer weights
-    * (enforced loudly — a zero/negative weight would make min-mass
-    * non-monotone under peeling). `minSupport` >= 1, so triangle-free
-    * edges always peel (the k >= 3 analogue). Returns
-    * (id_a, id_b, w, w_support). */
-  def trussWeighted(edges: DataFrame, minSupport: Long,
-      maxRounds: Int = 64): DataFrame = {
-    require(minSupport >= 1L, "k_truss weighted: minSupport >= 1")
-    require(maxRounds >= 1, "k_truss: maxRounds >= 1")
-    val e0 = edges.select(col("id_a"), col("id_b"), col("w").cast("long"))
-      .localCheckpoint(true)
-    require(e0.filter(col("w").isNull || col("w") <= 0L).isEmpty,
-      "k_truss weighted: edge weights must be positive and non-null")
-    // orientation hoisted out of the loop — the [[truss]] r17 argument
-    // verbatim (weights ride along; supports are orientation-free)
-    var (cur, curEdges) = Staging.freshCounted(orientWeighted(e0))
-    var rounds = 0
-    var result: DataFrame = null
-    while (result == null) {
-      require(rounds < maxRounds,
-        s"k_truss weighted: no fixpoint after $maxRounds peel rounds ($curEdges edges live)")
-      val sup = weightedSupportOriented(cur)
-      // staged before the convergence count — see [[truss]]: the old
-      // count-then-checkpoint pair ran each round's support join twice
-      val (next, nextEdges) = Staging.freshCounted(
-        cur.join(sup, Seq("id_a", "id_b"))
-          .filter(col("w_support") >= minSupport))
-      if (nextEdges == curEdges || nextEdges == 0L) result = next
-      else {
-        cur = next.select(col("src"), col("dst"), col("rkdst"), col("w"),
-          col("id_a"), col("id_b"))
-        curEdges = nextEdges
-        rounds += 1
-      }
-    }
-    result.select(col("id_a"), col("id_b"), col("w"), col("w_support"))
-  }
-
-  /** [[orient]] with the edge weight carried through. */
-  private def orientWeighted(e: DataFrame): DataFrame = {
-    val deg = e.select(explode(array(col("id_a"), col("id_b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val vOk = when(col("v") >= 0 && col("v") < lit(1L << 32), col("v"))
-      .otherwise(raise_error(concat(
-        lit("k_truss: node id out of [0, 2^32): "), col("v").cast("string"))))
-    val rk = deg.select(vOk.as("v"),
-      (col("d") * lit(1L << 32) + col("v")).as("rk"))
-    e
-      .join(broadcast(rk.select(col("v").as("id_a"), col("rk").as("rka"))), "id_a")
-      .join(broadcast(rk.select(col("v").as("id_b"), col("rk").as("rkb"))), "id_b")
-      .select(
-        when(col("rka") < col("rkb"), col("id_a")).otherwise(col("id_b")).as("src"),
-        when(col("rka") < col("rkb"), col("id_b")).otherwise(col("id_a")).as("dst"),
-        greatest(col("rka"), col("rkb")).as("rkdst"), col("w"),
-        col("id_a"), col("id_b"))
-  }
-
-  /** Per-edge weighted support within an already-oriented staged
-    * relation (the [[orientWeighted]] shape): the [[supportOriented]]
-    * enumeration with each triangle's min edge weight carried through
-    * the three canonical projections and SUMMED. */
-  private def weightedSupportOriented(o: DataFrame): DataFrame = {
-    val tri = o.as("e1").join(o.as("e2"),
-        col("e1.src") === col("e2.src") && col("e1.rkdst") < col("e2.rkdst"))
-      .select(col("e1.src").as("v0"), col("e1.dst").as("v1"), col("e2.dst").as("v2"),
-        col("e1.w").as("w1"), col("e2.w").as("w2"))
-      .join(o.select(col("src").as("v1"), col("dst").as("v2"),
-        col("w").as("w3")), Seq("v1", "v2"))
-      .select(col("v0"), col("v1"), col("v2"),
-        least(col("w1"), col("w2"), col("w3")).as("minw"))
-    tri.select(least(col("v0"), col("v1")).as("id_a"),
-        greatest(col("v0"), col("v1")).as("id_b"), col("minw"))
-      .unionByName(tri.select(least(col("v0"), col("v2")).as("id_a"),
-        greatest(col("v0"), col("v2")).as("id_b"), col("minw")))
-      .unionByName(tri.select(least(col("v1"), col("v2")).as("id_a"),
-        greatest(col("v1"), col("v2")).as("id_b"), col("minw")))
-      .groupBy(col("id_a"), col("id_b")).agg(sum(col("minw")).as("w_support"))
   }
 
   /** INCREMENTAL k-truss under insert-only edge arrival — the
@@ -241,31 +116,25 @@ object KTruss {
     require(maxRounds >= 1, "k_truss: maxRounds >= 1")
     val protectedE = standingTruss.select(col("id_a"), col("id_b"))
       .localCheckpoint(true)
-    var (active, activeEdges) = Staging.freshCounted(
-      mergedEdges.select(col("id_a"), col("id_b"))
-        .join(protectedE, Seq("id_a", "id_b"), "left_anti"))
-    var rounds = 0
-    var fixed = activeEdges == 0L
-    while (!fixed) {
-      require(rounds < maxRounds,
-        s"k_truss refresh: no fixpoint after $maxRounds rounds ($activeEdges active edges live)")
+    val (active, _) = Staging.peel(Staging.freshCounted(
+        mergedEdges.select(col("id_a"), col("id_b"))
+          .join(protectedE, Seq("id_a", "id_b"), "left_anti")),
+        maxRounds, "k_truss refresh") { active =>
       val cur = protectedE.unionByName(active).localCheckpoint(true)
       val keep = activeSupport(cur, active)
         .filter(col("support") >= k - 2)
         .select(col("id_a"), col("id_b"))
-      val (next, nextEdges) = Staging.freshCounted(
-        active.join(keep, Seq("id_a", "id_b"), "left_semi"))
-      fixed = nextEdges == activeEdges || nextEdges == 0L
-      active = next
-      activeEdges = nextEdges
-      rounds += 1
+      active.join(keep, Seq("id_a", "id_b"), "left_semi")
     }
     // final supports over the merged fixpoint: protected edges need
     // theirs refreshed too (new triangles may have raised them), so
     // one full support pass over the fixpoint edge set — the same
-    // one-shot cost truss() pays per round, paid once here
+    // one-shot cost truss() pays per round, paid once here. Edges in
+    // no triangle are absent from `sup`.
     val fix = protectedE.unionByName(active).localCheckpoint(true)
-    val sup = support(fix)
+    val sup = supportOriented(Triangles.orient(fix, "k_truss")
+      .select(col("src"), col("dst"), col("rkdst"))
+      .localCheckpoint(true)) // wedge sides + closing probe
     fix.join(sup, Seq("id_a", "id_b"), "left")
       .select(col("id_a"), col("id_b"),
         coalesce(col("support"), lit(0L)).as("support"))
@@ -320,44 +189,6 @@ object KTruss {
         .select(col("x").as("id_a"), col("z").as("id_b")))
       .unionByName(tri.filter(col("fyz") === 1)
         .select(col("y").as("id_a"), col("z").as("id_b")))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support"))
-  }
-
-  /** Per-edge triangle support within `e` (staged, a < b): degree-
-    * ordered orientation, wedge join at the rank-min corner, closing-
-    * edge probe, then one aggregate over the three canonical edge
-    * projections. Edges in no triangle are ABSENT (callers join
-    * inner — the k >= 3 contract makes that the filter they want). */
-  private def support(e: DataFrame): DataFrame = {
-    val deg = e.select(explode(array(col("id_a"), col("id_b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    // the Triangles packed-rank domain rule: only total for ids in
-    // [0, 2^32) — enforced loudly, map-side
-    val vOk = when(col("v") >= 0 && col("v") < lit(1L << 32), col("v"))
-      .otherwise(raise_error(concat(
-        lit("k_truss: node id out of [0, 2^32): "), col("v").cast("string"))))
-    val rk = deg.select(vOk.as("v"),
-      (col("d") * lit(1L << 32) + col("v")).as("rk"))
-    val oriented = e
-      .join(broadcast(rk.select(col("v").as("id_a"), col("rk").as("rka"))), "id_a")
-      .join(broadcast(rk.select(col("v").as("id_b"), col("rk").as("rkb"))), "id_b")
-      .select(
-        when(col("rka") < col("rkb"), col("id_a")).otherwise(col("id_b")).as("src"),
-        when(col("rka") < col("rkb"), col("id_b")).otherwise(col("id_a")).as("dst"),
-        greatest(col("rka"), col("rkb")).as("rkdst"))
-      .localCheckpoint(true) // wedge sides + closing probe
-    val tri = oriented.as("e1").join(oriented.as("e2"),
-        col("e1.src") === col("e2.src") && col("e1.rkdst") < col("e2.rkdst"))
-      .select(col("e1.src").as("v0"), col("e1.dst").as("v1"), col("e2.dst").as("v2"))
-      .join(oriented.select(col("src").as("v1"), col("dst").as("v2")),
-        Seq("v1", "v2"), "left_semi")
-    // canonical (a < b) projections of each triangle's three edges
-    tri.select(least(col("v0"), col("v1")).as("id_a"),
-        greatest(col("v0"), col("v1")).as("id_b"))
-      .unionByName(tri.select(least(col("v0"), col("v2")).as("id_a"),
-        greatest(col("v0"), col("v2")).as("id_b")))
-      .unionByName(tri.select(least(col("v1"), col("v2")).as("id_a"),
-        greatest(col("v1"), col("v2")).as("id_b")))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("support"))
   }
 }

@@ -334,15 +334,6 @@ object Pq {
     Similarity.topK(scored, k)
   }
 
-  /** One-shot train→encode→search, the fixture/bench shape: every
-    * `queryStride`-th vector queries the whole corpus. */
-  def pqTopK(embeddings: DataFrame, k: Int = 3, queryStride: Int = 100,
-      m: Int = 8, codes: Int = 16, iters: Int = 2, dims: Int = 64): DataFrame = {
-    val books = trainCodebooks(embeddings, m, codes, iters, dims)
-    adcTopK(embeddings, embeddings.filter(col("vec_id") % queryStride === 0),
-      k, books, m, dims, codes)
-  }
-
   // ---- residual IVFADC (the original Jégou formulation) --------------------
 
   /** Driver-held coarse centroids as (cell → cv) structures for the

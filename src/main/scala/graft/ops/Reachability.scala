@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Hop-bounded reachability (min-hop BFS) and its INCREMENTAL
@@ -41,28 +41,33 @@ object Reachability {
     * [0, maxHop] — one row per reachable node, seeds at 0. */
   def hops(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame = {
     require(maxHop >= 0, "reachability: maxHop >= 0")
-    // only the frontiers are checkpointed (they nest hop over hop —
-    // the g6 lineage lesson); the visited set is a UNION of already-
-    // staged leaves, so it needs no checkpoint job of its own. The
-    // emptiness probe rides the checkpoint job (Staging.freshCounted):
-    // one driver job per hop, not two (§2.6).
-    var (visited, fCount) = Staging.freshCounted(
+    // the visited set is a UNION of already-staged leaves, so it needs
+    // no checkpoint job of its own
+    val first = Staging.freshCounted(
       seeds.select(col("id")).distinct().withColumn("hop", lit(0L)))
-    var frontier = visited
-    var h = 1
-    while (h <= maxHop && fCount > 0L) {
-      val staged = Staging.freshCounted(edges
+    Staging.frontier(first, first._1, maxHop) { (h, frontier, visited) =>
+      edges
         .join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
-        .withColumn("hop", lit(h.toLong)))
-      frontier = staged._1
-      fCount = staged._2
-      visited = visited.unionByName(frontier)
-      h += 1
-    }
-    visited
+        .withColumn("hop", lit(h.toLong))
+    }(_.unionByName(_))
   }
+
+  /** The strict-improvement probe of the improvement frontiers: per
+    * node `key` of `offers`, the min `cand`, kept where it beats the
+    * best known value (`unreached` where none). `best`: (id, <value>).
+    * Returns (id, <value>). */
+  private def improved(offers: DataFrame, key: String, cand: Column,
+      best: DataFrame, value: String, unreached: Long): DataFrame = offers
+    .groupBy(col(key)).agg(min(cand).as("cand"))
+    .join(best.select(col("id").as(key), col(value).as("known")), Seq(key), "left")
+    .filter(col("cand") < coalesce(col("known"), lit(unreached)))
+    .select(col(key).as("id"), col("cand").as(value))
+
+  /** best ∪ improvements, min per node. */
+  private def minMerge(value: String)(best: DataFrame, f: DataFrame): DataFrame =
+    best.unionByName(f).groupBy(col("id")).agg(min(col(value)).as(value))
 
   /** Hop-bounded WEIGHTED shortest distances (SSSP) from `seeds`:
     * dist(v) = min total weight over walks of at most `maxHop` edges
@@ -92,25 +97,13 @@ object Reachability {
     // relaxation candidates instead of failing loudly
     require(e.filter(col("w").isNull || col("w") <= 0L).isEmpty,
       "weighted distances: edge weights must be positive and non-null")
-    var (best, fCount) = Staging.freshCounted(
+    val first = Staging.freshCounted(
       seeds.select(col("id").cast("long").as("id")).distinct()
         .withColumn("dist", lit(0L)))
-    var frontier = best
-    var h = 1
-    while (h <= maxHop && fCount > 0L) {
-      val staged = Staging.freshCounted(e
-        .join(frontier.select(col("id").as("src"), col("dist").as("sdist")), Seq("src"))
-        .groupBy(col("dst")).agg(min(col("sdist") + col("w")).as("cand"))
-        .join(best.select(col("id").as("dst"), col("dist").as("known")), Seq("dst"), "left")
-        .filter(col("cand") < coalesce(col("known"), lit(Long.MaxValue)))
-        .select(col("dst").as("id"), col("cand").as("dist")))
-      frontier = staged._1
-      fCount = staged._2
-      best = best.unionByName(frontier)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-      h += 1
-    }
-    best
+    Staging.frontier(first, first._1, maxHop) { (_, frontier, best) =>
+      improved(e.join(frontier.select(col("id").as("src"), col("dist").as("sdist")), Seq("src")),
+        "dst", col("sdist") + col("w"), best, "dist", Long.MaxValue)
+    }(minMerge("dist"))
   }
 
   /** Hop-bounded TEMPORAL earliest-arrival reachability (Wu et al.
@@ -136,26 +129,15 @@ object Reachability {
     require(maxHop >= 0, "reachability: maxHop >= 0")
     val e = edges.select(col("src"), col("dst"), col("t").cast("long"))
       .localCheckpoint(true)
-    var (best, fCount) = Staging.freshCounted(
+    val first = Staging.freshCounted(
       seeds.select(col("id").cast("long").as("id")).distinct()
         .withColumn("arr", lit(0L)))
-    var frontier = best
-    var h = 1
-    while (h <= maxHop && fCount > 0L) {
-      val staged = Staging.freshCounted(e
+    Staging.frontier(first, first._1, maxHop) { (_, frontier, best) =>
+      improved(e
         .join(frontier.select(col("id").as("src"), col("arr").as("sarr")), Seq("src"))
-        .filter(col("t") >= col("sarr"))
-        .groupBy(col("dst")).agg(min(col("t")).as("cand"))
-        .join(best.select(col("id").as("dst"), col("arr").as("known")), Seq("dst"), "left")
-        .filter(col("cand") < coalesce(col("known"), lit(Long.MaxValue)))
-        .select(col("dst").as("id"), col("cand").as("arr")))
-      frontier = staged._1
-      fCount = staged._2
-      best = best.unionByName(frontier)
-        .groupBy(col("id")).agg(min(col("arr")).as("arr"))
-      h += 1
-    }
-    best
+        .filter(col("t") >= col("sarr")),
+        "dst", col("t"), best, "arr", Long.MaxValue)
+    }(minMerge("arr"))
   }
 
   /** Refreshed min-hop labels after `batchEdges` land on the graph
@@ -168,44 +150,28 @@ object Reachability {
   def refreshHops(standing: DataFrame, mergedEdges: DataFrame,
       batchEdges: DataFrame, maxHop: Int): DataFrame = {
     require(maxHop >= 0, "reachability: maxHop >= 0")
-    val sentinel = maxHop.toLong + 1L // "unreached" for the strict compare
-    def better(cands: DataFrame, best: DataFrame): DataFrame = cands
-      .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-      .join(best.select(col("id"), col("hop").as("known")), Seq("id"), "left")
-      .filter(col("cand") < coalesce(col("known"), lit(sentinel)))
-      .select(col("id"), col("cand").as("hop"))
-
+    val unreached = maxHop.toLong + 1L
+    def offers(e: DataFrame, from: DataFrame): DataFrame = e
+      .join(from.select(col("id").as("src"), col("hop").as("shop")), Seq("src"))
+      .select(col("dst").as("id"), (col("shop") + 1L).as("cand"))
+      .filter(col("cand") <= maxHop.toLong)
     // only the frontiers are checkpointed; the best-known relation
     // nests at most maxHop union/min layers over staged leaves
     // (standing + each round's frontier) — bounded, skinny, and
     // cheaper than paying a checkpoint barrier per round
-    var best = standing.select(col("id"), col("hop"))
+    val standingHops = standing.select(col("id"), col("hop"))
     // candidate improvements seeded by the batch edges alone: a batch
     // edge from a labeled source offers src.hop + 1 to its target
-    var (frontier, fCount) = Staging.freshCounted(better(
-      batchEdges
-        .join(best.select(col("id").as("src"), col("hop").as("shop")), Seq("src"))
-        .select(col("dst").as("id"), (col("shop") + 1L).as("cand"))
-        .filter(col("cand") <= maxHop.toLong),
-      best))
+    val first = Staging.freshCounted(improved(
+      offers(batchEdges, standingHops), "id", col("cand"), standingHops, "hop", unreached))
     // relax through the merged graph; value-k improvements only spawn
-    // value-(k+1) ones, values live in [1, maxHop] -> maxHop rounds
-    var r = 1
-    while (r <= maxHop && fCount > 0L) {
-      best = best.unionByName(frontier)
-        .groupBy(col("id")).agg(min(col("hop")).as("hop"))
-      val staged = Staging.freshCounted(better(
-        mergedEdges
-          .join(frontier.select(col("id").as("src"), col("hop").as("shop")), Seq("src"))
-          .select(col("dst").as("id"), (col("shop") + 1L).as("cand"))
-          .filter(col("cand") <= maxHop.toLong),
-        best))
-      frontier = staged._1
-      fCount = staged._2
-      r += 1
-    }
-    best.unionByName(frontier)
-      .groupBy(col("id")).agg(min(col("hop")).as("hop"))
+    // value-(k+1) ones, values live in [1, maxHop] -> maxHop rounds.
+    // The best-known labels start as min(standing ∪ first frontier),
+    // the labels round 1 improves on.
+    Staging.frontier(first, minMerge("hop")(standingHops, first._1), maxHop) {
+      (_, frontier, best) =>
+        improved(offers(mergedEdges, frontier), "id", col("cand"), best, "hop", unreached)
+    }(minMerge("hop"))
       .join(standing.select(col("id"), col("hop").as("hop_prev")), Seq("id"), "left")
       .select(col("id"), col("hop"), col("hop_prev"))
   }

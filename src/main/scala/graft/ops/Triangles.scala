@@ -44,27 +44,9 @@ object Triangles {
     * violations are the caller's to clean, as in Dedup CC). */
   def perNodeCounts(edges: DataFrame,
       broadcastEdgeLimit: Long = 4L << 20): DataFrame = {
-    val e = edges.select(col("id_a").cast("long").as("a"),
-      col("id_b").cast("long").as("b"))
-    val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    // rk packs (deg, id) into one sortable long, which is only a total
-    // order when 0 <= id < 2^32 — outside that domain collisions /
-    // inversions would silently mis-orient edges (double- or zero-
-    // counted triangles). Enforce the documented domain loudly, map-
-    // side, on the already-distinct node relation.
-    val vOk = when(col("v") >= 0 && col("v") < lit(1L << 32), col("v"))
-      .otherwise(raise_error(concat(
-        lit("triangles: node id out of [0, 2^32): "), col("v").cast("string"))))
-    val rk = deg.select(vOk.as("v"),
-      (col("d") * lit(1L << 32) + col("v")).as("rk"))
-    val oriented = e
-      .join(broadcast(rk.select(col("v").as("a"), col("rk").as("rka"))), "a")
-      .join(broadcast(rk.select(col("v").as("b"), col("rk").as("rkb"))), "b")
-      .select(
-        when(col("rka") < col("rkb"), col("a")).otherwise(col("b")).as("src"),
-        when(col("rka") < col("rkb"), col("b")).otherwise(col("a")).as("dst"),
-        greatest(col("rka"), col("rkb")).as("rkdst"))
+    val oriented = orient(edges.select(col("id_a").cast("long").as("id_a"),
+        col("id_b").cast("long").as("id_b")), "triangles")
+      .select(col("src"), col("dst"), col("rkdst"))
       .localCheckpoint() // skinny, multiply consumed; count() is free on the blocks
     val tri =
       if (oriented.count() <= broadcastEdgeLimit) {
@@ -86,6 +68,32 @@ object Triangles {
       }
     tri.select(explode(array(col("v0"), col("v1"), col("v2"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+  }
+
+  /** Degree-rank orientation of a canonical (id_a < id_b) edge list:
+    * (src, dst, rkdst, id_a, id_b), src the rank-min endpoint and rkdst
+    * the rank of dst. Shared with [[KTruss]]; `op` prefixes the domain
+    * error. rk packs (deg, id) into one sortable long, which is only a
+    * total order when 0 <= id < 2^32 — outside that domain collisions /
+    * inversions would silently mis-orient edges (double- or zero-
+    * counted triangles). The domain is enforced loudly, map-side, on
+    * the already-distinct node relation. */
+  private[ops] def orient(e: DataFrame, op: String): DataFrame = {
+    val deg = e.select(explode(array(col("id_a"), col("id_b"))).as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("d"))
+    val vOk = when(col("v") >= 0 && col("v") < lit(1L << 32), col("v"))
+      .otherwise(raise_error(concat(
+        lit(s"$op: node id out of [0, 2^32): "), col("v").cast("string"))))
+    val rk = deg.select(vOk.as("v"),
+      (col("d") * lit(1L << 32) + col("v")).as("rk"))
+    e
+      .join(broadcast(rk.select(col("v").as("id_a"), col("rk").as("rka"))), "id_a")
+      .join(broadcast(rk.select(col("v").as("id_b"), col("rk").as("rkb"))), "id_b")
+      .select(
+        when(col("rka") < col("rkb"), col("id_a")).otherwise(col("id_b")).as("src"),
+        when(col("rka") < col("rkb"), col("id_b")).otherwise(col("id_a")).as("dst"),
+        greatest(col("rka"), col("rkb")).as("rkdst"),
+        col("id_a"), col("id_b"))
   }
 
   /** Incremental tier: per-node counts of the NEW triangles a batch of

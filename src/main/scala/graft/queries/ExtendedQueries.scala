@@ -918,6 +918,21 @@ object ExtendedQueries {
       .select(col("part_id"), col("community"), col("n_members"))
   }
 
+  /** The exact side of x6/x7: an all-pairs BFS with every node of
+    * `edges` (directed, both directions listed) as its own seed —
+    * [[graft.ops.Centrality.pairHops]] — read as (hop, exact_pairs),
+    * the ordered pairs within `hop` hops for hops 1..maxHop, self pairs
+    * included. Quadratic by design: the truth harness the sketches are
+    * checked against at small scale. */
+  private def exactPairCounts(edges: org.apache.spark.sql.DataFrame,
+      maxHop: Int): org.apache.spark.sql.DataFrame = {
+    val pairs = graft.ops.Centrality.pairHops(edges, edges.select(col("src").as("id")), maxHop)
+    (1 to maxHop).map { h =>
+      pairs.filter(col("hop") <= h).agg(count(lit(1)).as("exact_pairs"))
+        .select(lit(h.toLong).as("hop"), col("exact_pairs"))
+    }.reduce(_.unionByName(_))
+  }
+
   private val x6Anf: QFn = (s, dir) => {
     // Approximate neighborhood function over the strong co-purchase
     // graph (ops.Anf — the HyperBall iteration: per-node HLL ball
@@ -936,19 +951,7 @@ object ExtendedQueries {
       .unionByName(strong.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
     val est = graft.ops.Anf.neighborhoodFunction(edges, maxHop = 3)
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var visited = nodes.select(col("node").as("seed"), col("node").as("id"))
-      .localCheckpoint(true)
-    val exact = (1 to 3).map { h =>
-      val next = edges
-        .join(visited.select(col("seed"), col("id").as("src")), Seq("src"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(visited, Seq("seed", "id"), "left_anti")
-      visited = visited.unionByName(next).localCheckpoint(true)
-      visited.agg(count(lit(1)).as("exact_pairs"))
-        .select(lit(h.toLong).as("hop"), col("exact_pairs"))
-    }.reduce(_.unionByName(_))
-    exact.join(est, Seq("hop"))
+    exactPairCounts(edges, maxHop = 3).join(est, Seq("hop"))
       .select(col("hop"), col("exact_pairs"),
         (abs(col("est_pairs").cast("double") - col("exact_pairs").cast("double"))
           <= greatest(col("exact_pairs").cast("double") * lit(0.10), lit(50.0)))
@@ -1056,18 +1059,7 @@ object ExtendedQueries {
       .localCheckpoint(true)
     val est = graft.ops.Anf.neighborhoodFunction(edges, maxHop = 3)
       .localCheckpoint(true) // three consumers: join, plateau, eff scan
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var visited = nodes.select(col("node").as("seed"), col("node").as("id"))
-      .localCheckpoint(true)
-    val exact = (1 to 3).map { h =>
-      val next = edges
-        .join(visited.select(col("seed"), col("id").as("src")), Seq("src"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(visited, Seq("seed", "id"), "left_anti")
-      visited = visited.unionByName(next).localCheckpoint(true)
-      visited.agg(count(lit(1)).as("exact_pairs"))
-        .select(lit(h.toLong).as("hop"), col("exact_pairs"))
-    }.reduce(_.unionByName(_)).localCheckpoint(true)
+    val exact = exactPairCounts(edges, maxHop = 3).localCheckpoint(true)
     val exactH = exact.filter(col("hop") === 3)
       .select(col("exact_pairs").as("ep_h"))
     val estH = est.filter(col("hop") === 3).select(col("est_pairs").as("est_h"))

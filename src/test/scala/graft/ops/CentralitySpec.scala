@@ -137,4 +137,15 @@ class CentralitySpec extends SparkSpec {
     assert(runBetween(diamond, Seq(0L), maxHop = 2) ===
       Map(1L -> (500000L, 1L), 2L -> (500000L, 1L), 3L -> (0L, 1L)))
   }
+
+  test("an empty seed set reaches nothing: harmonic and betweenness return empty relations") {
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
+    val none = Seq.empty[Long].toDF("id")
+    val h = Centrality.harmonic(e, none, maxHop = 3)
+    assert(h.columns.toSeq === Seq("node_id", "centrality_ppm", "n_seeds_reaching"))
+    assert(h.collect().isEmpty)
+    val b = Centrality.betweenness(e, none, maxHop = 3)
+    assert(b.columns.toSeq === Seq("node_id", "betweenness_ppm", "n_seeds_reaching"))
+    assert(b.collect().isEmpty)
+  }
 }

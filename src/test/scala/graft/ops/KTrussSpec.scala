@@ -117,4 +117,38 @@ class KTrussSpec extends SparkSpec {
       KTruss.truss(chainTri.toDF("id_a", "id_b"), k = 4, maxRounds = 1))
     assert(e2.getMessage.contains("fixpoint"))
   }
+
+  test("empty edge sets: truss and refreshTruss return empty relations of the full shape") {
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val t = KTruss.truss(none, k = 3)
+    assert(t.columns.toSeq === Seq("id_a", "id_b", "support"))
+    assert(t.collect().isEmpty)
+    val r = KTruss.refreshTruss(t, none, k = 3)
+    assert(r.columns.toSeq === Seq("id_a", "id_b", "support", "support_prev"))
+    assert(r.collect().isEmpty)
+    // an empty standing truss: the refresh is the cold truss, every
+    // edge batch-promoted
+    val k4 = for (i <- 0L to 3L; j <- i + 1 to 3L) yield (i, j)
+    val got = KTruss.refreshTruss(t, (k4 :+ ((3L, 9L))).toDF("id_a", "id_b"), k = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), Option(r.get(3)))).toMap
+    assert(got === k4.map(_ -> ((2L, None))).toMap)
+  }
+
+  test("an id outside [0, 2^32) fails loudly instead of mis-orienting") {
+    // the shared degree-rank orientation packs deg*2^32 + id into one
+    // long; outside that domain ranks collide and supports go wrong
+    val big = 1L << 32
+    val bad = Seq((0L, 1L), (0L, big), (1L, big)).toDF("id_a", "id_b")
+    def loud(run: => Unit): Unit = {
+      val ex = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => Option(e.getMessage).getOrElse("")).toSeq
+      assert(msgs.exists(m => m.contains("2^32") && m.contains("k_truss")), msgs.mkString(" | "))
+    }
+    loud(KTruss.truss(bad, k = 3).collect())
+    // the refresh's final support pass orients the merged fixpoint
+    loud(KTruss.refreshTruss(KTruss.truss(Seq.empty[(Long, Long)].toDF("id_a", "id_b"), k = 3),
+      bad, k = 3).collect())
+  }
 }

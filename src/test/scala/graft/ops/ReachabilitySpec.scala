@@ -192,4 +192,35 @@ class ReachabilitySpec extends SparkSpec {
     assert(prevs(3L) === Some(3L), "shortcut keeps its old label in hop_prev")
     assert(prevs(4L).isEmpty && prevs(7L).isEmpty, "new nodes have NULL hop_prev")
   }
+
+  test("frontier edges: an empty seed set reaches nothing; maxHop = 0 keeps the seeds only") {
+    val all = undirected(seed = 5, n = 20, p = 0.2)
+    val corpus = all.filter { case (a, b) => (a + b) % 5 != 0 }
+    val batch = all.filter { case (a, b) => (a + b) % 5 == 0 }
+    val e = all.toDF("src", "dst")
+    val none = Seq.empty[Long].toDF("id")
+    val seeds = Seq(0L, 7L).toDF("id")
+    val atSeeds = Map(0L -> 0L, 7L -> 0L)
+    def labels(df: DataFrame, v: String) =
+      df.select(col("id"), col(v)).as[(Long, Long)].collect().toMap
+    val w = all.map { case (a, b) => (a, b, 1L + (a + b) % 3) }.toDF("src", "dst", "w")
+    val t = all.map { case (a, b) => (a, b, (a * b) % 11) }.toDF("src", "dst", "t")
+    for (maxHop <- Seq(0, 3)) {
+      assert(labels(Reachability.hops(e, none, maxHop), "hop").isEmpty, s"hops maxHop=$maxHop")
+      assert(labels(Reachability.weightedDistances(w, none, maxHop), "dist").isEmpty,
+        s"weightedDistances maxHop=$maxHop")
+      assert(labels(Reachability.earliestArrival(t, none, maxHop), "arr").isEmpty,
+        s"earliestArrival maxHop=$maxHop")
+      val standing = Reachability.hops(corpus.toDF("src", "dst"), none, maxHop)
+      assert(Reachability.refreshHops(standing, e, batch.toDF("src", "dst"), maxHop)
+        .collect().isEmpty, s"refreshHops maxHop=$maxHop")
+    }
+    assert(labels(Reachability.hops(e, seeds, 0), "hop") === atSeeds)
+    assert(labels(Reachability.weightedDistances(w, seeds, 0), "dist") === atSeeds)
+    assert(labels(Reachability.earliestArrival(t, seeds, 0), "arr") === atSeeds)
+    val standing0 = Reachability.hops(corpus.toDF("src", "dst"), seeds, 0)
+    val got0 = Reachability.refreshHops(standing0, e, batch.toDF("src", "dst"), 0)
+      .select(col("id"), col("hop"), col("hop_prev")).as[(Long, Long, Long)].collect()
+    assert(got0.toSet === Set((0L, 0L, 0L), (7L, 0L, 0L)))
+  }
 }

@@ -239,7 +239,17 @@ class JsonRpcUnitSpec extends AnyFunSuite {
       // the same code on the single ranged eth_getLogs call IS the shrink signal
       val logs = new RpcLogsFetcher(); logs.configure(opts)
       intercept[graft.sources.RangeTooLargeException] { logs.fetchLogs(0, 5).toList }
+      assert(handlerThreads(stub).nonEmpty, "the stub served requests on no named handler thread")
     } finally stub.stop()
+    // stop() ends the handler pool too: a stopped stub leaves no thread
+    assert(handlerThreads(stub).isEmpty,
+      s"threads of a stopped stub still alive: ${handlerThreads(stub).mkString(", ")}")
+  }
+
+  private def handlerThreads(stub: StubRpcServer): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(stub.threadPrefix)).map(_.getName)
   }
 
   test("parseTx tolerates a missing gasPrice (EIP-1559 type-2 transactions)") {

@@ -4,7 +4,7 @@ import java.io.OutputStream
 import java.math.BigInteger
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -62,14 +62,26 @@ final class StubRpcServer(chainHeight: Long = Long.MaxValue, maxBatch: Int = Int
   private val inFlight = new AtomicInteger(0)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  /** Name prefix of this stub's handler threads. */
+  val threadPrefix = s"stub-rpc-${StubRpcServer.instances.incrementAndGet()}-"
   // generously sized so the in-flight gauge measures CLIENT behavior,
   // not a server-side queue
-  server.setExecutor(Executors.newFixedThreadPool(64))
+  private val pool = Executors.newFixedThreadPool(64, new ThreadFactory {
+    private val n = new AtomicInteger(0)
+    def newThread(r: Runnable): Thread = new Thread(r, threadPrefix + n.incrementAndGet())
+  })
+  server.setExecutor(pool)
   server.createContext("/", (exchange: HttpExchange) => handle(exchange))
   server.start()
 
   def url: String = s"http://127.0.0.1:${server.getAddress.getPort}/"
-  def stop(): Unit = server.stop(0)
+
+  /** Stops the server and ends its handler threads. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdownNow()
+    pool.awaitTermination(10, TimeUnit.SECONDS)
+  }
 
   /** A request counts as in flight from arrival until its answer is
     * ready, and leaves the gauge BEFORE any response byte is written:
@@ -199,6 +211,8 @@ final class StubRpcServer(chainHeight: Long = Long.MaxValue, maxBatch: Int = Int
 }
 
 object StubRpcServer {
+  private val instances = new AtomicInteger(0)
+
   private def qty(n: Long): JString = JString("0x" + java.lang.Long.toHexString(n))
 
   /** tx hashes are hex64(n*10+i, 0x7a) = "0x7a" + 62 hex digits of
