@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.SinkUtils
 import graft.pipelines.{Crawl, Load, Prepare, VerifyPipeline}
 import graft.rpc.CallExecutor
-import graft.sources.{BlockDataFetcher, LogsFetcher, ReceiptDataFetcher}
+import graft.sources.{BlockDataFetcher, LogsFetcher, ReceiptDataFetcher, TypedRangeSource}
 
 /** Operator-facing command suite — the reference's `nft` click group
   * (`nft/bin/nft.py:89-133`) mapped onto the engine's pipeline objects,
@@ -328,6 +328,8 @@ object Main {
       val blockchain = opts.getOrElse("blockchain", "ethereum-mainnet")
       val w = wiring(opts)
       val numPartitions = intOpt(opts, "num-partitions", 4)
+      if (numPartitions < 1)
+        throw CliError(s"--num-partitions: must be at least 1, got $numPartitions")
 
       cmd match {
         case "crawl" =>
@@ -385,21 +387,19 @@ object Main {
               .map(_ + 1)
               .getOrElse(throw CliError(
                 "tail requires a seeded bookmark (run `seed`) or an explicit --start")))
-          val base0 = spark.readStream.format("receipts")
-            .option("start", start.toString)
-            .option("maxBlock", longOpt(opts, "max-block", Long.MaxValue).toString)
+          // --head-wait-ms: opt-in long-poll head (sub-interval latency)
+          val headWait = Seq("head-wait-ms" -> "headWaitMs", "head-probe-ms" -> "headProbeMs")
+            .collect { case (cli, opt) if opts.contains(cli) => opt -> longOpt(opts, cli, 0L).toString }
+          val receipts = spark.readStream.format("receipts")
             .option("blocksPerTrigger", intOpt(opts, "blocks-per-trigger", 64).toString)
             .option("trailBlocks", longOpt(opts, "trail-blocks", 0L).toString)
-            .option("numPartitions", numPartitions.toString)
-            .option("fetcher", w.receipts)
-          // --head-wait-ms: opt-in long-poll head (sub-interval latency)
-          val base = Seq("head-wait-ms" -> "headWaitMs", "head-probe-ms" -> "headProbeMs")
-            .foldLeft(base0) { case (r, (cli, opt)) =>
-              opts.get(cli).fold(r)(v => r.option(opt, longOpt(opts, cli, 0L).toString)) }
-          val receipts = w.options.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
+            .options(headWait.toMap)
+            .options(TypedRangeSource.readOptions(start, longOpt(opts, "max-block", Long.MaxValue),
+              numPartitions, w.receipts, w.options))
+            .load()
           val buckets = intOpt(opts, "buckets", 16)
           val compactEvery = intOpt(opts, "compact-every", 0)
-          if (compactEvery < 0) throw CliError("--compact-every: must be positive")
+          if (compactEvery < 0) throw CliError("--compact-every: must be non-negative")
           if (compactEvery > 0 && opts.getOrElse("merge-format", "bucket") != "log")
             throw CliError("--compact-every requires --merge-format log " +
               "(the bucket format already stores one row per key)")
@@ -500,12 +500,9 @@ object Main {
           val blockTimes = opts.get("block-time-cache") match {
             case Some(csv) => Load.readBlockTimeCsv(spark, csv)
             case None =>
-              val b = spark.read.format("blocks")
-                .option("start", creation.toString).option("maxBlock", end.toString)
-                .option("numPartitions", numPartitions.toString)
-                .option("fetcher", w.blocks)
-              w.options.foldLeft(b) { case (r, (k, v)) => r.option(k, v) }.load()
-                .select(col("number"), col("timestamp"))
+              spark.read.format("blocks")
+                .options(TypedRangeSource.readOptions(creation, end, numPartitions, w.blocks, w.options))
+                .load().select(col("number"), col("timestamp"))
           }
           val tables = Crawl.forceLoad(spark, collection, creation, end, blockTimes,
             receiptsFetcher = w.receipts, logsFetcher = w.logs, callExecutor = w.calls,
@@ -615,14 +612,9 @@ object Main {
               val dbColls = narrowed(table("collections"))
               val creationBlocks = dbColls.select(col("block_created")).distinct()
                 .limit(257).collect().map(_.getAs[Long]("block_created")).sorted
-              def src(fmt: String, fetcher: String, lo: Long, hi: Long,
-                  parts: Int) = {
-                val base = spark.read.format(fmt)
-                  .option("start", lo.toString).option("maxBlock", hi.toString)
-                  .option("numPartitions", parts.toString)
-                  .option("fetcher", fetcher)
-                w.options.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-              }
+              def src(fmt: String, fetcher: String, lo: Long, hi: Long, parts: Int) =
+                spark.read.format(fmt)
+                  .options(TypedRangeSource.readOptions(lo, hi, parts, fetcher, w.options)).load()
               // <= 256 creation blocks: fetch each block alone (tight
               // ranges when clustered, per-block unions when scattered);
               // an unbounded creation-block set keeps the probe checks

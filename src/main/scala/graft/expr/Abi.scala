@@ -175,9 +175,6 @@ object Abi {
   // the request TABLE (to, data) is derived columnar; only the
   // transport (an RPC foreachPartition sink) leaves the plan.
 
-  /** address column ("0x" + 40 hex) -> 64-hex head word. */
-  def addressWord(c: Column): Column = lpad(lower(substring(c, 3, 40)), 64, "0")
-
   /** non-negative long column -> 64-hex head word. */
   def uintWord(c: Column): Column = lpad(lower(hex(c)), 64, "0")
 

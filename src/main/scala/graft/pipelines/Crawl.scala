@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.ops.Lww
+import graft.sources.TypedRangeSource
 
 /** The crawl-shaped flagship pipeline (SURVEY.md §3.1 re-expressed as one
   * declarative DAG): scan -> topic filter (P2) -> payload decode (P3) ->
@@ -86,13 +87,9 @@ object Crawl {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       fetcherOptions: Map[String, String] = Map.empty,
       dataVersion: Int = 1): Map[String, DataFrame] = {
-    def src(fmt: String, fetcher: String) = {
-      val base = spark.read.format(fmt)
-        .option("start", startBlock.toString).option("maxBlock", maxBlock.toString)
-        .option("numPartitions", numPartitions.toString)
-        .option("fetcher", fetcher)
-      fetcherOptions.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-    }
+    def src(fmt: String, fetcher: String) = spark.read.format(fmt).options(
+      TypedRangeSource.readOptions(startBlock, maxBlock, numPartitions, fetcher, fetcherOptions))
+      .load()
     def staged(df: DataFrame, name: String): DataFrame = stageDir match {
       case Some(d) =>
         df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$d/$name")
@@ -158,13 +155,9 @@ object Crawl {
       numPartitions: Int = 4,
       fetcherOptions: Map[String, String] = Map.empty,
       dataVersion: Int = 1): Map[String, DataFrame] = {
-    def src(fmt: String, fetcher: String, start: Long, end: Long) = {
-      val base = spark.read.format(fmt)
-        .option("start", start.toString).option("maxBlock", end.toString)
-        .option("numPartitions", numPartitions.toString)
-        .option("fetcher", fetcher)
-      fetcherOptions.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-    }
+    def src(fmt: String, fetcher: String, start: Long, end: Long) = spark.read.format(fmt)
+      .options(TypedRangeSource.readOptions(start, end, numPartitions, fetcher, fetcherOptions))
+      .load()
     // the caller's block-time dim may span the WHOLE chain (the S8 CSV
     // cache) — every consumer here only needs [creationBlock, maxBlock),
     // so prune it up front: the predicate pushes into the CSV/blocks

@@ -539,11 +539,8 @@ object VerifyPipeline {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       db1155Tokens: Option[DataFrame] = None,
       verifyHeight: Option[Long] = None): DataFrame = {
-    val base = spark.read.format("logs")
-      .option("start", startBlock.toString).option("maxBlock", maxBlock.toString)
-      .option("numPartitions", numPartitions.toString)
-      .option("fetcher", logsFetcher)
-    val logs0 = fetcherOptions.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
+    val logs0 = spark.read.format("logs").options(graft.sources.TypedRangeSource.readOptions(
+      startBlock, maxBlock, numPartitions, logsFetcher, fetcherOptions)).load()
     val logs = collectionId.fold(logs0)(c => logs0.filter(col("address") === c))
     // Materialize the derived transfers ONCE: the transfers report and
     // the owners rollup both consume them, and without the checkpoint

@@ -35,9 +35,7 @@ object CallExecutor {
   val Simulated: String = classOf[SimulatedCallExecutor].getName
   val Rpc: String = classOf[RpcCallExecutor].getName
   def forName(className: String, options: Map[String, String] = Map.empty): CallExecutor =
-    ConfigurableFetcher(
-      Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[CallExecutor],
-      options)
+    ConfigurableFetcher.instantiate(className, options)
 }
 
 /** Deterministic simulated contract surface over the SimChain address

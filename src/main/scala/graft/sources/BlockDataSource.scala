@@ -1,24 +1,10 @@
 package graft.sources
 
-import java.util
-
 import graft.model.{EvmBlockWithTxs, EvmTransaction}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import scala.jdk.CollectionConverters._
-
-/** DataSourceV2 typed-block source: where [[BlockRangeSource]] produces
-  * the crawl DRIVE (block numbers), this source produces the block DATA
-  * — full typed blocks with nested transaction objects, the reference's
+/** DataSourceV2 typed-block source: full typed blocks with nested
+  * transaction objects, the reference's
   * `get_blocks(full_transactions=True)` inflation
   * (`evm/rpc.py:150-196`) as a native Spark connector. A user points
   * the engine at a chain by implementing [[BlockDataFetcher]] over
@@ -27,8 +13,8 @@ import scala.jdk.CollectionConverters._
   * rows this source emits. See [[ReceiptDataSource]] for the
   * receipts+logs twin.
   *
-  *  - same window planning as the drive source: `number` range
-  *    predicates and LIMIT narrow the planned window itself
+  *  - the shared block-keyed path ([[TypedRangeSource]]): `number`
+  *    range predicates and LIMIT narrow the planned window itself
   *    ([[BlockWindow]]), so a query for blocks [900, 950) of a
   *    billion-block chain fetches exactly that window;
   *  - column pruning: a projection that needs 2 of the 11 block fields
@@ -38,39 +24,27 @@ import scala.jdk.CollectionConverters._
   *    pruned columns;
   *  - per-partition adaptive fetch: window ÷10 shrink on
   *    [[RangeTooLargeException]], bounded exponential backoff on
-  *    [[ThrottledException]] — identical contract to the drive source
-  *    ([[AdaptiveRangeReader]]);
+  *    [[ThrottledException]] ([[AdaptiveRangeReader]]);
   *  - micro-batch stream: the tail loop over typed blocks
   *    (`nft/bin/tail.py:90-204`), head advancing `blocksPerTrigger` per
   *    poll minus `trailBlocks` of reorg lag.
   *
-  * Options: start, maxBlock, blocksPerTrigger, trailBlocks,
-  * numPartitions, fetcher, fetchChunk, throttleBaseMs, throttleCapMs,
-  * throttleMaxRetries.
   * Usage: spark.read.format("blocks").option(...).load()
   */
-class BlockDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "blocks"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BlockDataSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TypedRangeTable("blocks", BlockDataSource.Schema, "number",
-      BlockDataFetcher.Simulated, BlockDataReaderFactory.apply,
-      new CaseInsensitiveStringMap(properties))
-}
+class BlockDataSource extends TypedRangeProvider(BlockDataSource.Source)
 
 object BlockDataSource {
-  /** Schema derived from the typed entity, not hand-declared — the
-    * source and `Dataset[EvmBlockWithTxs]` users can never drift. */
-  val Schema: StructType = ExpressionEncoder[EvmBlockWithTxs]().schema
+  val Source: TypedRangeSource[EvmBlockWithTxs] = TypedRangeSource("blocks",
+    ExpressionEncoder[EvmBlockWithTxs](), "number", BlockDataFetcher.Simulated,
+    (c, o) => BlockDataFetcher.forName(c, o).fetchBlocks)
 }
 
 /** The seam where a real chain client plugs in: one call inflates the
   * typed blocks of the window [lo, hi), nested transactions included —
   * the reference's field-by-field RPC response conversion
   * (`evm/rpc.py:150-196`). Same executor-side instantiate-by-name and
-  * exception contract as [[BlockFetcher]]. */
+  * exception contract as the other fetcher seams
+  * ([[ConfigurableFetcher.instantiate]]). */
 trait BlockDataFetcher {
   def fetchBlocks(lo: Long, hi: Long): Iterator[EvmBlockWithTxs]
 }
@@ -153,177 +127,5 @@ object SimulatedBlockDataFetcher {
 object BlockDataFetcher {
   val Simulated: String = classOf[SimulatedBlockDataFetcher].getName
   def forName(className: String, options: Map[String, String] = Map.empty): BlockDataFetcher =
-    ConfigurableFetcher(
-      Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[BlockDataFetcher],
-      options)
-}
-
-// ---- generic typed-range plumbing (shared by blocks / receipts) ----------
-
-/** Table over a block-number-keyed typed source. `mkFactory` builds the
-  * per-source reader factory from (fetcher class, chunk, backoff,
-  * pruned schema) — the only piece that differs between sources.
-  * `oneRowPerBlock`: whether the source emits exactly one row per block
-  * in the window — the precondition for translating LIMIT n into
-  * "plan n blocks". Blocks qualify; receipts (0..k rows per block) must
-  * NOT narrow on limit or `limit(n)` could under-produce. */
-final class TypedRangeTable(tableName: String, tableSchema: StructType, pushCol: String,
-    defaultFetcher: String,
-    mkFactory: (String, Map[String, String], Long, BackoffPolicy, StructType) => PartitionReaderFactory,
-    options: CaseInsensitiveStringMap,
-    oneRowPerBlock: Boolean = true,
-    stringPushCols: Set[String] = Set.empty) extends Table with SupportsRead {
-  override def name(): String = tableName
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new CaseInsensitiveStringMap(
-      (options.asScala ++ caseInsensitiveOptions.asScala).asJava)
-    new TypedRangeScanBuilder(tableSchema, pushCol, defaultFetcher, mkFactory, merged,
-      oneRowPerBlock, stringPushCols)
-  }
-}
-
-final class TypedRangeScanBuilder(tableSchema: StructType, pushCol: String,
-    defaultFetcher: String,
-    mkFactory: (String, Map[String, String], Long, BackoffPolicy, StructType) => PartitionReaderFactory,
-    options: CaseInsensitiveStringMap,
-    oneRowPerBlock: Boolean,
-    stringPushCols: Set[String] = Set.empty)
-    extends ScanBuilder
-    with SupportsPushDownFilters
-    with SupportsPushDownLimit
-    with SupportsPushDownRequiredColumns {
-  import org.apache.spark.sql.sources.{EqualTo, Filter, IsNotNull}
-  private var lo = options.getLong("start", 0L)
-  private var hi = options.getLong("maxBlock", 1000L)
-  private var pushed: Array[Filter] = Array.empty
-  private var stringPushed: Map[String, String] = Map.empty
-  private var readSchema: StructType = tableSchema
-
-  // LIMIT n == "the first n blocks" ONLY when rows:blocks is 1:1; a
-  // multi-row-per-block source declining the push keeps Spark's own
-  // limit operator, which is merely an early-stop, never wrong.
-  override def pushLimit(limit: Int): Boolean = {
-    if (!oneRowPerBlock) return false
-    hi = math.min(hi, math.max(lo, BlockWindow.satAdd(lo, limit.toLong)))
-    true
-  }
-
-  // Besides the block-window math, equality predicates on declared
-  // string columns (e.g. the logs source's `address`) push into the
-  // FETCH itself — eth_getLogs filters server-side, so the narrowed
-  // query fetches only the matching rows instead of scanning the window
-  // and dropping. Consumed exactly, so Spark does not re-evaluate them
-  // post-scan — which is only sound when the fetcher's match and strict
-  // string equality cannot disagree:
-  //  - only LOWERCASE literals are consumed (the engine's address
-  //    convention, FIXTURES.md §A): an eth_getLogs node matches
-  //    addresses case-insensitively and returns lowercase rows, so a
-  //    checksummed literal pushed-and-consumed would return rows the
-  //    literal does not equal — mixed-case stays a residual filter;
-  //  - only ONE distinct value per column is consumed: two conflicting
-  //    equalities (an unsatisfiable conjunction) must stay residual or
-  //    the last-one-wins fetch would return rows for a false predicate.
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val byCol = filters.collect {
-      case EqualTo(a, v: String) if stringPushCols.contains(a) && v == v.toLowerCase => (a, v)
-    }.groupBy(_._1)
-    val consumable: Map[String, String] = byCol.collect {
-      case (a, pairs) if pairs.map(_._2).distinct.length == 1 => (a, pairs.head._2)
-    }
-    // the IsNotNull companion Catalyst derives from an equality is
-    // consumed WITH it (equality on a non-null literal implies it), so
-    // a fully-pushed predicate leaves zero residual Filter in the plan
-    val (strFilters, rest) = filters.partition {
-      case EqualTo(a, v: String) => consumable.get(a).contains(v)
-      case IsNotNull(a) => consumable.contains(a)
-      case _ => false
-    }
-    stringPushed = consumable
-    val n = BlockWindow.narrow(lo, hi, rest, pushCol)
-    lo = n.lo; hi = n.hi; pushed = n.supported ++ strFilters
-    n.residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  // Top-level pruning: keep the requested columns at their FULL declared
-  // types (a nested-pruned struct is widened back to the whole object —
-  // the fetcher inflates whole entities anyway, and Spark re-applies its
-  // own projection above the scan). Field order follows the request so
-  // the reader's projection is positional.
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val kept = requiredSchema.fields.flatMap(f =>
-      if (tableSchema.fieldNames.contains(f.name)) Some(tableSchema(f.name)) else None)
-    readSchema = if (kept.isEmpty) StructType(Seq(tableSchema.fields.head)) else StructType(kept)
-  }
-
-  override def build(): Scan = {
-    // pushed string predicates ride to the executor-side fetcher as
-    // `pushed.<col>` options (they beat the user-set option — the plan
-    // is the truth)
-    val merged =
-      if (stringPushed.isEmpty) options
-      else new CaseInsensitiveStringMap(
-        (options.asScala ++ stringPushed.map { case (k, v) => s"pushed.$k" -> v }).asJava)
-    new TypedRangeScan(merged, lo, hi, readSchema, defaultFetcher, mkFactory)
-  }
-}
-
-final class TypedRangeScan(options: CaseInsensitiveStringMap,
-    batchLo: Long, batchHi: Long, prunedSchema: StructType, defaultFetcher: String,
-    mkFactory: (String, Map[String, String], Long, BackoffPolicy, StructType) => PartitionReaderFactory)
-    extends Scan {
-  private val blocksPerTrigger = options.getLong("blocksPerTrigger", 100L)
-  private val trailBlocks = options.getLong("trailBlocks", 0L)
-  private val numPartitions = options.getInt("numPartitions", 4)
-  private val fetcherClass = options.getOrDefault("fetcher", defaultFetcher)
-  private val fetchChunk = options.getLong("fetchChunk", Long.MaxValue)
-  private val fetcherOptions = options.asScala.toMap
-  private val backoff = BackoffPolicy(
-    options.getLong("throttleBaseMs", 50L),
-    options.getLong("throttleCapMs", 5000L),
-    options.getInt("throttleMaxRetries", 8))
-
-  private def factory = mkFactory(fetcherClass, fetcherOptions, fetchChunk, backoff, prunedSchema)
-
-  override def readSchema(): StructType = prunedSchema
-
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] =
-      BlockRangePartitioning.split(batchLo, batchHi, numPartitions)
-    override def createReaderFactory(): PartitionReaderFactory = factory
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BlockRangeMicroBatchStream(batchLo, batchHi, blocksPerTrigger, trailBlocks,
-      numPartitions, fetcherClass, fetcherOptions = fetcherOptions,
-      readerFactory = Some(factory))
-}
-
-/** Builds the codegen'd full-row -> pruned-row projection every typed
-  * factory needs: serialize through the entity's Catalyst encoder, then
-  * project down to the pruned read schema — built once per partition. */
-object TypedRowProjection {
-  def apply(full: StructType, readSchema: StructType): UnsafeProjection =
-    UnsafeProjection.create(readSchema.fields.map { f =>
-      val i = full.fieldIndex(f.name)
-      BoundReference(i, full(i).dataType, full(i).nullable)
-    }.toIndexedSeq)
-}
-
-final case class BlockDataReaderFactory(fetcherClass: String, fetcherOptions: Map[String, String],
-    initialChunk: Long, backoff: BackoffPolicy, readSchema: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BlockRangePartition]
-    val fetcher = BlockDataFetcher.forName(fetcherClass, fetcherOptions)
-    val enc = ExpressionEncoder[EvmBlockWithTxs]()
-    val toRow = enc.createSerializer()
-    val proj = TypedRowProjection(enc.schema, readSchema)
-    new AdaptiveRangeReader[EvmBlockWithTxs](p, fetcher.fetchBlocks, initialChunk,
-      backoff, b => proj(toRow(b)))
-  }
+    ConfigurableFetcher.instantiate(className, options)
 }

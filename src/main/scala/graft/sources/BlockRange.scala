@@ -2,65 +2,82 @@ package graft.sources
 
 import java.util
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
 
-/** DataSourceV2 block-ID source: the reference's `BlockIDProducer` +
+/** The block-keyed DataSourceV2 path shared by the typed sources
+  * (`blocks`, `receipts`, `logs`): the reference's `BlockIDProducer` +
   * `tail` polling loop (`evm/producers.py:9-28`, `nft/bin/tail.py:90-204`)
   * as a native Spark connector.
   *
-  *  - batch read: the crawl driver range [start, maxBlock)
-  *  - micro-batch stream: each `latestOffset` poll advances the
-  *    simulated chain head by `blocksPerTrigger`, minus `trailBlocks`
-  *    of reorg lag (the reference's `--trail-blocks` watermark,
-  *    `tail.py:163-164`) — one poll cycle == one micro-batch epoch,
-  *    exactly the `async with data_bus` chunk barrier semantics.
+  *  - batch read: the crawl window [start, maxBlock), narrowed by
+  *    pushed block-column predicates and (one-row-per-block sources)
+  *    LIMIT ([[BlockWindow]]);
+  *  - micro-batch stream: each `latestOffset` poll advances the chain
+  *    head by `blocksPerTrigger`, minus `trailBlocks` of reorg lag (the
+  *    reference's `--trail-blocks` watermark, `tail.py:163-164`) — one
+  *    poll cycle == one micro-batch epoch, exactly the `async with
+  *    data_bus` chunk barrier semantics;
   *  - `numPartitions` range splits per batch: on a cluster each
   *    executor fetches its own block sub-range (the RPC fan-out the
-  *    reference does with a connection pool, `evm/rpc.py:380-422`).
-  *  - each partition reads through a pluggable [[BlockFetcher]]
-  *    (option `fetcher` = class name) in `fetchChunk`-sized windows,
-  *    shrinking the window ÷10 and retrying when the fetcher signals
-  *    the range is too large — the reference's adaptive re-request
-  *    loop against providers that reject wide queries
-  *    (`evm/rpc.py:366-377`).
+  *    reference does with a connection pool, `evm/rpc.py:380-422`);
+  *  - each partition reads through the source's pluggable fetcher
+  *    (option `fetcher` = class name) in `fetchChunk`-sized windows
+  *    ([[AdaptiveRangeReader]]).
   *
   * Options: start, maxBlock, blocksPerTrigger, trailBlocks,
-  * numPartitions, fetcher, fetchChunk.
-  * Usage: spark.readStream.format("blockrange").option(...).load()
-  */
-class BlockRangeSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "blockrange"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BlockRangeSource.Schema
+  * numPartitions, fetcher, fetchChunk, throttleBaseMs, throttleCapMs,
+  * throttleMaxRetries; fetcher-specific options pass through.
+  *
+  * A source is one [[TypedRangeSource]] descriptor registered by a
+  * [[TypedRangeProvider]] subclass. */
+final case class TypedRangeSource[E](
+    name: String,
+    encoder: ExpressionEncoder[E],
+    pushCol: String,
+    defaultFetcher: String,
+    open: (String, Map[String, String]) => (Long, Long) => Iterator[E],
+    oneRowPerBlock: Boolean = true,
+    stringPushCols: Set[String] = Set.empty) {
+  /** Schema derived from the typed entity, not hand-declared — the
+    * source and `Dataset[E]` users can never drift. */
+  val schema: StructType = encoder.schema
+
+  def readerFactory(fetcherClass: String, fetcherOptions: Map[String, String],
+      initialChunk: Long, backoff: BackoffPolicy, readSchema: StructType): PartitionReaderFactory =
+    TypedRangeReaderFactory(fetcherClass, fetcherOptions, initialChunk, backoff, readSchema,
+      encoder, open)
+}
+
+object TypedRangeSource {
+  /** The reader options of a block-window read through `fetcher`. The
+    * fetcher's own options come last, so they win on a shared key. */
+  def readOptions(start: Long, maxBlock: Long, numPartitions: Int, fetcher: String,
+      fetcherOptions: Map[String, String]): Map[String, String] =
+    ListMap("start" -> start.toString, "maxBlock" -> maxBlock.toString,
+      "numPartitions" -> numPartitions.toString, "fetcher" -> fetcher) ++ fetcherOptions
+}
+
+/** Registers one [[TypedRangeSource]] under its short name. */
+abstract class TypedRangeProvider(source: TypedRangeSource[_])
+    extends TableProvider with DataSourceRegister {
+  override def shortName(): String = source.name
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = source.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new BlockRangeTable(new CaseInsensitiveStringMap(properties))
-}
-
-object BlockRangeSource {
-  val Schema: StructType = StructType(Seq(StructField("block_number", LongType, nullable = false)))
-}
-
-/** The seam where a real chain client plugs into the source: one call
-  * fetches the rows of the block window [lo, hi). Implementations must
-  * be serializable-by-name — the reader instantiates the class on the
-  * executor (no closure shipping), the way a JSON-RPC client would be
-  * constructed next to its connection pool. A fetcher signals an
-  * over-wide window (provider response-size cap, the reference's
-  * "query returned more than X results" error) by throwing
-  * [[RangeTooLargeException]]; the reader reacts by shrinking its
-  * window ÷10 and retrying. */
-trait BlockFetcher {
-  def fetch(lo: Long, hi: Long): Iterator[Long]
+    new TypedRangeTable(source, new CaseInsensitiveStringMap(properties))
 }
 
 /** Optional mixin for any fetcher seam: after the no-arg executor-side
@@ -75,12 +92,16 @@ trait ConfigurableFetcher {
 }
 
 object ConfigurableFetcher {
-  /** Configure `f` if it is configurable, with keys lower-cased first:
-    * the reader path lower-cases through CaseInsensitiveStringMap, but
+  /** The seams' instantiate-by-name: fetchers and call executors are
+    * built from their class name through the no-arg constructor (on the
+    * executor, next to the connection they open — no closure shipping),
+    * then configured if configurable, with keys lower-cased first: the
+    * reader path lower-cases through CaseInsensitiveStringMap, but
     * forName is also called with raw user maps (Calls.execute,
     * Crawl.fromChain fetcherOptions) where a documented camelCase key
     * like `callBatch` must not silently miss its lowercase lookup. */
-  def apply[T](f: T, options: Map[String, String]): T = {
+  def instantiate[T](className: String, options: Map[String, String]): T = {
+    val f = Class.forName(className).getDeclaredConstructor().newInstance()
     f match {
       case c: ConfigurableFetcher =>
         // Locale.ROOT like CaseInsensitiveStringMap — a tr_TR default
@@ -89,7 +110,7 @@ object ConfigurableFetcher {
         c.configure(options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v })
       case _ => ()
     }
-    f
+    f.asInstanceOf[T]
   }
 }
 
@@ -103,19 +124,18 @@ trait HeadAwareFetcher {
   def chainHead(): Long
 }
 
-/** Driver-side head probe: instantiate the fetcher class once and keep
-  * a poll thunk if (and only if) it is head-aware. Simulated fetchers
-  * are not — their streams keep the fixed per-poll advance. */
+/** Driver-side head probe: if (and only if) the fetcher class is
+  * head-aware, instantiate it once and keep a poll thunk. Simulated
+  * fetchers are not — their streams keep the fixed per-poll advance. */
 object ChainHead {
   def provider(fetcherClass: String, options: Map[String, String]): Option[() => Long] =
-    if (fetcherClass == null || fetcherClass.isEmpty) None
-    else Class.forName(fetcherClass).getDeclaredConstructor().newInstance() match {
+    if (fetcherClass == null || fetcherClass.isEmpty ||
+        !classOf[HeadAwareFetcher].isAssignableFrom(Class.forName(fetcherClass))) None
+    else {
       // configure ONCE at provider creation (the seam's contract);
       // the poll thunk only reads the head
-      case h: HeadAwareFetcher =>
-        val configured = ConfigurableFetcher(h, options)
-        Some(() => configured.chainHead())
-      case _ => None
+      val configured = ConfigurableFetcher.instantiate[HeadAwareFetcher](fetcherClass, options)
+      Some(() => configured.chainHead())
     }
 
   /** Long-poll head probe (option `headWaitMs` > 0): re-probe the node
@@ -145,6 +165,10 @@ object ChainHead {
   }
 }
 
+/** A fetcher signals an over-wide window (provider response-size cap,
+  * the reference's "query returned more than X results" error) by
+  * throwing this; the reader reacts by shrinking its window ÷10 and
+  * retrying. */
 final class RangeTooLargeException(msg: String) extends RuntimeException(msg)
 
 /** Retryable throttle signal — the provider said "slow down" (HTTP 429
@@ -154,68 +178,147 @@ final class RangeTooLargeException(msg: String) extends RuntimeException(msg)
   * later, not a narrower one. */
 final class ThrottledException(msg: String) extends RuntimeException(msg)
 
-/** Default fetcher — the simulated chain (block ids generated locally). */
-final class SimulatedFetcher extends BlockFetcher {
-  override def fetch(lo: Long, hi: Long): Iterator[Long] = Iterator.range(lo, hi)
-}
-
-object BlockFetcher {
-  val Simulated: String = classOf[SimulatedFetcher].getName
-  def forName(className: String, options: Map[String, String] = Map.empty): BlockFetcher =
-    ConfigurableFetcher(
-      Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[BlockFetcher],
-      options)
-}
-
-final class BlockRangeTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = "blockrange"
-  override def schema(): StructType = BlockRangeSource.Schema
+/** Table over a block-number-keyed typed source. */
+final class TypedRangeTable(source: TypedRangeSource[_], options: CaseInsensitiveStringMap)
+    extends Table with SupportsRead {
+  override def name(): String = source.name
+  override def schema(): StructType = source.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
     val merged = new CaseInsensitiveStringMap(
       (options.asScala ++ caseInsensitiveOptions.asScala).asJava)
-    new BlockRangeScanBuilder(merged)
+    new TypedRangeScanBuilder(source, merged)
   }
 }
 
-/** Filter pushdown for the batch path: `block_number` range predicates
-  * narrow the planned block window itself, so a query for blocks
-  * [900, 950) of a billion-block chain plans (and FETCHES) exactly
-  * that window — partition pruning at the source, the reference's
-  * ranged `get_logs` semantics (`evm/rpc.py:289-377`). The narrowed
-  * predicates are consumed exactly (the window is the predicate), so
-  * Spark does not re-evaluate them post-scan; anything else stays a
-  * residual filter. */
-final class BlockRangeScanBuilder(options: CaseInsensitiveStringMap)
+/** Filter pushdown: range predicates on the source's block column
+  * narrow the planned window itself, so a query for blocks [900, 950)
+  * of a billion-block chain plans (and FETCHES) exactly that window —
+  * partition pruning at the source, the reference's ranged `get_logs`
+  * semantics (`evm/rpc.py:289-377`). */
+final class TypedRangeScanBuilder(source: TypedRangeSource[_], options: CaseInsensitiveStringMap)
     extends ScanBuilder
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
-  import org.apache.spark.sql.sources._
+    with SupportsPushDownFilters
+    with SupportsPushDownLimit
+    with SupportsPushDownRequiredColumns {
+  import org.apache.spark.sql.sources.{EqualTo, Filter, IsNotNull}
+  private val tableSchema = source.schema
   private var lo = options.getLong("start", 0L)
   private var hi = options.getLong("maxBlock", 1000L)
   private var pushed: Array[Filter] = Array.empty
+  private var stringPushed: Map[String, String] = Map.empty
+  private var readSchema: StructType = tableSchema
 
-  // LIMIT n over a dense block range is exactly "the first n blocks of
-  // the (filter-narrowed) window" — plan only those. Filters push
-  // before limits in V2ScanRelationPushDown, so `lo` is final here.
-  // isPartiallyPushed stays at its default (true): Spark keeps its own
-  // limit operator, which costs nothing and stays safe if a future
-  // fetcher returns sparse ranges.
+  // LIMIT n == "the first n blocks" ONLY when rows:blocks is 1:1 (blocks
+  // qualify; receipts and logs, 0..k rows per block, must NOT narrow on
+  // limit or `limit(n)` could under-produce); a declined push keeps
+  // Spark's own limit operator, which is merely an early-stop, never
+  // wrong. Filters push before limits in V2ScanRelationPushDown, so `lo`
+  // is final here. isPartiallyPushed stays at its default (true): Spark
+  // keeps its own limit operator, which costs nothing.
   override def pushLimit(limit: Int): Boolean = {
+    if (!source.oneRowPerBlock) return false
     hi = math.min(hi, math.max(lo, BlockWindow.satAdd(lo, limit.toLong)))
     true
   }
 
+  // Besides the block-window math, equality predicates on declared
+  // string columns (e.g. the logs source's `address`) push into the
+  // FETCH itself — eth_getLogs filters server-side, so the narrowed
+  // query fetches only the matching rows instead of scanning the window
+  // and dropping. Consumed exactly, so Spark does not re-evaluate them
+  // post-scan — which is only sound when the fetcher's match and strict
+  // string equality cannot disagree:
+  //  - only LOWERCASE literals are consumed (the engine's address
+  //    convention, FIXTURES.md §A): an eth_getLogs node matches
+  //    addresses case-insensitively and returns lowercase rows, so a
+  //    checksummed literal pushed-and-consumed would return rows the
+  //    literal does not equal — mixed-case stays a residual filter;
+  //  - only ONE distinct value per column is consumed: two conflicting
+  //    equalities (an unsatisfiable conjunction) must stay residual or
+  //    the last-one-wins fetch would return rows for a false predicate.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val n = BlockWindow.narrow(lo, hi, filters, "block_number")
-    lo = n.lo; hi = n.hi; pushed = n.supported
+    val byCol = filters.collect {
+      case EqualTo(a, v: String) if source.stringPushCols.contains(a) && v == v.toLowerCase => (a, v)
+    }.groupBy(_._1)
+    val consumable: Map[String, String] = byCol.collect {
+      case (a, pairs) if pairs.map(_._2).distinct.length == 1 => (a, pairs.head._2)
+    }
+    // the IsNotNull companion Catalyst derives from an equality is
+    // consumed WITH it (equality on a non-null literal implies it), so
+    // a fully-pushed predicate leaves zero residual Filter in the plan
+    val (strFilters, rest) = filters.partition {
+      case EqualTo(a, v: String) => consumable.get(a).contains(v)
+      case IsNotNull(a) => consumable.contains(a)
+      case _ => false
+    }
+    stringPushed = consumable
+    val n = BlockWindow.narrow(lo, hi, rest, source.pushCol)
+    lo = n.lo; hi = n.hi; pushed = n.supported ++ strFilters
     n.residual
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new BlockRangeScan(options, lo, hi)
+  // Top-level pruning: keep the requested columns at their FULL declared
+  // types (a nested-pruned struct is widened back to the whole object —
+  // the fetcher inflates whole entities anyway, and Spark re-applies its
+  // own projection above the scan). Field order follows the request so
+  // the reader's projection is positional.
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    val kept = requiredSchema.fields.flatMap(f =>
+      if (tableSchema.fieldNames.contains(f.name)) Some(tableSchema(f.name)) else None)
+    readSchema = if (kept.isEmpty) StructType(Seq(tableSchema.fields.head)) else StructType(kept)
+  }
+
+  override def build(): Scan = {
+    // pushed string predicates ride to the executor-side fetcher as
+    // `pushed.<col>` options (they beat the user-set option — the plan
+    // is the truth)
+    val merged =
+      if (stringPushed.isEmpty) options
+      else new CaseInsensitiveStringMap(
+        (options.asScala ++ stringPushed.map { case (k, v) => s"pushed.$k" -> v }).asJava)
+    new TypedRangeScan(source, merged, lo, hi, readSchema)
+  }
+}
+
+final class TypedRangeScan(source: TypedRangeSource[_], options: CaseInsensitiveStringMap,
+    batchLo: Long, batchHi: Long, prunedSchema: StructType) extends Scan {
+  private val blocksPerTrigger = options.getLong("blocksPerTrigger", 100L)
+  private val trailBlocks = options.getLong("trailBlocks", 0L)
+  private val numPartitions = options.getInt("numPartitions", 4)
+  // 0 would divide by zero in BlockRangePartitioning.split, and a
+  // negative count would plan one partition per block
+  require(numPartitions >= 1, s"numPartitions must be at least 1, got $numPartitions")
+  private val fetcherClass = options.getOrDefault("fetcher", source.defaultFetcher)
+  private val fetcherOptions = options.asScala.toMap
+  private val factory = source.readerFactory(fetcherClass, fetcherOptions,
+    options.getLong("fetchChunk", Long.MaxValue),
+    BackoffPolicy(
+      options.getLong("throttleBaseMs", 50L),
+      options.getLong("throttleCapMs", 5000L),
+      options.getInt("throttleMaxRetries", 8)),
+    prunedSchema)
+
+  override def readSchema(): StructType = prunedSchema
+
+  override def toBatch: Batch = new Batch {
+    // [batchLo, batchHi) is the pushdown-narrowed window (equal to
+    // [start, maxBlock) when no block predicates were pushed)
+    override def planInputPartitions(): Array[InputPartition] =
+      BlockRangePartitioning.split(batchLo, batchHi, numPartitions)
+    override def createReaderFactory(): PartitionReaderFactory = factory
+  }
+
+  // The narrowed window applies to the STREAM too: the builder consumed
+  // the block predicates, so if the stream ignored [batchLo, batchHi) a
+  // pushed filter would silently stop filtering. Honoring it here keeps
+  // both paths' semantics identical to the un-pushed plan.
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new BlockRangeMicroBatchStream(batchLo, batchHi, blocksPerTrigger, trailBlocks,
+      numPartitions, fetcherClass, fetcherOptions, factory)
 }
 
 /** Shared pushdown math for the block-keyed sources: range predicates on
@@ -271,41 +374,6 @@ object BlockWindow {
   }
 }
 
-final class BlockRangeScan(options: CaseInsensitiveStringMap,
-    batchLo: Long, batchHi: Long) extends Scan {
-  def this(options: CaseInsensitiveStringMap) =
-    this(options, options.getLong("start", 0L), options.getLong("maxBlock", 1000L))
-  private val blocksPerTrigger = options.getLong("blocksPerTrigger", 100L)
-  private val trailBlocks = options.getLong("trailBlocks", 0L)
-  private val numPartitions = options.getInt("numPartitions", 4)
-  private val fetcherClass = options.getOrDefault("fetcher", BlockFetcher.Simulated)
-  private val fetchChunk = options.getLong("fetchChunk", Long.MaxValue)
-  private val fetcherOptions = options.asScala.toMap
-  private val backoff = BackoffPolicy(
-    options.getLong("throttleBaseMs", 50L),
-    options.getLong("throttleCapMs", 5000L),
-    options.getInt("throttleMaxRetries", 8))
-
-  override def readSchema(): StructType = BlockRangeSource.Schema
-
-  override def toBatch: Batch = new Batch {
-    // [batchLo, batchHi) is the pushdown-narrowed window (equal to
-    // [start, maxBlock) when no block_number predicates were pushed)
-    override def planInputPartitions(): Array[InputPartition] =
-      BlockRangePartitioning.split(batchLo, batchHi, numPartitions)
-    override def createReaderFactory(): PartitionReaderFactory =
-      BlockRangeReaderFactory(fetcherClass, fetchChunk, backoff, fetcherOptions)
-  }
-
-  // The narrowed window applies to the STREAM too: the builder consumed
-  // the block_number predicates, so if the stream ignored [batchLo,
-  // batchHi) a pushed filter would silently stop filtering. Honoring it
-  // here keeps both paths' semantics identical to the un-pushed plan.
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BlockRangeMicroBatchStream(batchLo, batchHi, blocksPerTrigger, trailBlocks,
-      numPartitions, fetcherClass, fetchChunk, backoff, fetcherOptions)
-}
-
 final case class BlockOffset(block: Long) extends Offset {
   override def json(): String = block.toString
 }
@@ -315,15 +383,13 @@ final case class BlockOffset(block: Long) extends Offset {
   * the NODE's live height); the available offset is head − trail (never
   * below start). The offset arithmetic here (exclusive tip+1 bound,
   * trail floor, checkpoint fast-forward) is subtle and exists ONCE:
-  * typed sources reuse this class with their own `readerFactory`
-  * instead of copying the state machine. */
+  * every typed source plans its batches through this class with its own
+  * `readerFactory`. */
 final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTrigger: Long,
                                        trailBlocks: Long, numPartitions: Int,
-                                       fetcherClass: String = BlockFetcher.Simulated,
-                                       fetchChunk: Long = Long.MaxValue,
-                                       backoff: BackoffPolicy = BackoffPolicy(),
-                                       fetcherOptions: Map[String, String] = Map.empty,
-                                       readerFactory: Option[PartitionReaderFactory] = None)
+                                       fetcherClass: String,
+                                       fetcherOptions: Map[String, String],
+                                       readerFactory: PartitionReaderFactory)
     extends MicroBatchStream {
   private var head: Long = start
   // live chain-head polling when the fetcher supports it (RPC fetchers
@@ -373,9 +439,7 @@ final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTri
       startOff.asInstanceOf[BlockOffset].block,
       endOff.asInstanceOf[BlockOffset].block, numPartitions)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    readerFactory.getOrElse(
-      BlockRangeReaderFactory(fetcherClass, fetchChunk, backoff, fetcherOptions))
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -415,38 +479,40 @@ object BlockRangePartitioning {
   }
 }
 
-/** Per-partition reader: drives the fetcher over [lo, hi) in
-  * `initialChunk`-sized windows. A RangeTooLargeException shrinks the
-  * window ÷10 (floor 1 block) and re-requests — the reference's
-  * adaptive narrowing when a provider caps response size
-  * (`evm/rpc.py:366-377`). The shrunk size sticks for the rest of the
-  * partition: a provider that rejected a window once will reject its
-  * siblings, so re-probing wide every chunk just burns a round-trip.
-  * A ThrottledException replays the SAME window after a bounded
-  * exponential backoff ([[BackoffPolicy]]) — the reference's 429
-  * handling (`core/rpc.py:305-310,327-353`); `maxRetries` consecutive
-  * throttles rethrow, failing the task loudly. */
-final case class BlockRangeReaderFactory(fetcherClass: String, initialChunk: Long,
-    backoff: BackoffPolicy = BackoffPolicy(),
-    fetcherOptions: Map[String, String] = Map.empty)
+/** The one reader factory of the typed sources: per partition, open the
+  * source's fetch call on a fetcher instantiated by class name, then
+  * serialize each fetched entity through its Catalyst encoder and
+  * project it down to the pruned read schema (a codegen'd projection,
+  * built once per partition). */
+final case class TypedRangeReaderFactory[E](fetcherClass: String,
+    fetcherOptions: Map[String, String], initialChunk: Long, backoff: BackoffPolicy,
+    readSchema: StructType, encoder: ExpressionEncoder[E],
+    open: (String, Map[String, String]) => (Long, Long) => Iterator[E])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BlockRangePartition]
-    val fetcher = BlockFetcher.forName(fetcherClass, fetcherOptions)
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-    new AdaptiveRangeReader[Long](p, fetcher.fetch, initialChunk, backoff,
-      v => { row.update(0, v); row })
+    val fetch = open(fetcherClass, fetcherOptions)
+    val toRow = encoder.createSerializer()
+    val full = encoder.schema
+    val proj = UnsafeProjection.create(readSchema.fields.map { f =>
+      val i = full.fieldIndex(f.name)
+      BoundReference(i, full(i).dataType, full(i).nullable)
+    }.toIndexedSeq)
+    new AdaptiveRangeReader[E](partition.asInstanceOf[BlockRangePartition], fetch,
+      initialChunk, backoff, e => proj(toRow(e)))
   }
 }
 
 /** The adaptive fetch loop shared by every block-keyed reader: drive a
   * window-fetch function over [p.lo, p.hi) in `initialChunk`-sized
-  * windows, shrink ÷10 (floor 1) on RangeTooLarge — the shrunk size
-  * sticks for the rest of the partition, since a provider that rejected
-  * a window once will reject its siblings — and replay the SAME window
-  * after bounded exponential backoff on Throttled, failing the task
-  * loudly past `maxRetries` consecutive throttles. `toRow` converts one
-  * fetched item; it may reuse a mutable row (the contract of
+  * windows, shrink ÷10 (floor 1) on RangeTooLarge — the reference's
+  * adaptive narrowing when a provider caps response size
+  * (`evm/rpc.py:366-377`); the shrunk size sticks for the rest of the
+  * partition, since a provider that rejected a window once will reject
+  * its siblings — and replay the SAME window after bounded exponential
+  * backoff on Throttled (the reference's 429 handling,
+  * `core/rpc.py:305-310,327-353`), failing the task loudly past
+  * `maxRetries` consecutive throttles. `toRow` converts one fetched
+  * item; it may reuse a mutable row (the contract of
   * PartitionReader.get). */
 final class AdaptiveRangeReader[T](p: BlockRangePartition,
     fetch: (Long, Long) => Iterator[T], initialChunk: Long,

@@ -1,16 +1,7 @@
 package graft.sources
 
-import java.util
-
 import graft.model.EvmLog
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 ranged-logs source — the reference's `get_logs` API
   * (`evm/rpc.py:289-377`) as a native connector: logs of a block window
@@ -35,21 +26,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * fetchChunk, throttle*, endpoints (RPC fetcher).
   * Usage: spark.read.format("logs").option(...).load()
   */
-class LogDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "logs"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LogDataSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TypedRangeTable("logs", LogDataSource.Schema, "block_number",
-      LogsFetcher.Simulated, LogDataReaderFactory.apply,
-      new CaseInsensitiveStringMap(properties),
-      oneRowPerBlock = false, // 0..k logs per block: LIMIT must not narrow
-      stringPushCols = Set("address"))
-}
+class LogDataSource extends TypedRangeProvider(LogDataSource.Source)
 
 object LogDataSource {
-  val Schema: StructType = ExpressionEncoder[EvmLog]().schema
+  val Source: TypedRangeSource[EvmLog] = TypedRangeSource("logs",
+    ExpressionEncoder[EvmLog](), "block_number", LogsFetcher.Simulated,
+    (c, o) => ConfigurableFetcher.instantiate[LogsFetcher](c, o).fetchLogs,
+    oneRowPerBlock = false, // 0..k logs per block: LIMIT must not narrow
+    stringPushCols = Set("address"))
 }
 
 /** One call fetches the logs of the window [lo, hi) under the
@@ -63,10 +47,6 @@ trait LogsFetcher {
 
 object LogsFetcher {
   val Simulated: String = classOf[SimulatedLogsFetcher].getName
-  def forName(className: String, options: Map[String, String] = Map.empty): LogsFetcher =
-    ConfigurableFetcher(
-      Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[LogsFetcher],
-      options)
 
   /** The effective narrowing from an options map: pushed filter beats
     * user option for address; topic0 splits on commas (the wire API's
@@ -96,18 +76,4 @@ final class SimulatedLogsFetcher extends LogsFetcher with ConfigurableFetcher {
       .flatMap(_.logs)
       .filter(l => address.forall(_ == l.address) &&
         (topics.isEmpty || l.topics.headOption.exists(topics.contains)))
-}
-
-final case class LogDataReaderFactory(fetcherClass: String, fetcherOptions: Map[String, String],
-    initialChunk: Long, backoff: BackoffPolicy, readSchema: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BlockRangePartition]
-    val fetcher = LogsFetcher.forName(fetcherClass, fetcherOptions)
-    val enc = ExpressionEncoder[EvmLog]()
-    val toRow = enc.createSerializer()
-    val proj = TypedRowProjection(enc.schema, readSchema)
-    new AdaptiveRangeReader[EvmLog](p, fetcher.fetchLogs, initialChunk,
-      backoff, l => proj(toRow(l)))
-  }
 }

@@ -1,17 +1,7 @@
 package graft.sources
 
-import java.util
-
 import graft.model.{EvmLog, EvmTransactionReceipt}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.connector.catalog.Table
-import org.apache.spark.sql.connector.catalog.TableProvider
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 receipts source — the reference's
   * `get_transaction_receipts` inflation (`evm/rpc.py:198-236`): typed
@@ -25,20 +15,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Usage: spark.read.format("receipts").option(...).load()
   *        .select(explode(col("logs")))  // -> the logs relation
   */
-class ReceiptDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "receipts"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ReceiptDataSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TypedRangeTable("receipts", ReceiptDataSource.Schema, "block_number",
-      ReceiptDataFetcher.Simulated, ReceiptDataReaderFactory.apply,
-      new CaseInsensitiveStringMap(properties),
-      oneRowPerBlock = false) // 0..k receipts per block: LIMIT must not narrow the window
-}
+class ReceiptDataSource extends TypedRangeProvider(ReceiptDataSource.Source)
 
 object ReceiptDataSource {
-  val Schema: StructType = ExpressionEncoder[EvmTransactionReceipt]().schema
+  val Source: TypedRangeSource[EvmTransactionReceipt] = TypedRangeSource("receipts",
+    ExpressionEncoder[EvmTransactionReceipt](), "block_number", ReceiptDataFetcher.Simulated,
+    (c, o) => ReceiptDataFetcher.forName(c, o).fetchReceipts,
+    oneRowPerBlock = false) // 0..k receipts per block: LIMIT must not narrow the window
 }
 
 /** One call inflates the receipts (with logs) of every transaction in
@@ -134,21 +117,5 @@ object SimulatedReceiptFetcher {
 object ReceiptDataFetcher {
   val Simulated: String = classOf[SimulatedReceiptFetcher].getName
   def forName(className: String, options: Map[String, String] = Map.empty): ReceiptDataFetcher =
-    ConfigurableFetcher(
-      Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[ReceiptDataFetcher],
-      options)
-}
-
-final case class ReceiptDataReaderFactory(fetcherClass: String, fetcherOptions: Map[String, String],
-    initialChunk: Long, backoff: BackoffPolicy, readSchema: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BlockRangePartition]
-    val fetcher = ReceiptDataFetcher.forName(fetcherClass, fetcherOptions)
-    val enc = ExpressionEncoder[EvmTransactionReceipt]()
-    val toRow = enc.createSerializer()
-    val proj = TypedRowProjection(enc.schema, readSchema)
-    new AdaptiveRangeReader[EvmTransactionReceipt](p, fetcher.fetchReceipts, initialChunk,
-      backoff, r => proj(toRow(r)))
-  }
+    ConfigurableFetcher.instantiate(className, options)
 }

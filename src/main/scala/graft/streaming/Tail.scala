@@ -10,25 +10,12 @@ import graft.ops.Lww
   * `--trail-blocks` reorg lag = the watermark (T2); `last_block_id`
   * checkpoint = the streaming commit log (K11/T5).
   *
-  * At scale this runs against a custom MicroBatchStream whose
-  * `latestOffset` = chain height − trail; here the transforms are
-  * source-agnostic so tests drive them with a MemoryStream and prod
-  * wires a file/rate source.
+  * The CLI's `tail` feeds these sinks from the `receipts` source's
+  * micro-batch stream, whose `latestOffset` = chain height − trail
+  * ([[graft.sources.BlockRangeMicroBatchStream]]); the sinks are
+  * source-agnostic, so tests also drive them with a MemoryStream.
   */
 object Tail {
-
-  /** Windowed per-type aggregation with event-time watermark: late rows
-    * beyond `trailLag` are dropped exactly like blocks above
-    * height − trail_blocks are not processed (`tail.py:163-164`). */
-  def windowedCounts(events: DataFrame, window_ : String = "1 hour",
-                     trailLag: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", trailLag)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
 
   /** Deterministic key bucket — the sink's partition column. */
   def bucketExpr(keys: Seq[String], numBuckets: Int): org.apache.spark.sql.Column =
@@ -501,11 +488,4 @@ object Tail {
   def readTokens(spark: SparkSession, target: String): DataFrame =
     graft.nft.Derive.finalizeTokens(
       spark.read.parquet(target).drop("__bucket", "__epoch"))
-
-  /** File-source tail: treats new parquet files in `dir` as arriving
-    * micro-batches (one file per trigger = one poll cycle). */
-  def fileTail(spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
 }

@@ -344,6 +344,28 @@ class MainCliSpec extends SparkSpec {
     assert(Main.run(spark, Seq("verify", "0", "10", "--db", tmp("cli_nodb"))) === 2)
   }
 
+  test("validation: counts out of range exit 2 with a message naming the option") {
+    def run(args: String*): (Int, String) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val old = System.err
+      System.setErr(new java.io.PrintStream(bos, true))
+      try (Main.run(spark, args), bos.toString) finally System.setErr(old)
+    }
+    // 0 would divide by zero splitting the window; a negative count
+    // would plan one partition per block
+    Seq("0", "-1").foreach { n =>
+      val (code, err) = run("crawl", "0", "10", "--out", tmp("cli_np"), "--num-partitions", n)
+      assert(code === 2)
+      assert(err.contains(s"--num-partitions: must be at least 1, got $n"), err)
+    }
+    // 0 is a valid --compact-every (never fold), so the bound is non-negative
+    val cfg = tmp("cli_ce_cfg")
+    val (code, err) = run("tail", "--once", "--out", tmp("cli_ce"), "--config", cfg,
+      "--checkpoint", tmp("cli_ce_ck"), "--start", "0", "--compact-every", "-1")
+    assert(code === 2)
+    assert(err.contains("--compact-every: must be non-negative"), err)
+  }
+
   test("digest: eth_call selector, --log-topic full hash (reference function_digest)") {
     def captured(args: Seq[String]): String = {
       val bos = new java.io.ByteArrayOutputStream()

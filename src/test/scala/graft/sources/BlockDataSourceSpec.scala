@@ -28,6 +28,35 @@ object ThrottlingBlockFetcher {
   val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** Head-aware simulated chain pinned at a fixed tip NUMBER. */
+class FixedHeadFetcher extends BlockDataFetcher with HeadAwareFetcher {
+  override def fetchBlocks(lo: Long, hi: Long): Iterator[graft.model.EvmBlockWithTxs] =
+    Iterator.range(lo, hi).map(SimulatedBlockDataFetcher.block)
+  override def chainHead(): Long = FixedHeadFetcher.head.get()
+}
+object FixedHeadFetcher {
+  val head = new java.util.concurrent.atomic.AtomicLong(119L)
+}
+
+/** Mock provider with a response-size cap: any window wider than 10
+  * blocks is rejected the way a rate-limited RPC endpoint rejects a
+  * too-wide eth_getLogs query. Windows served/rejected are recorded in
+  * a static log (driver == executor under local[*]). */
+class CappedFetcher extends BlockDataFetcher {
+  override def fetchBlocks(lo: Long, hi: Long): Iterator[graft.model.EvmBlockWithTxs] = {
+    if (hi - lo > 10) {
+      CappedFetcher.rejected.incrementAndGet()
+      throw new RangeTooLargeException(s"window [$lo, $hi) exceeds 10 blocks")
+    }
+    CappedFetcher.served.add(hi - lo)
+    Iterator.range(lo, hi).map(SimulatedBlockDataFetcher.block)
+  }
+}
+object CappedFetcher {
+  val rejected = new java.util.concurrent.atomic.AtomicInteger(0)
+  val served = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+}
+
 class BlockDataSourceSpec extends SparkSpec {
 
   private def blocksDf(maxBlock: Long, opts: Map[String, String] = Map.empty) = {
@@ -35,6 +64,114 @@ class BlockDataSourceSpec extends SparkSpec {
       .option("start", "0").option("maxBlock", maxBlock.toString)
       .option("numPartitions", "4")
     opts.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
+  }
+
+  /** The typed sources' micro-batch stream over `blocks`, built directly
+    * so a spec can drive its offsets without a query. */
+  private def stream(start: Long, maxBlock: Long, blocksPerTrigger: Long, trailBlocks: Long,
+      numPartitions: Int, fetcher: String = BlockDataFetcher.Simulated) =
+    new BlockRangeMicroBatchStream(start, maxBlock, blocksPerTrigger, trailBlocks, numPartitions,
+      fetcher, Map.empty, BlockDataSource.Source.readerFactory(fetcher, Map.empty,
+        Long.MaxValue, BackoffPolicy(), BlockDataSource.Source.schema))
+
+  test("backoff policy: exponential, capped, overflow-safe, zero-base safe") {
+    val p = BackoffPolicy(baseMs = 50, capMs = 5000, maxRetries = 8)
+    assert(p.delayMs(0) === 50)
+    assert(p.delayMs(3) === 400)
+    assert(p.delayMs(7) === 5000)  // 50 << 7 = 6400 caps
+    assert(p.delayMs(100) === 5000) // deep retry counts must not wrap negative
+    assert(p.delayMs(Int.MaxValue) === 5000)
+    assert(BackoffPolicy(baseMs = 0).delayMs(60) === 0) // degenerate base: never sleep
+    assert((0 to 100).forall(a => p.delayMs(a) >= 0)) // Thread.sleep precondition
+  }
+
+  test("block window math: saturation and negative-delta guard") {
+    import org.apache.spark.sql.sources._
+    assert(BlockWindow.satAdd(Long.MaxValue, 1L) === Long.MaxValue)
+    assert(BlockWindow.satAdd(5L, 0L) === 5L)
+    intercept[IllegalArgumentException] { BlockWindow.satAdd(5L, -1L) }
+    val n = BlockWindow.narrow(0L, 1000L,
+      Array(GreaterThanOrEqual("block_number", 100L), LessThan("block_number", 200L),
+        EqualTo("other_col", 5L)), "block_number")
+    assert((n.lo, n.hi) === ((100L, 200L)))
+    assert(n.supported.length === 2 && n.residual.length === 1)
+  }
+
+  test("batch read covers [start, maxBlock) across partitions") {
+    val df = spark.read.format("blocks")
+      .option("start", "10").option("maxBlock", "110")
+      .option("numPartitions", "4").load()
+    assert(df.rdd.getNumPartitions === 4)
+    val agg = df.agg(count(lit(1)), min(col("number")), max(col("number"))).head()
+    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) === ((100L, 10L, 109L)))
+  }
+
+  test("a partition count below 1 is refused at planning, naming the option") {
+    // 0 would divide by zero splitting the window; a negative count
+    // would plan one partition per block
+    Seq("0", "-1").foreach { n =>
+      val err = intercept[IllegalArgumentException] {
+        blocksDf(100, Map("numPartitions" -> n)).count()
+      }
+      assert(err.getMessage.contains("numPartitions") && err.getMessage.contains(n),
+        err.getMessage)
+    }
+  }
+
+  test("a partition that hits the provider's size cap splits ÷10 and completes") {
+    CappedFetcher.rejected.set(0)
+    CappedFetcher.served.clear()
+    val df = blocksDf(400, Map(
+      "numPartitions" -> "2", // 2 partitions x 200 blocks each
+      "fetcher" -> classOf[CappedFetcher].getName))
+    val agg = df.agg(count(lit(1)), min(col("number")), max(col("number"))).head()
+    // completes despite every initial 200-block window being rejected
+    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) === ((400L, 0L, 399L)))
+    // each partition probed 200 (reject), shrank to 20 (reject), then 2
+    assert(CappedFetcher.rejected.get() === 4)
+    val widths = CappedFetcher.served.toArray(Array.empty[java.lang.Long]).toSeq.map(_.longValue)
+    assert(widths.nonEmpty && widths.forall(_ <= 10L))
+    assert(widths.sum === 400L)
+  }
+
+  test("contradictory number predicates plan an empty scan, not a job failure") {
+    WindowLogBlockFetcher.windows.clear()
+    val none = blocksDf(1000, Map("fetcher" -> classOf[WindowLogBlockFetcher].getName))
+      .filter(col("number") === 500 && col("number") === 700)
+    assert(none.count() === 0)
+    assert(WindowLogBlockFetcher.windows.isEmpty)
+  }
+
+  test("streaming honors a pushed number predicate (never drops it)") {
+    // If the ScanBuilder consumes the filter but the stream ignored the
+    // narrowed window, out-of-range blocks would leak into the sink.
+    val ckpt = java.nio.file.Files.createTempDirectory("bd_ckpt_f").toString
+    val stream = spark.readStream.format("blocks")
+      .option("start", "0").option("maxBlock", "200")
+      .option("blocksPerTrigger", "100")
+      .load()
+      .filter(col("number") >= 150)
+    val q = stream.writeStream.outputMode("append")
+      .format("memory").queryName("blocks_filtered")
+      .option("checkpointLocation", ckpt)
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.sql(
+      "SELECT count(*) n, min(number) mn, max(number) mx FROM blocks_filtered").head()
+    assert((got.getLong(0), got.getLong(1), got.getLong(2)) === ((50L, 150L, 199L)))
+  }
+
+  test("head-aware target is INCLUSIVE of the reported tip block") {
+    // eth_blockNumber reports the latest block NUMBER; the exclusive
+    // stream offset must reach number+1 or the tip is never fetched
+    val s = stream(0L, 10000L, 1000L, 0L, 2, classOf[FixedHeadFetcher].getName)
+    try {
+      assert(s.latestOffset().asInstanceOf[BlockOffset].block === 120L)
+      // a lagging replica reporting a LOWER height never moves offsets back
+      FixedHeadFetcher.head.set(80L)
+      assert(s.latestOffset().asInstanceOf[BlockOffset].block === 120L)
+    } finally FixedHeadFetcher.head.set(119L)
   }
 
   test("batch read inflates typed blocks with nested transactions") {
@@ -149,7 +286,7 @@ class BlockDataSourceSpec extends SparkSpec {
     // a fresh stream instance restoring offset 250 must resume there,
     // not re-advance head from start one trigger at a time: the first
     // post-restart poll plans [250, 350), not an empty [250, 50)
-    val s = new BlockRangeMicroBatchStream(0L, 600L, 100L, 50L, 2)
+    val s = stream(0L, 600L, 100L, 50L, 2)
     s.deserializeOffset("250")
     assert(s.latestOffset().asInstanceOf[BlockOffset].block === 350L)
     // and the fast-forward is monotone: re-reading an OLD offset during

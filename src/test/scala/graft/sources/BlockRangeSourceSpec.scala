@@ -3,212 +3,59 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Head-aware simulated chain pinned at a fixed tip NUMBER. */
-class FixedHeadFetcher extends BlockFetcher with HeadAwareFetcher {
-  override def fetch(lo: Long, hi: Long): Iterator[Long] = Iterator.range(lo, hi)
-  override def chainHead(): Long = FixedHeadFetcher.head.get()
-}
-object FixedHeadFetcher {
-  val head = new java.util.concurrent.atomic.AtomicLong(119L)
-}
-
-/** Mock provider with a response-size cap: any window wider than 10
-  * blocks is rejected the way a rate-limited RPC endpoint rejects a
-  * too-wide eth_getLogs query. Windows served/rejected are recorded in
-  * a static log (driver == executor under local[*]). */
-class CappedFetcher extends BlockFetcher {
-  override def fetch(lo: Long, hi: Long): Iterator[Long] = {
-    if (hi - lo > 10) {
-      CappedFetcher.rejected.incrementAndGet()
-      throw new RangeTooLargeException(s"window [$lo, $hi) exceeds 10 blocks")
-    }
-    CappedFetcher.served.add(hi - lo)
-    Iterator.range(lo, hi)
-  }
-}
-object CappedFetcher {
-  val rejected = new java.util.concurrent.atomic.AtomicInteger(0)
-  val served = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-}
-
-/** Records every fetched window so a spec can prove WHICH blocks the
-  * source actually requested (driver == executor under local[*]). */
-class WindowLogFetcher extends BlockFetcher {
-  override def fetch(lo: Long, hi: Long): Iterator[Long] = {
-    WindowLogFetcher.windows.add((lo, hi))
-    Iterator.range(lo, hi)
-  }
-}
-object WindowLogFetcher {
-  val windows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-}
-
-/** Throttles the first N fetches then serves (429 shape) — the numeric
-  * drive source must back off exactly like the typed sources. */
-class ThrottlingDriveFetcher extends BlockFetcher {
-  override def fetch(lo: Long, hi: Long): Iterator[Long] = {
-    if (ThrottlingDriveFetcher.remaining.getAndDecrement() > 0)
-      throw new ThrottledException(s"429 for [$lo, $hi)")
-    Iterator.range(lo, hi)
-  }
-}
-object ThrottlingDriveFetcher {
-  val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
-}
-
+/** The shared block-range path (`BlockRange.scala`: planning, the
+  * adaptive reader, the micro-batch stream) driven through the `blocks`
+  * source with the simulated chain, at window sizes and trigger widths
+  * the per-source specs do not use. */
 class BlockRangeSourceSpec extends SparkSpec {
 
   test("drive source backs off on throttles and completes (shared reader contract)") {
-    ThrottlingDriveFetcher.remaining.set(5)
-    val df = spark.read.format("blockrange")
+    ThrottlingBlockFetcher.remaining.set(5)
+    val df = spark.read.format("blocks")
       .option("start", "0").option("maxBlock", "100")
-      .option("fetcher", classOf[ThrottlingDriveFetcher].getName)
+      .option("fetcher", classOf[ThrottlingBlockFetcher].getName)
       .option("throttleBaseMs", "1").option("throttleCapMs", "4")
       .load()
     assert(df.count() === 100)
   }
 
-  test("backoff policy: exponential, capped, overflow-safe, zero-base safe") {
-    val p = BackoffPolicy(baseMs = 50, capMs = 5000, maxRetries = 8)
-    assert(p.delayMs(0) === 50)
-    assert(p.delayMs(3) === 400)
-    assert(p.delayMs(7) === 5000)  // 50 << 7 = 6400 caps
-    assert(p.delayMs(100) === 5000) // deep retry counts must not wrap negative
-    assert(p.delayMs(Int.MaxValue) === 5000)
-    assert(BackoffPolicy(baseMs = 0).delayMs(60) === 0) // degenerate base: never sleep
-    assert((0 to 100).forall(a => p.delayMs(a) >= 0)) // Thread.sleep precondition
-  }
-
-  test("block window math: saturation and negative-delta guard") {
-    import org.apache.spark.sql.sources._
-    assert(BlockWindow.satAdd(Long.MaxValue, 1L) === Long.MaxValue)
-    assert(BlockWindow.satAdd(5L, 0L) === 5L)
-    intercept[IllegalArgumentException] { BlockWindow.satAdd(5L, -1L) }
-    val n = BlockWindow.narrow(0L, 1000L,
-      Array(GreaterThanOrEqual("block_number", 100L), LessThan("block_number", 200L),
-        EqualTo("other_col", 5L)), "block_number")
-    assert((n.lo, n.hi) === ((100L, 200L)))
-    assert(n.supported.length === 2 && n.residual.length === 1)
-  }
-
-  test("block_number range predicates prune the planned window (filter pushdown)") {
-    WindowLogFetcher.windows.clear()
-    val df = spark.read.format("blockrange")
-      .option("start", "0").option("maxBlock", "100000")
-      .option("numPartitions", "4")
-      .option("fetcher", classOf[WindowLogFetcher].getName)
-      .load()
-      .filter(col("block_number") >= 90000 && col("block_number") < 90050)
-    assert(df.count() === 50)
-    // the source must have FETCHED only the filtered window — a
-    // post-scan filter over the full chain would log [0, 100000) here
-    val fetched = WindowLogFetcher.windows.toArray(Array.empty[(Long, Long)])
-    assert(fetched.nonEmpty)
-    assert(fetched.forall { case (lo, hi) => lo >= 90000L && hi <= 90050L },
-      fetched.mkString(", "))
-    // contradictory predicates plan an empty scan, not a job failure
-    WindowLogFetcher.windows.clear()
-    val none = spark.read.format("blockrange")
-      .option("start", "0").option("maxBlock", "1000")
-      .option("fetcher", classOf[WindowLogFetcher].getName).load()
-      .filter(col("block_number") === 500 && col("block_number") === 700)
-    assert(none.count() === 0)
-    assert(WindowLogFetcher.windows.isEmpty)
-  }
-
   test("LIMIT plans only the first n blocks of the filtered window") {
-    WindowLogFetcher.windows.clear()
-    val df = spark.read.format("blockrange")
+    WindowLogBlockFetcher.windows.clear()
+    val df = spark.read.format("blocks")
       .option("start", "0").option("maxBlock", "100000")
-      .option("fetcher", classOf[WindowLogFetcher].getName)
+      .option("fetcher", classOf[WindowLogBlockFetcher].getName)
       .load()
-      .filter(col("block_number") >= 5000)
+      .filter(col("number") >= 5000)
       .limit(10)
-    assert(df.collect().map(_.getLong(0)).toSeq === (5000L until 5010L))
-    val fetched = WindowLogFetcher.windows.toArray(Array.empty[(Long, Long)])
+    assert(df.select(col("number")).collect().map(_.getLong(0)).toSeq === (5000L until 5010L))
+    val fetched = WindowLogBlockFetcher.windows.toArray(Array.empty[(Long, Long)])
     assert(fetched.forall { case (lo, hi) => lo >= 5000L && hi <= 5010L },
       fetched.mkString(", "))
   }
 
-  test("batch read covers [start, maxBlock) across partitions") {
-    val df = spark.read.format("blockrange")
-      .option("start", "10").option("maxBlock", "110")
-      .option("numPartitions", "4").load()
-    assert(df.rdd.getNumPartitions === 4)
-    val agg = df.agg(count(lit(1)), min(col("block_number")), max(col("block_number"))).head()
-    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) === ((100L, 10L, 109L)))
-  }
-
-  test("a partition that hits the provider's size cap splits ÷10 and completes") {
-    CappedFetcher.rejected.set(0)
-    CappedFetcher.served.clear()
-    val df = spark.read.format("blockrange")
-      .option("start", "0").option("maxBlock", "400")
-      .option("numPartitions", "2") // 2 partitions x 200 blocks each
-      .option("fetcher", classOf[CappedFetcher].getName)
-      .load()
-    val agg = df.agg(count(lit(1)), min(col("block_number")), max(col("block_number"))).head()
-    // completes despite every initial 200-block window being rejected
-    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) === ((400L, 0L, 399L)))
-    // each partition probed 200 (reject), shrank to 20 (reject), then 2
-    assert(CappedFetcher.rejected.get() === 4)
-    val widths = CappedFetcher.served.toArray(Array.empty[java.lang.Long]).toSeq.map(_.longValue)
-    assert(widths.nonEmpty && widths.forall(_ <= 10L))
-    assert(widths.sum === 400L)
-  }
-
-  test("streaming honors a pushed block_number predicate (never drops it)") {
-    // If the ScanBuilder consumes the filter but the stream ignored the
-    // narrowed window, out-of-range blocks would leak into the sink.
-    val ckpt = java.nio.file.Files.createTempDirectory("br_ckpt_f").toString
-    val stream = spark.readStream.format("blockrange")
-      .option("start", "0").option("maxBlock", "200")
-      .option("blocksPerTrigger", "100")
-      .load()
-      .filter(col("block_number") >= 150)
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("blocks_filtered")
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.sql(
-      "SELECT count(*) n, min(block_number) mn, max(block_number) mx FROM blocks_filtered").head()
-    assert((got.getLong(0), got.getLong(1), got.getLong(2)) === ((50L, 150L, 199L)))
-  }
-
   test("drive stream restart fast-forwards head past the restored offset") {
-    val s = new BlockRangeMicroBatchStream(0L, 600L, 100L, 50L, 2)
+    val fetcher = BlockDataFetcher.Simulated
+    val s = new BlockRangeMicroBatchStream(0L, 600L, 100L, 50L, 2, fetcher, Map.empty,
+      BlockDataSource.Source.readerFactory(fetcher, Map.empty, Long.MaxValue, BackoffPolicy(),
+        BlockDataSource.Source.schema))
     s.deserializeOffset("250")
     assert(s.latestOffset().asInstanceOf[BlockOffset].block === 350L)
   }
 
-  test("head-aware target is INCLUSIVE of the reported tip block") {
-    // eth_blockNumber reports the latest block NUMBER; the exclusive
-    // stream offset must reach number+1 or the tip is never fetched
-    val s = new BlockRangeMicroBatchStream(0L, 10000L, 1000L, 0L, 2,
-      classOf[FixedHeadFetcher].getName)
-    try {
-      assert(s.latestOffset().asInstanceOf[BlockOffset].block === 120L)
-      // a lagging replica reporting a LOWER height never moves offsets back
-      FixedHeadFetcher.head.set(80L)
-      assert(s.latestOffset().asInstanceOf[BlockOffset].block === 120L)
-    } finally FixedHeadFetcher.head.set(119L)
-  }
-
   test("micro-batch stream advances per poll and honors trailBlocks") {
     val ckpt = java.nio.file.Files.createTempDirectory("br_ckpt").toString
-    val stream = spark.readStream.format("blockrange")
+    val stream = spark.readStream.format("blocks")
       .option("start", "0").option("maxBlock", "1000")
       .option("blocksPerTrigger", "250").option("trailBlocks", "100")
       .load()
+      .select(col("number"))
     val q = stream.writeStream.outputMode("append")
       .format("memory").queryName("blocks_out")
       .option("checkpointLocation", ckpt)
       .start()
     q.processAllAvailable()
     q.stop()
-    val got = spark.sql("SELECT count(*) n, min(block_number) mn, max(block_number) mx FROM blocks_out").head()
+    val got = spark.sql("SELECT count(*) n, min(number) mn, max(number) mx FROM blocks_out").head()
     // head reaches 1000; available = head - trail = 900 -> [0, 900)
     assert((got.getLong(0), got.getLong(1), got.getLong(2)) === ((900L, 0L, 899L)))
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** End-to-end tail composition: the DSv2 block source streams block IDs
+/** End-to-end tail composition: the DSv2 `blocks` source streams blocks
   * in micro-batches, each batch is enriched against a broadcast
   * block-time dim (J1/S7), bucketed (T1-shape), and upserted through the
   * replay-idempotent LWW sink — the reference's whole tail loop
@@ -21,10 +21,11 @@ class TailPipelineSpec extends SparkSpec {
     val dim = spark.range(0, 400).select(col("id").as("number"),
       (lit(1000L) + col("id") * 12).as("timestamp"))
 
-    val stream = spark.readStream.format("blockrange")
+    val stream = spark.readStream.format("blocks")
       .option("start", "0").option("maxBlock", "400")
       .option("blocksPerTrigger", "150").option("trailBlocks", "0")
       .load()
+      .select(col("number").as("block_number"))
 
     val enriched = stream.join(broadcast(dim), stream("block_number") === dim("number"))
       .withColumn("bucket", (col("timestamp") / 1000L).cast("long"))

@@ -3,55 +3,11 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Drives the tail micro-batch pipeline with a file source: each parquet
-  * file = one poll cycle (maxFilesPerTrigger=1), exactly the reference's
-  * one-chunk-per-barrier execution (`core/bus.py:127-144`). */
+/** The tail's LWW sink driven batch by batch: each call is one
+  * micro-batch epoch, replays included. */
 class TailSpec extends SparkSpec {
   import spark.implicits._
-
-  private val schema = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
-  test("windowed counts over micro-batches match the batch computation") {
-    val dir = Files.createTempDirectory("tail_src").toString
-    val ckpt = Files.createTempDirectory("tail_ckpt").toString
-    def mk(rows: Seq[(String, String, Double)], file: String): Unit =
-      rows.toDF("tss", "event_type", "value")
-        .select(to_timestamp($"tss").as("ts"), $"event_type", $"value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$file")
-    // two "poll cycles" arriving as two files
-    mk(Seq(("2024-01-01 00:10:00", "click", 1.0),
-           ("2024-01-01 00:20:00", "click", 2.0),
-           ("2024-01-01 00:40:00", "view", 3.0)), "f1")
-    mk(Seq(("2024-01-01 01:10:00", "click", 4.0),
-           ("2024-01-01 01:20:00", "view", 5.0)), "f2")
-
-    val stream = Tail.fileTail(spark, dir + "/*", schema)
-    val agg = Tail.windowedCounts(stream)
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("tail_out")
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    val lastBatch = q.lastProgress.batchId
-    q.stop()
-    assert(lastBatch >= 1) // maxFilesPerTrigger=1 => at least 2 micro-batches
-
-    val got = spark.sql("SELECT * FROM tail_out")
-      .collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("window_start").toString,
-        r.getAs[String]("event_type")) -> (r.getAs[Long]("n"), r.getAs[Double]("total")))
-      .toMap
-    assert(got(("2024-01-01 00:00:00.0", "click")) === ((2L, 3.0)))
-    assert(got(("2024-01-01 00:00:00.0", "view")) === ((1L, 3.0)))
-    assert(got(("2024-01-01 01:00:00.0", "click")) === ((1L, 4.0)))
-    assert(got(("2024-01-01 01:00:00.0", "view")) === ((1L, 5.0)))
-  }
 
   test("foreachBatch LWW sink converges under batch replay") {
     val target = Files.createTempDirectory("lww_sink").toString + "/table"
