@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.nft.{Collections, TokenUris}
 import graft.ops.SinkUtils
 import graft.pipelines.{Crawl, Load, Prepare, VerifyPipeline}
 import graft.rpc.CallExecutor
@@ -292,17 +293,16 @@ object Main {
         LogsFetcher.Simulated, CallExecutor.Simulated, Map.empty)
   }
 
-  // the tail sink's table identity: append-only facts keyed by their
-  // synthetic version (K8 idempotent-append semantics)
-  private val TransferSinkKeys = Seq("collection_id", "token_id", "attribute_version")
-  private val TransferSinkVersion = Seq("attribute_version")
   // every log-format-capable tail table's (keys, versionCols) — the ONE
-  // place verify's log resolution and `compact` take identities from,
-  // so a table the tail can write is never left unresolvable/unfoldable
+  // place the tail's sinks, verify's log resolution and `compact` take
+  // identities from, so a table the tail can write is never left
+  // unresolvable/unfoldable. Transfers are append-only facts keyed by
+  // their synthetic version (K8 idempotent-append semantics).
   private val SinkIdentity: Seq[(String, Seq[String], Seq[String])] = Seq(
-    ("transfers", TransferSinkKeys, TransferSinkVersion),
-    ("uris", Seq("collection_id", "token_id"), Seq("metadata_url_version")),
-    ("collections", Seq("collection_id"), Seq("block_created")))
+    ("transfers", Seq("collection_id", "token_id", "attribute_version"),
+      Seq("attribute_version")),
+    ("uris", TokenUris.Keys, TokenUris.Version),
+    ("collections", Collections.Keys, Collections.Version))
   // the epoch-stamped VIEW tables' read seams, kept NEXT to SinkIdentity
   // so every table shape the tail can write has its resolution declared
   // in one place
@@ -403,9 +403,12 @@ object Main {
           if (compactEvery > 0 && opts.getOrElse("merge-format", "bucket") != "log")
             throw CliError("--compact-every requires --merge-format log " +
               "(the bucket format already stores one row per key)")
-          val factSink = graft.streaming.Tail.mergeSink(s"$out/transfers",
-            TransferSinkKeys, TransferSinkVersion, mergeFormat(opts, buckets),
-            compactEvery) _
+          // the LWW sink of a SinkIdentity table under --out
+          def lwwSink(name: String) = SinkIdentity.collectFirst {
+            case (`name`, keys, versionCols) => graft.streaming.Tail.mergeSink(s"$out/$name",
+              keys, versionCols, mergeFormat(opts, buckets), compactEvery) _
+          }.get
+          val factSink = lwwSink("transfers")
           def blockTimeDim(flag: String) =
             opts.get("block-time-cache").map(Load.readBlockTimeCsv(spark, _))
               .getOrElse(throw CliError(
@@ -449,34 +452,20 @@ object Main {
                   // probe lineage must execute ONCE per epoch — the
                   // isEmpty gate plus the sink write would otherwise
                   // re-issue every eth_call
-                  val updates = graft.nft.Derive.uriUpdates(logs).unionByName(
-                    graft.nft.TokenUris.fromMints(spark, transfers, w.calls, w.options))
+                  val updates = TokenUris.updates(logs,
+                    TokenUris.fromMints(spark, transfers, w.calls, w.options))
                     .localCheckpoint(true)
-                  if (!updates.isEmpty) graft.streaming.Tail.mergeSink(s"$out/uris",
-                    Seq("collection_id", "token_id"), Seq("metadata_url_version"),
-                    mergeFormat(opts, buckets), compactEvery)(updates, id)
+                  if (!updates.isEmpty) lwwSink("uris")(updates, id)
                 }
                 collectionsDim.foreach { bt =>
-                  // new contracts this epoch: probe ERC-165/metadata
-                  // through the call executor, then LWW on creation
-                  // block (a re-created collection takes the later row)
-                  val created = epoch.filter(
-                    col("contract_address").isNotNull && col("status") === 1)
-                  if (!created.isEmpty) {
-                    // metadata-scale (rows = created contracts); eager
-                    // checkpoint so the downstream sink's several
-                    // actions don't re-issue the probe calls
-                    val snapshot = graft.rpc.Calls.interfaceSnapshot(
-                      graft.rpc.Calls.execute(spark,
-                        graft.nft.Collections.callRequests(created
-                          .select(col("contract_address").as("collection_id")).distinct()),
-                        w.calls, w.options)).localCheckpoint(true)
-                    val colls = graft.nft.Collections.fromReceipts(
-                      epoch, snapshot, bt, intOpt(opts, "data-version", 1))
-                    graft.streaming.Tail.mergeSink(s"$out/collections",
-                      Seq("collection_id"), Seq("block_created"),
-                      mergeFormat(opts, buckets), compactEvery)(colls, id)
-                  }
+                  // new contracts this epoch, through the crawl's
+                  // collections branch; the probe (metadata-scale, rows =
+                  // created contracts) is eager-checkpointed so the
+                  // sink's several actions don't re-issue its calls
+                  if (!Collections.creations(epoch).isEmpty)
+                    lwwSink("collections")(Collections.fromChain(spark, epoch, bt,
+                      intOpt(opts, "data-version", 1), w.calls, w.options,
+                      _.localCheckpoint(true)), id)
                 }
               } finally { transfers.unpersist(false); epoch.unpersist(false) }
             }
@@ -575,7 +564,7 @@ object Main {
           def spec(s: String) =
             narrowed(table("collections")).filter(col("specification") === s)
           val tokens1155 = dbUris
-            .map(u => graft.nft.TokenUris.tokensWithLatestUrls(narrowed(table("tokens")), u))
+            .map(u => TokenUris.tokensWithLatestUrls(narrowed(table("tokens")), u))
             .getOrElse(narrowed(table("tokens")))
             .join(spec("ERC-1155").select(col("collection_id")),
               Seq("collection_id"), "left_semi")
@@ -589,9 +578,7 @@ object Main {
             // gated on the db's ERC-721 classification like the
             // reference's contract_supports_erc721 check
             .unionByName(VerifyPipeline.tokenOwnersReport(spark,
-              narrowed(table("tokens")),
-              narrowed(table("collections")).filter(col("specification") === "ERC-721"),
-              w.calls, w.options))
+              narrowed(table("tokens")), spec("ERC-721"), w.calls, w.options))
             // per-token tokenURI check at the verify height (reference
             // verify.py:686-690), same ERC-721 gate
             .unionByName(VerifyPipeline.tokenUrisReport(spark,

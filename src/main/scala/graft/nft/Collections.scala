@@ -1,7 +1,9 @@
 package graft.nft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.rpc.Calls
 
 /** Receipt -> Collection derivation: the crawl pipeline's branch (a)
   * (`nft/evm/transformers.py:48-197`): contract-creation receipts,
@@ -16,6 +18,39 @@ import org.apache.spark.sql.functions._
   */
 object Collections {
 
+  /** The collections table's LWW identity: one row per contract, the
+    * latest creation block wins (a re-created contract takes the later
+    * row). */
+  val Keys: Seq[String] = Seq("collection_id")
+  val Version: Seq[String] = Seq("block_created")
+
+  /** Contract-creation receipts: a created address on a successful
+    * transaction (`nft/evm/transformers.py:62-64`). */
+  def creations(receipts: DataFrame): DataFrame =
+    receipts.filter(col("contract_address").isNotNull && col("status") === 1)
+
+  /** The interface snapshot of `contracts` (one `collection_id` per
+    * row): [[callRequests]] run through the [[graft.rpc.CallExecutor]]
+    * seam and pivoted back by [[graft.rpc.Calls.interfaceSnapshot]].
+    * The one probe the crawl, `force`, the tail's collections view and
+    * verify's collections re-check all issue. */
+  def probe(spark: SparkSession, contracts: DataFrame, callExecutor: String,
+      options: Map[String, String]): DataFrame =
+    Calls.interfaceSnapshot(Calls.execute(spark, callRequests(contracts), callExecutor, options))
+
+  /** The collections branch over a receipts window: the DISTINCT
+    * created contracts are probed, `stage` materializes the probe
+    * lineage once (the table's several actions would otherwise re-run
+    * the eth_call sweep), and [[fromReceipts]] classifies and enriches. */
+  def fromChain(spark: SparkSession, receipts: DataFrame, blockTimes: DataFrame,
+      dataVersion: Int, callExecutor: String, options: Map[String, String],
+      stage: DataFrame => DataFrame, broadcastDims: Boolean = true): DataFrame = {
+    val contracts = creations(receipts)
+      .select(col("contract_address").as("collection_id")).distinct()
+    fromReceipts(receipts, stage(probe(spark, contracts, callExecutor, options)),
+      blockTimes, dataVersion, broadcastDims)
+  }
+
   /** `broadcastDims = false` for whole-chain backfills: the snapshot
     * and block-time dims are sized by the CONTRACTS/BLOCKS in the
     * window — small for a crawl window, but a full-height run carries
@@ -26,8 +61,7 @@ object Collections {
                    blockTimes: DataFrame, dataVersion: Int,
                    broadcastDims: Boolean = true): DataFrame = {
     def dim(df: DataFrame) = if (broadcastDims) broadcast(df) else df
-    val creations = receipts
-      .filter(col("contract_address").isNotNull && col("status") === 1)
+    val created = creations(receipts)
       .select(col("contract_address").as("collection_id"),
         col("from_").as("creator"),
         col("block_number").as("block_created"))
@@ -37,7 +71,7 @@ object Collections {
     val snapshot =
       if (interfaceSnapshot.columns.contains("owner")) interfaceSnapshot
       else interfaceSnapshot.withColumn("owner", lit(null).cast("string"))
-    creations
+    created
       .join(dim(snapshot), Seq("collection_id"), "inner")
       .filter(col("supports_erc721") || col("supports_erc1155"))
       .join(dim(blockTimes.select(col("number"), col("timestamp"))),

@@ -162,16 +162,14 @@ object Derive {
       .dropDuplicates("collection_id", "attribute_version", "token_id")
   }
 
-  /** ERC-1155 URI events: dynamic string + indexed token id, with the
-    * `{id}` substitution (`nft/evm/transformers.py:339-376`). */
+  /** ERC-1155 URI events: dynamic string + indexed token id, stored
+    * through the metadata-URL rule ([[TokenUris.canonicalize]]). */
   def uriUpdates(logs: DataFrame): DataFrame =
-    logs.filter(element_at(col("topics"), 1) === lit(Erc1155UriSig) &&
-        size(col("topics")) === 2)
-      .withColumn("token_id", Abi.topicUint(element_at(col("topics"), 2)))
-      .withColumn("metadata_url",
-        regexp_replace(Abi.decodeStringUdf(col("data"), lit(0)),
-          lit("\\{id\\}"), col("token_id")))
-      .filter(length(col("metadata_url")) <= 2048) // P10, `dynamodb.py:160-167`
+    TokenUris.canonicalize(
+      logs.filter(element_at(col("topics"), 1) === lit(Erc1155UriSig) &&
+          size(col("topics")) === 2)
+        .withColumn("token_id", Abi.topicUint(element_at(col("topics"), 2))),
+      "metadata_url", Abi.decodeStringUdf(col("data"), lit(0)), dropOverCap = true)
       .select(col("address").as("collection_id"), col("token_id"), col("metadata_url"),
         attributeVersion(col("block_number"), col("transaction_index"), col("log_index"))
           .as("metadata_url_version"))

@@ -1,6 +1,6 @@
 package graft.nft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{Abi, Keccak}
@@ -28,16 +28,52 @@ import graft.expr.{Abi, Keccak}
   * through the left enrich / absent from the uris stream), never a
   * null-URL overwrite of an event-sourced URL.
   *
-  * `{id}` templates are canonicalized exactly like the URI-event path
-  * (replace with the 64-hex token id, [[Derive.uriUpdates]]) — the
-  * reference leaves 721 probe results untouched (`consumers.py:356`)
-  * but EIP-1155-style templates do appear on 721 contracts, and both
-  * metadata sources must agree in shape to LWW-merge coherently. The
-  * 2048-char cap (P10, `dynamodb.py:160-167`) applies the same way.
+  * Probe answers go through the same [[canonicalize]] rule as the
+  * URI events (`{id}` substitution, P10 cap) — the reference leaves 721
+  * probe results untouched (`consumers.py:356`) but EIP-1155-style
+  * templates do appear on 721 contracts, and both metadata sources must
+  * agree in shape to LWW-merge coherently.
   */
 object TokenUris {
 
   private val TokenUriSel: String = Keccak.functionSelector("tokenURI(uint256)")
+
+  /** The uris table's LWW identity: the latest URL per token by
+    * `metadata_url_version`. */
+  val Keys: Seq[String] = Seq("collection_id", "token_id")
+  val Version: Seq[String] = Seq("metadata_url_version")
+
+  /** P10 (`dynamodb.py:160-167`): the longest metadata URL stored. */
+  val MaxUrlLength: Int = 2048
+
+  /** The metadata-URL rule, writing column `url` from the raw URL
+    * `value`: `{id}` becomes the row's 64-hex token id
+    * (`nft/evm/transformers.py:339-376`), then the P10 cap applies. The
+    * crawl's two sources store URLs through it with `dropOverCap`, so a
+    * URL over the cap is never written; verify passes its chain answers
+    * through it without, so such an answer reads null, the same as the
+    * stored side. */
+  def canonicalize(df: DataFrame, url: String, value: Column,
+      dropOverCap: Boolean): DataFrame = {
+    val substituted =
+      df.withColumn(url, regexp_replace(value, lit("\\{id\\}"), col("token_id")))
+    if (dropOverCap) substituted.filter(length(col(url)) <= MaxUrlLength)
+    else substituted.withColumn(url, when(length(col(url)) <= MaxUrlLength, col(url)))
+  }
+
+  /** Latest URL per token of a uris-shaped table (LWW on
+    * `metadata_url_version`), as (collection_id, token_id, `as`). */
+  def latest(uris: DataFrame, as: String): DataFrame =
+    graft.ops.Lww.merge(
+      uris.select(col("collection_id"), col("token_id"),
+        col("metadata_url"), col("metadata_url_version")), Keys, Version)
+      .select(col("collection_id"), col("token_id"), col("metadata_url").as(as))
+
+  /** The uris table: BOTH metadata sources in one stream — the ERC-1155
+    * URI events of `logs` and the per-mint tokenURI probe rows — LWW-
+    * merged downstream on `metadata_url_version`. */
+  def updates(logs: DataFrame, mintUris: DataFrame): DataFrame =
+    Derive.uriUpdates(logs).unionByName(mintUris)
 
   /** One probe per minted ERC-721 token, keyed like the reference's
     * Token entity: first-mint-wins (min attribute_version) picks the
@@ -73,23 +109,14 @@ object TokenUris {
       .select(col("to").as("collection_id"), col("probe").as("token_id"),
         Abi.decodeStringUdf(col("result"), lit(0)).as("metadata_url"))
       .filter(col("metadata_url").isNotNull)
-    answers
+    canonicalize(answers
       .join(mints.select(col("collection_id"), col("token_id"),
-        col("attribute_version")), Seq("collection_id", "token_id"))
-      .withColumn("metadata_url",
-        regexp_replace(col("metadata_url"), lit("\\{id\\}"), col("token_id")))
-      .filter(length(col("metadata_url")) <= 2048) // P10
+        col("attribute_version")), Seq("collection_id", "token_id")),
+      "metadata_url", col("metadata_url"), dropOverCap = true)
       .select(col("collection_id"), col("token_id"), col("metadata_url"),
         col("attribute_version").as("metadata_url_version"))
   }
 
-  /** The batch-consumer half (`consumers.py:357-372`: completed tokens
-    * are WRITTEN with their probed metadata_url): left-enrich the
-    * derived tokens table. Tokens whose probe reverted — and every
-    * ERC-1155 token, which is never probed — keep a null metadata_url,
-    * to be filled by the URI-event LWW merge downstream. Keyed on the
-    * tokens table's own grain, so the join co-partitions with the
-    * derivation's final aggregate. */
   /** The reference's token READ view reconstituted: its sink applies
     * URI-event updates onto the token item
     * (`NftMetadataUriUpdatingConsumer`), so a reference token row
@@ -100,21 +127,26 @@ object TokenUris {
     * value; tokens untouched by either keep null. One co-partitioned
     * join on the tokens grain. */
   def tokensWithLatestUrls(tokens: DataFrame, uris: DataFrame): DataFrame = {
-    val latest = graft.ops.Lww.merge(
-      uris.select(col("collection_id"), col("token_id"),
-        col("metadata_url"), col("metadata_url_version")),
-      Seq("collection_id", "token_id"), Seq("metadata_url_version"))
-      .select(col("collection_id"), col("token_id"),
-        col("metadata_url").as("latest_url"))
-    val base =
-      if (tokens.columns.contains("metadata_url")) tokens
-      else tokens.withColumn("metadata_url", lit(null).cast("string"))
-    base.join(latest, Seq("collection_id", "token_id"), "left")
+    val base = withMetadataUrl(tokens)
+    base.join(latest(uris, "latest_url"), Seq("collection_id", "token_id"), "left")
       .withColumn("metadata_url", coalesce(col("latest_url"), col("metadata_url")))
       .drop("latest_url")
       .select(base.columns.toIndexedSeq.map(col): _*)
   }
 
+  /** `tokens` with a metadata_url column: a tokens table without one
+    * (older DBs, the tail's token view) reads as all-null URLs. */
+  def withMetadataUrl(tokens: DataFrame): DataFrame =
+    if (tokens.columns.contains("metadata_url")) tokens
+    else tokens.withColumn("metadata_url", lit(null).cast("string"))
+
+  /** The batch-consumer half (`consumers.py:357-372`: completed tokens
+    * are WRITTEN with their probed metadata_url): left-enrich the
+    * derived tokens table. Tokens whose probe reverted — and every
+    * ERC-1155 token, which is never probed — keep a null metadata_url,
+    * to be filled by the URI-event LWW merge downstream. Keyed on the
+    * tokens table's own grain, so the join co-partitions with the
+    * derivation's final aggregate. */
   def enrichTokens(tokens: DataFrame, mintUris: DataFrame): DataFrame =
     tokens.join(
       mintUris.select(col("collection_id"), col("token_id"), col("metadata_url")),

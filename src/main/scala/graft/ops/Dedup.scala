@@ -319,11 +319,11 @@ object Dedup {
     // depend on which path the data volume selects.
     val fwd = pairs.select(col("id_a").cast("long").as("src"),
       col("id_b").cast("long").as("dst"))
-    // lazy checkpoint: the size-gate count below is the materializing
-    // action, so the stage + count are ONE driver job (§2.6)
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false) // materialized once, re-joined every round
-    if (edges.count() <= 2 * localEdgeLimit) return unionFindLocal(edges)
+    // materialized once, re-joined every round; staged and counted for
+    // the size gate in ONE driver job (§2.6)
+    val (edges, nEdges) = Staging.freshCounted(
+      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
+    if (nEdges <= 2 * localEdgeLimit) return unionFindLocal(edges)
     // Round 0 folded into the init: label = min(self, neighbors). A band
     // clique (the common dup-graph shape) is already converged here, so
     // the loop's first pass is just the fixpoint confirmation.
@@ -357,12 +357,15 @@ object Dedup {
       // the propagation rows), so convergence is a filter over the
       // checkpointed result — no extra shuffle join per round. The
       // checkpoint is LAZY: the changed-count action materializes the
-      // blocks, so the stage + convergence probe are one driver job.
+      // blocks, so the stage + convergence probe are one driver job —
+      // counted on the RDD, as `Staging.freshCounted` does, because
+      // `Dataset.count()` runs its single-partition exchange as a job of
+      // its own under adaptive execution.
       val next = labels.select(col("node"), col("label"), col("label").as("prev"))
         .union(self).union(push).union(jump)
         .groupBy("node").agg(min("label").as("label"), min("prev").as("prev"))
         .localCheckpoint(false)
-      val changed = next.filter(col("label") < col("prev")).count()
+      val changed = next.filter(col("label") < col("prev")).queryExecution.toRdd.count()
       cached.unpersist()
       cached = next
       labels = next.select(col("node"), col("label"))

@@ -44,12 +44,13 @@ object Triangles {
     * violations are the caller's to clean, as in Dedup CC). */
   def perNodeCounts(edges: DataFrame,
       broadcastEdgeLimit: Long = 4L << 20): DataFrame = {
-    val oriented = orient(edges.select(col("id_a").cast("long").as("id_a"),
+    // skinny, multiply consumed: staged and counted in one job
+    val (oriented, nOriented) = Staging.freshCounted(
+      orient(edges.select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b")), "triangles")
-      .select(col("src"), col("dst"), col("rkdst"))
-      .localCheckpoint() // skinny, multiply consumed; count() is free on the blocks
+      .select(col("src"), col("dst"), col("rkdst")))
     val tri =
-      if (oriented.count() <= broadcastEdgeLimit) {
+      if (nOriented <= broadcastEdgeLimit) {
         val adj = oriented.groupBy(col("src"))
           .agg(collect_list(col("dst")).as("nbrs"))
         oriented
@@ -130,11 +131,10 @@ object Triangles {
     // union adjacency, BOTH directions (a batch edge's endpoints need
     // their full neighborhoods to close wedges through corpus edges)
     val e = ec.union(eb)
-    val adj = e.select(col("a").as("v"), col("b").as("w"))
+    val (adj, nAdj) = Staging.freshCounted(e.select(col("a").as("v"), col("b").as("w"))
       .union(e.select(col("b").as("v"), col("a").as("w")))
-      .groupBy(col("v")).agg(collect_list(col("w")).as("nbrs"))
-      .localCheckpoint()
-    val small = adj.count() <= broadcastEdgeLimit
+      .groupBy(col("v")).agg(collect_list(col("w")).as("nbrs")))
+    val small = nAdj <= broadcastEdgeLimit
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val tri = eb
       .join(maybeB(adj.select(col("v").as("a"), col("nbrs").as("na"))), "a")

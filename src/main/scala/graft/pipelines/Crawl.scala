@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import graft.nft.{Collections, Derive, TokenUris}
 import graft.ops.Lww
 import graft.sources.TypedRangeSource
 
@@ -56,20 +57,11 @@ object Crawl {
     * to both sources, so crawling blocks [startBlock, maxBlock) of a
     * long chain fetches exactly that range.
     *
-    * Collections branch (`nft/evm/transformers.py:48-197`): creation
-    * receipts (contract_address non-null, status 1) produce the DISTINCT
-    * contract set; [[graft.nft.Collections.callRequests]] builds the
-    * probe calldata columnar; the [[graft.rpc.CallExecutor]] seam runs
-    * the probes (simulated by default, JSON-RPC in production); the
-    * pivoted snapshot classifies + enriches via
-    * [[graft.nft.Collections.fromReceipts]]; repeated creations of one
-    * contract LWW-collapse on the latest creation block.
-    *
-    * Scale note: `Derive.tokens` broadcasts the block-time dim for a
-    * crawl WINDOW (rows = blocks in range); past
-    * [[Crawl.BroadcastWindowLimit]] blocks the enrich automatically
-    * degrades to a shuffled join — a whole-chain backfill must not ship
-    * a tens-of-millions-row dim to every task.
+    * Collections branch (`nft/evm/transformers.py:48-197`):
+    * [[graft.nft.Collections.fromChain]] probes the distinct created
+    * contracts through the [[graft.rpc.CallExecutor]] seam (simulated by
+    * default, JSON-RPC in production) and classifies them; repeated
+    * creations of one contract LWW-collapse on the latest creation block.
     *
     * `stageDir`: the returned tables share the receipts/transfers
     * lineage, so materializing all of them against a LIVE fetcher would
@@ -100,40 +92,9 @@ object Crawl {
     val logs = receipts.select(explode(col("logs")).as("l")).select(col("l.*"))
     val blockTimes = staged(
       src("blocks", blocksFetcher).select(col("number"), col("timestamp")), "block_times")
-    val transfers = staged(graft.nft.Derive.transfers(logs), "transfers")
-    val creations = receipts
-      .filter(col("contract_address").isNotNull && col("status") === 1)
-      .select(col("contract_address").as("collection_id")).distinct()
-    // the snapshot is RPC-probe lineage: stage it like the receipts so
-    // repeated actions on `collections` (count + write + merge-shuffle
-    // recomputation) never re-run the eth_call sweep
-    val snapshot = staged(graft.rpc.Calls.interfaceSnapshot(
-      graft.rpc.Calls.execute(spark, graft.nft.Collections.callRequests(creations),
-        callExecutor, fetcherOptions)), "call_snapshot")
-    val collections = Lww.merge(
-      graft.nft.Collections.fromReceipts(receipts, snapshot, blockTimes, dataVersion,
-        // same window cutoff as the token enrich below: a whole-chain
-        // backfill must not force-broadcast a chain-length time dim
-        broadcastDims = maxBlock - startBlock <= BroadcastWindowLimit),
-      Seq("collection_id"), Seq("block_created"))
-    // J5 live probes: tokenURI(token_id) at the mint block, per minted
-    // ERC-721 token (`nft/evm/consumers.py:328-374`) — probe lineage
-    // like the snapshot, so stage it: both the tokens enrich and the
-    // uris union consume it
-    val tokenUris = staged(
-      graft.nft.TokenUris.fromMints(spark, transfers, callExecutor, fetcherOptions),
-      "token_uris")
-    Map(
-      "collections" -> collections,
-      "transfers" -> transfers,
-      "tokens" -> graft.nft.TokenUris.enrichTokens(
-        graft.nft.Derive.tokens(transfers, blockTimes,
-          broadcastTimes = maxBlock - startBlock <= BroadcastWindowLimit),
-        tokenUris),
-      "owners" -> graft.nft.Derive.owners(transfers),
-      // both metadata sources in one stream: ERC-1155 URI events + the
-      // per-mint 721 probes, LWW-merged downstream on metadata_url_version
-      "uris" -> graft.nft.Derive.uriUpdates(logs).unionByName(tokenUris))
+    val transfers = staged(Derive.transfers(logs), "transfers")
+    entityTables(spark, receipts, logs, transfers, blockTimes, maxBlock - startBlock,
+      staged, callExecutor, fetcherOptions, dataVersion)
   }
 
   /** The reference's `force` command (`nft/bin/force.py:52-120`):
@@ -168,36 +129,49 @@ object Crawl {
       col("number") >= creationBlock && col("number") < maxBlock)
     val creationReceipts = src("receipts", receiptsFetcher, creationBlock, creationBlock + 1)
       .filter(col("contract_address") === collectionId)
-    val snapshot = graft.rpc.Calls.interfaceSnapshot(
-      graft.rpc.Calls.execute(spark,
-        graft.nft.Collections.callRequests(
-          creationReceipts.select(col("contract_address").as("collection_id")).distinct()),
-        callExecutor, fetcherOptions))
-    val collections = graft.nft.Collections.fromReceipts(
-      creationReceipts, snapshot, windowTimes, dataVersion)
     // no transfers can precede the creation: start the log scan there
     val logs = src("logs", logsFetcher, creationBlock, maxBlock)
       .filter(col("address") === collectionId)
-    val transfers = graft.nft.Derive.transfers(logs)
-    // the same per-mint tokenURI probes as the full crawl (the shared
-    // bus wires the transformer for force loads too, `nft/bin/shared.py`).
-    // Materialized ONCE (fromChain stages it for the same reason): the
-    // tokens enrich and the uris union both consume this lineage, and
-    // without the checkpoint each output re-runs every per-mint
-    // tokenURI eth_call — double live RPC, and a transient failure on
-    // one execution could leave tokens.metadata_url inconsistent with
-    // the uris row derived from the other.
-    val tokenUris = graft.nft.TokenUris.fromMints(spark, transfers,
-      callExecutor, fetcherOptions).localCheckpoint(true)
+    // the same probes as the full crawl (the shared bus wires the
+    // transformers for force loads too, `nft/bin/shared.py`), each
+    // probe lineage checkpointed once where the crawl stages it
+    entityTables(spark, creationReceipts, logs, Derive.transfers(logs), windowTimes,
+      maxBlock - creationBlock, (df, _) => df.localCheckpoint(true),
+      callExecutor, fetcherOptions, dataVersion)
+  }
+
+  /** The five entity tables over one chain read, shared by [[fromChain]]
+    * and [[forceLoad]]: `receipts` hold the creation receipts, `logs`
+    * the window's logs, `transfers` their derived facts and `blockTimes`
+    * the window's time dim. `stage(df, name)` materializes a probe
+    * lineage ONCE: the interface snapshot feeds the collections table's
+    * several actions, and the per-mint tokenURI probes (J5,
+    * `nft/evm/consumers.py:328-374`) feed both the tokens enrich and the
+    * uris table — unmaterialized, each consumer would re-issue every
+    * eth_call, and a transient failure on one execution could leave
+    * tokens.metadata_url inconsistent with the uris row derived from
+    * the other. Past [[BroadcastWindowLimit]] blocks the block-time dims
+    * are joined shuffled — a whole-chain backfill must not ship a
+    * tens-of-millions-row dim to every task. */
+  private def entityTables(spark: SparkSession, receipts: DataFrame, logs: DataFrame,
+      transfers: DataFrame, blockTimes: DataFrame, windowBlocks: Long,
+      stage: (DataFrame, String) => DataFrame, callExecutor: String,
+      options: Map[String, String], dataVersion: Int): Map[String, DataFrame] = {
+    val broadcastDims = windowBlocks <= BroadcastWindowLimit
+    // repeated creations of one contract collapse on the latest block
+    val collections = Lww.merge(
+      Collections.fromChain(spark, receipts, blockTimes, dataVersion, callExecutor, options,
+        stage(_, "call_snapshot"), broadcastDims),
+      Collections.Keys, Collections.Version)
+    val tokenUris = stage(TokenUris.fromMints(spark, transfers, callExecutor, options),
+      "token_uris")
     Map(
       "collections" -> collections,
       "transfers" -> transfers,
-      "tokens" -> graft.nft.TokenUris.enrichTokens(
-        graft.nft.Derive.tokens(transfers, windowTimes,
-          broadcastTimes = maxBlock - creationBlock <= BroadcastWindowLimit),
-        tokenUris),
-      "owners" -> graft.nft.Derive.owners(transfers),
-      "uris" -> graft.nft.Derive.uriUpdates(logs).unionByName(tokenUris))
+      "tokens" -> TokenUris.enrichTokens(
+        Derive.tokens(transfers, blockTimes, broadcastTimes = broadcastDims), tokenUris),
+      "owners" -> Derive.owners(transfers),
+      "uris" -> TokenUris.updates(logs, tokenUris))
   }
 
   /** Replay the same range twice at two data versions, LWW-merge, then

@@ -22,6 +22,35 @@ import graft.ops.Reconcile
   */
 object VerifyPipeline {
 
+  /** The report row every section emits: (check, collection_id,
+    * token_id, detail); a replacement id column comes named. */
+  private def report(df: DataFrame, check: String, detail: Column,
+      tokenId: Column = col("token_id"),
+      collectionId: Column = col("collection_id")): DataFrame =
+    df.select(lit(check).as("check"), collectionId, tokenId, detail.as("detail"))
+
+  /** The token_id of a collection-grain row. */
+  private def noToken: Column = lit(null).cast("string").as("token_id")
+
+  /** `<tag>:db=<db>,chain=<chain>`: the stored value against chain
+    * truth. */
+  private def mismatch(db: Column, chain: Column, tag: String = "mismatch"): Column =
+    concat(lit(s"$tag:db="), db, lit(",chain="), chain)
+
+  /** A [[mismatch]] side that may be null, rendered `-`. */
+  private def orDash(c: Column): Column = coalesce(c.cast("string"), lit("-"))
+
+  /** The rows of `df` whose collection is one of `collections` — the
+    * classification gate of the per-token checks (broadcast: the dim is
+    * sized by collections). */
+  private def ofCollections(df: DataFrame, collections: DataFrame): DataFrame =
+    df.join(broadcast(collections.select(col("collection_id")).distinct()),
+      Seq("collection_id"), "left_semi")
+
+  /** A probe's state height: the verify height, or null for the head. */
+  private def heightCol(blockHeight: Option[Long]): Column =
+    blockHeight.map(h => lit(h)).getOrElse(lit(null).cast("long"))
+
   def transfersReport(chain: DataFrame, db: DataFrame): DataFrame = {
     // the reference's verify_transfer compares every stored field
     // (`verify.py:852-934`): beyond the from/to/quantity core, the
@@ -32,30 +61,26 @@ object VerifyPipeline {
     val compare = Seq("from_", "to_", "quantity") ++
       Seq("transaction_hash", "transaction_type")
         .filter(c => chain.columns.contains(c) && db.columns.contains(c))
-    Reconcile.fullOuter(
+    report(Reconcile.fullOuter(
         chain.select((keys ++ compare).map(col): _*),
         db.select((keys ++ compare).map(col): _*),
         keys = keys, compareCols = compare)
-      .filter(col("status") =!= "match")
-      .select(lit("transfers").as("check"), col("collection_id"), col("token_id"),
-        // mismatch rows name the differing fields — `mismatch:from_,to_`
-        // — the reference verify's per-field granularity
-        // (`nft/bin/verify.py:852-934`).
-        concat(col("status"),
-          when(size(col("mismatch_cols")) > 0,
-            concat(lit(":"), array_join(col("mismatch_cols"), ","))).otherwise(lit("")))
-          .as("detail"))
+      .filter(col("status") =!= "match"), "transfers",
+      // mismatch rows name the differing fields — `mismatch:from_,to_`
+      // — the reference verify's per-field granularity
+      // (`nft/bin/verify.py:852-934`).
+      concat(col("status"),
+        when(size(col("mismatch_cols")) > 0,
+          concat(lit(":"), array_join(col("mismatch_cols"), ","))).otherwise(lit(""))))
   }
 
   def ownersReport(chainOwners: DataFrame, dbOwners: DataFrame): DataFrame = {
     val keys = Seq("collection_id", "token_id", "account")
-    Reconcile.fullOuter(
+    report(Reconcile.fullOuter(
         chainOwners.select((keys :+ "quantity").map(col): _*),
         dbOwners.select((keys :+ "quantity").map(col): _*),
         keys, Seq("quantity"))
-      .filter(col("status") =!= "match")
-      .select(lit("owners").as("check"), col("collection_id"), col("token_id"),
-        col("status").as("detail"))
+      .filter(col("status") =!= "match"), "owners", col("status"))
   }
 
   def countsReport(dbTokens: DataFrame, supplySnapshot: DataFrame): DataFrame = {
@@ -73,13 +98,10 @@ object VerifyPipeline {
       case _ =>
         supplySnapshot.withColumn("total_supply", col("total_supply").cast("string"))
     }
-    dbTokens.groupBy(col("collection_id")).agg(count(lit(1)).as("n_tokens"))
+    report(dbTokens.groupBy(col("collection_id")).agg(count(lit(1)).as("n_tokens"))
       .join(broadcast(supplyDec), Seq("collection_id"), "full_outer")
-      .filter(!(col("n_tokens").cast("string") <=> col("total_supply")))
-      .select(lit("counts").as("check"), col("collection_id"),
-        lit(null).cast("string").as("token_id"),
-        concat_ws("!=", col("n_tokens").cast("string"),
-          col("total_supply")).as("detail"))
+      .filter(!(col("n_tokens").cast("string") <=> col("total_supply"))), "counts",
+      concat_ws("!=", col("n_tokens").cast("string"), col("total_supply")), noToken)
   }
 
   def run(chainTransfers: DataFrame, dbTransfers: DataFrame,
@@ -113,9 +135,7 @@ object VerifyPipeline {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       options: Map[String, String] = Map.empty): DataFrame = {
     val sel = graft.expr.Keccak.functionSelector("ownerOf(uint256)")
-    val owned = dbTokens.filter(col("current_owner").isNotNull)
-      .join(broadcast(erc721Collections.select(col("collection_id")).distinct()),
-        Seq("collection_id"), "left_semi")
+    val owned = ofCollections(dbTokens.filter(col("current_owner").isNotNull), erc721Collections)
       .select(col("collection_id"), col("token_id"), lower(col("current_owner")).as("db_owner"))
     val requests = owned.select(
       col("collection_id").as("to"),
@@ -126,23 +146,22 @@ object VerifyPipeline {
         // return payload is one 32-byte word; the address is its low 20
         when(col("result").isNotNull,
           lower(concat(lit("0x"), substring(col("result"), -40, 40)))).as("chain_owner"))
-    owned.join(answers, Seq("collection_id", "token_id"), "left")
-      .filter(col("chain_owner").isNull || col("chain_owner") =!= col("db_owner"))
-      .select(lit("token_owner").as("check"), col("collection_id"), col("token_id"),
-        when(col("chain_owner").isNull, lit("unanswered"))
-          .otherwise(concat(lit("mismatch:db="), col("db_owner"),
-            lit(",chain="), col("chain_owner"))).as("detail"))
+    report(owned.join(answers, Seq("collection_id", "token_id"), "left")
+      .filter(col("chain_owner").isNull || col("chain_owner") =!= col("db_owner")),
+      "token_owner", when(col("chain_owner").isNull, lit("unanswered"))
+        .otherwise(mismatch(col("db_owner"), col("chain_owner"))))
   }
 
   /** Per-token METADATA-URL probe — the reference verify's tokenURI
     * check (`nft/bin/verify.py:188-202,686-690`: call
     * `tokenURI(token_id)` at the verify height per ERC-721 token and
     * compare against the stored metadata_url). Same columnar shape as
-    * [[tokenOwnersReport]]; the chain answer is decoded and
-    * `{id}`-canonicalized with the SAME rule the crawl applies
-    * ([[graft.nft.TokenUris.fromMints]]) — the reference compares the
-    * raw probe value, but our db stores the canonicalized form, so the
-    * compare must too or every templated URI would read as corruption.
+    * [[tokenOwnersReport]]; the chain answer is decoded and passed
+    * through the crawl's own URL rule ([[graft.nft.TokenUris.canonicalize]])
+    * — the reference compares the raw probe value, but our db stores the
+    * canonical form, so the compare must too or every templated URI (or
+    * URL past the P10 cap the crawl refused to store) would read as
+    * corruption.
     * Disagreement rows (null-safe: null==null is clean):
     *  - `mismatch:db=…,chain=…` — including a null side rendered `-`
     * `blockHeight`: the verify command's ending block (the reference's
@@ -155,9 +174,7 @@ object VerifyPipeline {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       options: Map[String, String] = Map.empty): DataFrame = {
     val sel = graft.expr.Keccak.functionSelector("tokenURI(uint256)")
-    val withUrl =
-      if (dbTokens.columns.contains("metadata_url")) dbTokens
-      else dbTokens.withColumn("metadata_url", lit(null).cast("string"))
+    val withUrl = graft.nft.TokenUris.withMetadataUrl(dbTokens)
     // probe a token iff the db CLAIMS a URL or its mint is in-window
     // (mint_block set) — the tokenOwnersReport precedent
     // (current_owner-null rows are skipped there): a transfer-only
@@ -167,34 +184,23 @@ object VerifyPipeline {
     val mintCol =
       if (withUrl.columns.contains("mint_block")) col("mint_block")
       else lit(null).cast("long")
-    val tokens = withUrl
-      .filter(col("metadata_url").isNotNull || mintCol.isNotNull)
-      .join(broadcast(erc721Collections.select(col("collection_id")).distinct()),
-        Seq("collection_id"), "left_semi")
+    val tokens = ofCollections(
+        withUrl.filter(col("metadata_url").isNotNull || mintCol.isNotNull), erc721Collections)
       .select(col("collection_id"), col("token_id"), col("metadata_url").as("db_url"))
     val requests = tokens.select(
       col("collection_id").as("to"),
       col("token_id").as("probe"),
       concat(lit(sel), col("token_id")).as("data"),
-      blockHeight.map(h => lit(h)).getOrElse(lit(null).cast("long")).as("block"))
+      heightCol(blockHeight).as("block"))
     val answers = graft.rpc.Calls.execute(spark, requests, callExecutor, options)
       .select(col("to").as("collection_id"), col("probe").as("token_id"),
         when(col("result").isNotNull,
           graft.expr.Abi.decodeStringUdf(col("result"), lit(0))).as("chain_url"))
-    tokens.join(answers, Seq("collection_id", "token_id"), "left")
-      .withColumn("chain_url",
-        regexp_replace(col("chain_url"), lit("\\{id\\}"), col("token_id")))
-      // P10 cap mirrored from the crawl (`TokenUris.fromMints`,
-      // `dynamodb.py:160-167`): the crawl REFUSED to store a URL over
-      // 2048 chars, so a long chain answer must compare as null here —
-      // otherwise every legitimately-uncapped-on-chain URL reads as
-      // `mismatch:db=-` corruption forever
-      .withColumn("chain_url",
-        when(length(col("chain_url")) <= 2048, col("chain_url")))
-      .filter(!(col("chain_url") <=> col("db_url")))
-      .select(lit("token_uri").as("check"), col("collection_id"), col("token_id"),
-        concat(lit("mismatch:db="), coalesce(col("db_url"), lit("-")),
-          lit(",chain="), coalesce(col("chain_url"), lit("-"))).as("detail"))
+    report(graft.nft.TokenUris.canonicalize(
+        tokens.join(answers, Seq("collection_id", "token_id"), "left"),
+        "chain_url", col("chain_url"), dropOverCap = false)
+      .filter(!(col("chain_url") <=> col("db_url"))),
+      "token_uri", mismatch(orDash(col("db_url")), orDash(col("chain_url"))))
   }
 
   /** COLLECTIONS-table verify — the reference's `verify_collection`
@@ -232,10 +238,7 @@ object VerifyPipeline {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       options: Map[String, String] = Map.empty): DataFrame = {
     val colls = dbCollections.select(col("collection_id")).distinct()
-    val snapshot = graft.rpc.Calls.interfaceSnapshot(
-      graft.rpc.Calls.execute(spark, graft.nft.Collections.callRequests(colls),
-        callExecutor, options))
-    val chain = snapshot.select(
+    val chain = graft.nft.Collections.probe(spark, colls, callExecutor, options).select(
       col("collection_id"),
       when(col("supports_erc721"), lit("ERC-721"))
         .when(col("supports_erc1155"), lit("ERC-1155"))
@@ -249,13 +252,10 @@ object VerifyPipeline {
     val joined = dbCollections.join(broadcast(chain), Seq("collection_id"), "left")
       // probe lineage feeds one filter branch per compared field
       .localCheckpoint(true)
-    def row(detail: Column) =
-      Seq(lit("collection").as("check"), col("collection_id"),
-        lit(null).cast("string").as("token_id"), detail.as("detail"))
+    def rows(df: DataFrame, detail: Column) = report(df, "collection", detail, noToken)
     def fieldCheck(tag: String, db: String): DataFrame =
-      joined.filter(!(col(db) <=> col(s"c_$db")))
-        .select(row(concat(lit(s"$tag:db="), coalesce(col(db).cast("string"), lit("-")),
-          lit(",chain="), coalesce(col(s"c_$db").cast("string"), lit("-")))): _*)
+      rows(joined.filter(!(col(db) <=> col(s"c_$db"))),
+        mismatch(orDash(col(db)), orDash(col(s"c_$db")), tag))
     val probeChecks = Seq(
       "specification" -> "specification", "name" -> "name",
       "name_lower" -> "name_lower", "symbol" -> "symbol",
@@ -263,28 +263,23 @@ object VerifyPipeline {
       .map { case (tag, c) => fieldCheck(tag, c) }
       .reduce(_ unionByName _)
     val dateCheck = blockTimes.map { times =>
-      joined.join(broadcast(times.select(col("number"), col("timestamp"))),
+      rows(joined.join(broadcast(times.select(col("number"), col("timestamp"))),
           col("block_created") === col("number"), "left")
         .filter(col("number").isNotNull && // uncovered block -> skip
-          !(col("date_created") <=> col("timestamp")))
-        .select(row(concat(lit("date_created:db="),
-          coalesce(col("date_created").cast("string"), lit("-")),
-          lit(",chain="), col("timestamp").cast("string"))): _*)
+          !(col("date_created") <=> col("timestamp"))),
+        mismatch(orDash(col("date_created")), col("timestamp").cast("string"), "date_created"))
     }
     val creatorCheck = creationReceipts.map { receipts =>
-      val created = receipts
-        .filter(col("contract_address").isNotNull && col("status") === 1)
+      val created = graft.nft.Collections.creations(receipts)
         .select(col("contract_address").as("collection_id"),
           col("block_number").as("block_created"),
           col("from_").as("c_creator"))
       val withChain = joined
         .join(broadcast(created), Seq("collection_id", "block_created"), "left")
-      withChain.filter(col("c_creator").isNotNull && col("c_creator") =!= col("creator"))
-        .select(row(concat(lit("creator:db="), col("creator"),
-          lit(",chain="), col("c_creator"))): _*)
-        .unionByName(withChain
-          .filter(col("c_creator").isNull && receiptsCover)
-          .select(row(lit("creation-not-found")): _*))
+      rows(withChain.filter(col("c_creator").isNotNull && col("c_creator") =!= col("creator")),
+          mismatch(col("creator"), col("c_creator"), "creator"))
+        .unionByName(rows(withChain.filter(col("c_creator").isNull && receiptsCover),
+          lit("creation-not-found")))
     }
     (Seq(probeChecks) ++ dateCheck ++ creatorCheck).reduce(_ unionByName _)
   }
@@ -307,26 +302,18 @@ object VerifyPipeline {
     * dims and a filter; no probes, no shuffle beyond the dims. */
   def tokenShapeReport(dbTokens: DataFrame,
       erc721Collections: DataFrame, erc1155Collections: DataFrame): DataFrame = {
-    def dim(df: DataFrame) =
-      broadcast(df.select(col("collection_id")).distinct())
     val one = graft.expr.HexMath.pad64("1")
     val mintCol =
       if (dbTokens.columns.contains("mint_block")) col("mint_block")
       else lit(null).cast("long")
-    val qty721 = dbTokens
-      .join(dim(erc721Collections), Seq("collection_id"), "left_semi")
-      .filter(mintCol.isNotNull && !(col("quantity") <=> lit(one)))
-      .select(lit("token_shape").as("check"), col("collection_id"), col("token_id"),
-        concat(lit("quantity:db="), coalesce(col("quantity"), lit("-")),
-          lit(",expected="), lit(one)).as("detail"))
-    val owner1155 = dbTokens
-      .join(dim(erc1155Collections), Seq("collection_id"), "left_semi")
-      .filter(col("original_owner").isNotNull || col("current_owner").isNotNull)
-      .select(lit("token_shape").as("check"), col("collection_id"), col("token_id"),
-        concat_ws(",",
-          when(col("original_owner").isNotNull, lit("original-owner-set-on-1155")),
-          when(col("current_owner").isNotNull, lit("current-owner-set-on-1155")))
-          .as("detail"))
+    val qty721 = report(ofCollections(dbTokens, erc721Collections)
+      .filter(mintCol.isNotNull && !(col("quantity") <=> lit(one))), "token_shape",
+      concat(lit("quantity:db="), orDash(col("quantity")), lit(",expected="), lit(one)))
+    val owner1155 = report(ofCollections(dbTokens, erc1155Collections)
+      .filter(col("original_owner").isNotNull || col("current_owner").isNotNull),
+      "token_shape", concat_ws(",",
+        when(col("original_owner").isNotNull, lit("original-owner-set-on-1155")),
+        when(col("current_owner").isNotNull, lit("current-owner-set-on-1155"))))
     qty721.unionByName(owner1155)
   }
 
@@ -344,9 +331,9 @@ object VerifyPipeline {
     *    effective chain truth (event wins over contract,
     *    `verify.py:716-727`); like the reference, a token with NEITHER
     *    an event nor a uri() answer is never flagged
-    * Chain answers are `{id}`-canonicalized and P10-capped exactly like
-    * the crawl stores them (`Derive.uriUpdates`), so templated URIs
-    * compare cleanly. Shape: one support probe per collection
+    * Chain answers go through the crawl's own URL rule
+    * ([[graft.nft.TokenUris.canonicalize]]), so templated URIs compare
+    * cleanly. Shape: one support probe per collection
     * (broadcast back), one uri() probe per token, every join keyed on
     * (collection_id, token_id) — a billion-token audit shuffles once.
     *
@@ -359,10 +346,7 @@ object VerifyPipeline {
       blockHeight: Option[Long] = None,
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       options: Map[String, String] = Map.empty): DataFrame = {
-    val withUrl =
-      if (db1155Tokens.columns.contains("metadata_url")) db1155Tokens
-      else db1155Tokens.withColumn("metadata_url", lit(null).cast("string"))
-    val tokens = withUrl
+    val tokens = graft.nft.TokenUris.withMetadataUrl(db1155Tokens)
       .select(col("collection_id"), col("token_id"), col("metadata_url").as("db_url"))
     // one supportsInterface(ERC1155MetadataURI) probe per collection —
     // the reference caches this per contract (`verify.py:114-124`)
@@ -380,38 +364,27 @@ object VerifyPipeline {
       .join(broadcast(supporting), Seq("collection_id"), "left_semi")
       .select(col("collection_id").as("to"), col("token_id").as("probe"),
         concat(lit(uriSel), col("token_id")).as("data"),
-        blockHeight.map(h => lit(h)).getOrElse(lit(null).cast("long")).as("block"))
+        heightCol(blockHeight).as("block"))
     val contractUris = graft.rpc.Calls.execute(spark, uriReqs, callExecutor, options)
       .select(col("to").as("collection_id"), col("probe").as("token_id"),
         when(col("result").isNotNull,
           graft.expr.Abi.decodeStringUdf(col("result"), lit(0))).as("contract_url"))
-    val lastEvent = graft.ops.Lww.merge(
-      uriEvents.select(col("collection_id"), col("token_id"),
-        col("metadata_url"), col("metadata_url_version")),
-      Seq("collection_id", "token_id"), Seq("metadata_url_version"))
-      .select(col("collection_id"), col("token_id"), col("metadata_url").as("event_url"))
-    val joined = tokens
-      .join(lastEvent, Seq("collection_id", "token_id"), "left")
-      .join(contractUris, Seq("collection_id", "token_id"), "left")
-      // canonicalize + cap the contract answer like the crawl stored
-      // form (uriEvents are already canonical from Derive.uriUpdates)
-      .withColumn("contract_url",
-        regexp_replace(col("contract_url"), lit("\\{id\\}"), col("token_id")))
-      .withColumn("contract_url",
-        when(length(col("contract_url")) <= 2048, col("contract_url")))
+    // the contract answer takes the crawl's stored form (the URI
+    // events already did, in Derive.uriUpdates)
+    val joined = graft.nft.TokenUris.canonicalize(tokens
+        .join(graft.nft.TokenUris.latest(uriEvents, "event_url"),
+          Seq("collection_id", "token_id"), "left")
+        .join(contractUris, Seq("collection_id", "token_id"), "left"),
+        "contract_url", col("contract_url"), dropOverCap = false)
       .localCheckpoint(true) // warnings + errors: probe lineage runs once
-    val warnings = joined
+    val warnings = report(joined
       .filter(col("event_url").isNotNull && col("contract_url").isNotNull &&
-        col("event_url") =!= col("contract_url"))
-      .select(lit("token_uri_1155").as("check"), col("collection_id"), col("token_id"),
-        concat(lit("warning:event="), col("event_url"),
-          lit(",contract="), col("contract_url")).as("detail"))
-    val errors = joined
+        col("event_url") =!= col("contract_url")), "token_uri_1155",
+      concat(lit("warning:event="), col("event_url"), lit(",contract="), col("contract_url")))
+    val errors = report(joined
       .withColumn("chain_url", coalesce(col("event_url"), col("contract_url")))
-      .filter(col("chain_url").isNotNull && !(col("chain_url") <=> col("db_url")))
-      .select(lit("token_uri_1155").as("check"), col("collection_id"), col("token_id"),
-        concat(lit("mismatch:db="), coalesce(col("db_url"), lit("-")),
-          lit(",chain="), col("chain_url")).as("detail"))
+      .filter(col("chain_url").isNotNull && !(col("chain_url") <=> col("db_url"))),
+      "token_uri_1155", mismatch(orDash(col("db_url")), col("chain_url")))
     warnings.unionByName(errors)
   }
 
@@ -447,10 +420,8 @@ object VerifyPipeline {
       callExecutor: String = graft.rpc.CallExecutor.Simulated,
       options: Map[String, String] = Map.empty,
       chunkSize: Int = 4096): DataFrame = {
-    val blockCol = blockHeight.map(h => lit(h)).getOrElse(lit(null).cast("long"))
-    val colls = dbTokens
-      .join(broadcast(erc721Collections.select(col("collection_id")).distinct()),
-        Seq("collection_id"), "left_semi")
+    val blockCol = heightCol(blockHeight)
+    val colls = ofCollections(dbTokens, erc721Collections)
       .select(col("collection_id")).distinct()
     // two probes per collection at the verify height: the extension
     // flag and the enumerable supply (`verify.py:74-88,129-130`)
@@ -474,11 +445,8 @@ object VerifyPipeline {
           graft.expr.Abi.wordToLong(graft.expr.Abi.dataWord(col("result"), 1))))
           .as("n"))
       .localCheckpoint(true) // gate probes run once across both branches
-    val notEnumerable = gates
-      .filter(!col("enumerable") || col("n").isNull)
-      .select(lit("enumeration").as("check"), col("collection_id"),
-        lit(null).cast("string").as("token_id"),
-        lit("warning:not-enumerable").as("detail"))
+    val notEnumerable = report(gates.filter(!col("enumerable") || col("n").isNull),
+      "enumeration", lit("warning:not-enumerable"), noToken)
     val enumerable = gates.filter(col("enumerable") && col("n").isNotNull && col("n") > 0)
     // index domain [0, n) as chunk starts -> repartition -> explode:
     // no single task ever materializes a supply-sized array
@@ -497,10 +465,8 @@ object VerifyPipeline {
         blockCol.as("block"))
     val answers = graft.rpc.Calls.execute(spark, idxReqs, callExecutor, options)
       .localCheckpoint(true) // probe lineage feeds two report branches
-    val unanswered = answers.filter(col("result").isNull)
-      .select(lit("enumeration").as("check"), col("to").as("collection_id"),
-        lit(null).cast("string").as("token_id"),
-        concat(lit("warning:unanswered-index="), col("probe")).as("detail"))
+    val unanswered = report(answers.filter(col("result").isNull), "enumeration",
+      concat(lit("warning:unanswered-index="), col("probe")), noToken, col("to").as("collection_id"))
     val chainIds = answers.filter(col("result").isNotNull)
       .select(col("to").as("collection_id"),
         graft.expr.Abi.dataWord(col("result"), 1).as("token_id"))
@@ -508,13 +474,11 @@ object VerifyPipeline {
       .join(broadcast(enumerable.select(col("collection_id"))),
         Seq("collection_id"), "left_semi")
       .select(col("collection_id"), col("token_id")).distinct()
-    val reconciled = chainIds.withColumn("on_chain", lit(1))
+    val reconciled = report(chainIds.withColumn("on_chain", lit(1))
       .join(dbIds.withColumn("in_db", lit(1)),
         Seq("collection_id", "token_id"), "full_outer")
-      .filter(col("on_chain").isNull || col("in_db").isNull)
-      .select(lit("enumeration").as("check"), col("collection_id"), col("token_id"),
-        when(col("in_db").isNull, lit("missing:chain=1"))
-          .otherwise(lit("extra:db=1")).as("detail"))
+      .filter(col("on_chain").isNull || col("in_db").isNull), "enumeration",
+      when(col("in_db").isNull, lit("missing:chain=1")).otherwise(lit("extra:db=1")))
     notEnumerable.unionByName(unanswered).unionByName(reconciled)
   }
 
@@ -561,9 +525,8 @@ object VerifyPipeline {
       // events from the window's logs and the per-mint tokenURI probes
       // (same derivations, same executor seam — verify re-walks the
       // crawl's own access paths, the reference verify's structure)
-      val chainUris = graft.nft.Derive.uriUpdates(logsM)
-        .unionByName(graft.nft.TokenUris.fromMints(spark, chainTransfers,
-          callExecutor, fetcherOptions))
+      val chainUris = graft.nft.TokenUris.updates(logsM,
+        graft.nft.TokenUris.fromMints(spark, chainTransfers, callExecutor, fetcherOptions))
       baseReport.unionByName(urisReport(du, chainUris))
     }
     // the reference verify's ERC-1155 metadata branch: last URI event
@@ -586,19 +549,11 @@ object VerifyPipeline {
     *  - `mismatch:db=…,chain=…` — both present, different (e.g. a stale
     *    LWW loser persisted) */
   def urisReport(dbUris: DataFrame, chainUris: DataFrame): DataFrame = {
-    val keys = Seq("collection_id", "token_id")
-    def latest(df: DataFrame, as: String) =
-      graft.ops.Lww.merge(
-        df.select(col("collection_id"), col("token_id"),
-          col("metadata_url"), col("metadata_url_version")),
-        keys, Seq("metadata_url_version"))
-        .select(col("collection_id"), col("token_id"), col("metadata_url").as(as))
-    latest(dbUris, "db_url").join(latest(chainUris, "chain_url"), keys, "full_outer")
-      .filter(!(col("db_url") <=> col("chain_url")))
-      .select(lit("uri").as("check"), col("collection_id"), col("token_id"),
-        when(col("db_url").isNull, concat(lit("missing:chain="), col("chain_url")))
-          .when(col("chain_url").isNull, concat(lit("extra:db="), col("db_url")))
-          .otherwise(concat(lit("mismatch:db="), col("db_url"),
-            lit(",chain="), col("chain_url"))).as("detail"))
+    import graft.nft.TokenUris.{latest, Keys}
+    report(latest(dbUris, "db_url").join(latest(chainUris, "chain_url"), Keys, "full_outer")
+      .filter(!(col("db_url") <=> col("chain_url"))), "uri",
+      when(col("db_url").isNull, concat(lit("missing:chain="), col("chain_url")))
+        .when(col("chain_url").isNull, concat(lit("extra:db="), col("db_url")))
+        .otherwise(mismatch(col("db_url"), col("chain_url"))))
   }
 }

@@ -391,6 +391,9 @@ final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTri
                                        fetcherOptions: Map[String, String],
                                        readerFactory: PartitionReaderFactory)
     extends MicroBatchStream {
+  // a negative trail would put the available offset AHEAD of the head,
+  // streaming blocks past maxBlock
+  require(trailBlocks >= 0, s"trailBlocks must be non-negative, got $trailBlocks")
   private var head: Long = start
   // live chain-head polling when the fetcher supports it (RPC fetchers
   // do); the head still advances at most blocksPerTrigger per poll —
@@ -430,7 +433,7 @@ final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTri
   // monotone during normal processing.
   override def deserializeOffset(json: String): Offset = {
     val o = json.toLong
-    head = math.max(head, math.min(maxBlock, BlockWindow.satAdd(o, math.max(0L, trailBlocks))))
+    head = math.max(head, math.min(maxBlock, BlockWindow.satAdd(o, trailBlocks)))
     BlockOffset(o)
   }
 

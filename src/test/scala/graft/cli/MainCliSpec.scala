@@ -290,6 +290,56 @@ class MainCliSpec extends SparkSpec {
     assert(flagged.length === 1 && flagged.head.getAs[String]("detail") === "left_only")
   }
 
+  test("verify and force over RPC: per-method wire counts are pinned") {
+    // a refactor that re-runs a probe or fetch lineage doubles wire
+    // cost silently; these counts pin each command's calls per method
+    val db = tmp("cli_wc_db")
+    val stub = new graft.rpc.StubRpcServer()
+    def counts = Seq("eth_getLogs", "eth_call", "eth_getTransactionReceipt").map(stub.countOf)
+    try {
+      assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db,
+        "--evm-rpc-nodes", stub.url)) === 0)
+      stub.methodCounts.clear()
+      Main.run(spark, Seq("verify", "0", "40", "--db", db, "--out", tmp("cli_wc_rpt") + "/r",
+        "--evm-rpc-nodes", stub.url))
+      assert(counts === Seq(4, 64, 60), "verify: getLogs, call, getTransactionReceipt")
+      stub.methodCounts.clear()
+      assert(Main.run(spark, Seq("force", f"0x${4000L}%040x", "35", "50",
+        "--out", tmp("cli_wc_force"), "--evm-rpc-nodes", stub.url)) === 0)
+      assert(counts === Seq(24, 9, 4), "force: getLogs, call, getTransactionReceipt")
+    } finally stub.stop()
+  }
+
+  test("crawl and verify share the metadata-URL rule: {id} templates and over-cap URLs verify clean") {
+    val db = tmp("cli_url_db")
+    val stub = new graft.rpc.StubRpcServer()
+    def hex64(n: Long) = f"$n%064x"
+    // token 51 of contract 4000 (minted in block 5) answers the sim's
+    // `ipfs://sim/4000/{id}.json` template; token 50 is served a URL
+    // past the 2048-char cap, which the crawl must not store and verify
+    // must read as the same absent URL
+    val coll = f"0x${4000L}%040x"
+    val tokenUri = graft.expr.Keccak.functionSelector("tokenURI(uint256)")
+    stub.callOverrides.put((coll, tokenUri + hex64(50)), "0x" + graft.expr.Abi.encodeArgs(
+      Seq(graft.expr.Abi.AbiString("ipfs://sim/4000/" + "x" * 2100 + ".json"))))
+    try {
+      assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db,
+        "--evm-rpc-nodes", stub.url)) === 0)
+      val urls = spark.read.parquet(s"$db/tokens").filter(col("collection_id") === coll)
+        .collect().map(r => r.getAs[String]("token_id") -> r.getAs[String]("metadata_url")).toMap
+      assert(urls(hex64(51)) === s"ipfs://sim/4000/${hex64(51)}.json")
+      assert(urls(hex64(50)) === null)
+      assert(spark.read.parquet(s"$db/uris")
+        .filter(col("collection_id") === coll && col("token_id") === hex64(50)).count() === 0)
+      val rpt = tmp("cli_url_rpt") + "/r"
+      Main.run(spark, Seq("verify", "0", "40", "--db", db, "--out", rpt,
+        "--evm-rpc-nodes", stub.url))
+      val urlRows = spark.read.parquet(rpt)
+        .filter(col("check").isin("token_uri", "token_uri_1155", "uri")).collect()
+      assert(urlRows.isEmpty, urlRows.mkString("\n"))
+    } finally stub.stop()
+  }
+
   test("verify resolves a log-format transfers table: replayed epochs are not discrepancies") {
     val db = tmp("cli_db_log")
     assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db)) === 0)

@@ -60,6 +60,10 @@ final class StubRpcServer(chainHeight: Long = Long.MaxValue, maxBatch: Int = Int
     * partition count; an unbounded value means batches pile up). */
   val maxConcurrentRequests = new AtomicInteger(0)
   private val inFlight = new AtomicInteger(0)
+  /** eth_call answers served instead of the simulated contract's, keyed
+    * by (to, calldata): puts a contract answer on the wire that the sim
+    * never produces (e.g. a metadata URL past the P10 cap). */
+  val callOverrides = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   /** Name prefix of this stub's handler threads. */
@@ -200,7 +204,8 @@ final class StubRpcServer(chainHeight: Long = Long.MaxValue, maxBatch: Int = Int
           case JString(tag) if tag.startsWith("0x") =>
             java.lang.Long.parseLong(tag.drop(2), 16)
         }
-        SimulatedCallExecutor.answer(to, data, blockHeight) match {
+        Option(callOverrides.get((to, data)))
+          .orElse(SimulatedCallExecutor.answer(to, data, blockHeight)) match {
           case Some(hex) => result(id, JString(hex))
           case None => errorObj(id, 3, "execution reverted")
         }

@@ -315,4 +315,24 @@ class BlockDataSourceSpec extends SparkSpec {
     assert((got.getLong(0), got.getLong(1), got.getLong(2)) === ((250L, 0L, 249L)))
     assert(got.getLong(3) === (0L until 250L).map(_ % 3).sum)
   }
+
+  test("a negative trailBlocks is refused, naming the option, not streamed past maxBlock") {
+    // a negative trail would put the available offset ahead of the
+    // head: [0, 100) with trailBlocks = -5 used to deliver 105 blocks
+    val ckpt = java.nio.file.Files.createTempDirectory("bd_neg_trail").toString
+    val q = spark.readStream.format("blocks")
+      .option("start", "0").option("maxBlock", "100")
+      .option("trailBlocks", "-5")
+      .load()
+      .select(col("number"))
+      .writeStream.format("memory").queryName("neg_trail_out")
+      .option("checkpointLocation", ckpt)
+      .start()
+    val err = try intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    } finally q.stop()
+    val msg = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" / ")
+    assert(msg.contains("trailBlocks") && msg.contains("-5"), msg)
+  }
 }
