@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.nft.{Collections, TokenUris}
 import graft.ops.SinkUtils
-import graft.pipelines.{Crawl, Load, Prepare, VerifyPipeline}
+import graft.pipelines.{Crawl, Load, VerifyPipeline}
 import graft.rpc.CallExecutor
 import graft.sources.{BlockDataFetcher, LogsFetcher, ReceiptDataFetcher, TypedRangeSource}
 
@@ -56,68 +56,6 @@ object Main {
       |  reset              delete the five entity tables under --out (and the
       |                     bookmark/data_version store under --config if given)
       |                     so the next crawl/tail starts from nothing
-      |  prepare DATA_DIR   LLM training-data pipeline over the documents table:
-      |                     optional compression-ratio junk gate
-      |                     (--min-compress-ratio F: DEFLATE ratio < F drops) ->
-      |                     quality gate -> optional learned classifier ->
-      |                     optional benchmark decontamination -> near-dup
-      |                     dedup -> PII mask -> stratified sample -> shuffle
-      |                     shards -> sequence pack; prints the per-stage row
-      |                     funnel (--out; --quality-frac F [0.25];
-      |                     --shards N [16]; --seq-len N [256];
-      |                     --classifier CSV token,weight milli-unit table with
-      |                     --classifier-bias N [0] --classifier-threshold F [0.0];
-      |                     --bench DIR parquet eval set to decontaminate against)
-      |  ingest DOCS_DIR    continuously ingest parquet documents dropped into
-      |                     DOCS_DIR: per-micro-batch near-dup dedup against the
-      |                     standing band index, with prepare's optional
-      |                     --classifier/--bench gates, --cdc (chunk-grain
-      |                     revision gate, --cdc-dup-frac F [0.5]), and
-      |                     --embed-threshold F (semantic near-dup gate over an
-      |                     embedding column: standing sign-bucket index,
-      |                     quantized cosine >= F drops; --embed-pq stores
-      |                     PQ codes instead of vectors, ~64x smaller
-      |                     index, ADC-scored); survivors
-      |                     land at $out/corpus, indexes beside it
-      |                     (--out, --checkpoint; --once drains and stops;
-      |                     --compact-index-every N folds the indexes' epoch
-      |                     partitions so per-batch listing stays bounded;
-      |                     --drift records each batch's token-distribution
-      |                     L1 drift vs the standing corpus under $out/drift
-      |                     and prints the per-batch ledger)
-      |  index-build EMB_DIR
-      |                     train + persist the ANN standing index over a
-      |                     (vec_id, embedding[, label]) parquet: coarse IVF
-      |                     centroids, PQ codebooks, and the encoded corpus
-      |                     (cell + 8 codes + rnrm per vector) land under --out
-      |                     (--nlist N [8] --iters N [2] --m N [8]
-      |                      --codes N [16] --dims N [64])
-      |  index-search EMB_DIR
-      |                     top-k neighbors from a standing --index WITHOUT
-      |                     retraining or rescanning raw vectors (IVFADC+R:
-      |                     cell-pruned compressed scan + exact rerank; raw
-      |                     vectors touched only for the Q x shortlist rerank
-      |                     fetch); queries = --ids I,J,... rows of EMB_DIR or
-      |                     --queries DIR, an external (vec_id, embedding)
-      |                     parquet (--k N [3] --nprobe N [2] --shortlist N [32])
-      |  fuzzy-index-build SRC_DIR
-      |                     persist the deletion-variant fuzzy-match index over
-      |                     an (id, str) parquet under --out
-      |                     (--k N [1] --id-col NAME [id] --str-col NAME [str])
-      |  fuzzy-search       edit-distance matches from a standing --index
-      |                     without re-enumerating the corpus; probes =
-      |                     --strings a,b,... or --queries DIR ((id, str)
-      |                     parquet); k comes from the index meta
-      |  er-resolve SRC_DIR
-      |                     entity resolution over an (id, name) parquet
-      |                     (conjunctive lev/trigram rule) -> --out entity
-      |                     table (--k N [1] --tau F [0.9] --id-col [id]
-      |                     --name-col [name])
-      |  er-assign BATCH_DIR
-      |                     place a batch against a standing --corpus
-      |                     (er-resolve output) with O(batch) pairing;
-      |                     bridges merge; rule comes from the corpus meta;
-      |                     optional --out parquet
       |  fixtures-prepare DATA_DIR
       |                     derive the graph + ER fixture relations from
       |                     DATA_DIR and persist them as parquet under --out;
@@ -174,7 +112,7 @@ object Main {
     * a typo'd option silently ignored is the worst CLI failure mode. */
   private val boolFlags = Set("--increment-data-version", "--once",
     "--owners-view", "--tokens-view", "--uris-view", "--collections-view",
-    "--log-topic", "--cdc", "--embed-pq", "--drift")
+    "--log-topic")
 
   private val knownOptions = Set(
     "blockchain", "evm-rpc-nodes", "rpc-batch", "rpc-timeout-ms", "num-partitions",
@@ -183,12 +121,7 @@ object Main {
     "checkpoint", "max-block", "buckets", "once", "start",
     "head-wait-ms", "head-probe-ms", "rpc-requests-per-second", "merge-format",
     "compact-every",
-    "owners-view", "tokens-view", "uris-view", "collections-view", "log-topic",
-    "quality-frac", "shards", "seq-len", "classifier", "classifier-bias",
-    "classifier-threshold", "bench", "cdc", "cdc-dup-frac", "compact-index-every",
-    "index", "ids", "queries", "k", "nprobe", "shortlist", "nlist", "iters",
-    "m", "codes", "dims", "embed-threshold", "embed-pq", "min-compress-ratio",
-    "id-col", "str-col", "strings", "tau", "name-col", "corpus", "drift")
+    "owners-view", "tokens-view", "uris-view", "collections-view", "log-topic")
 
   private[cli] def parse(args: Seq[String]): (String, Vector[String], Map[String, String]) = {
     if (args.isEmpty) throw CliError("no command given")
@@ -241,37 +174,6 @@ object Main {
 
   private def longOpt(opts: Map[String, String], key: String, default: Long): Long =
     opts.get(key).map(v => blockArg(s"--$key", v)).getOrElse(default)
-
-  private def doubleOpt(opts: Map[String, String], key: String, default: Double): Double =
-    opts.get(key).map(v => try v.toDouble catch {
-      case _: NumberFormatException => throw CliError(s"--$key: '$v' is not a number")
-    }).getOrElse(default)
-
-  /** `--classifier CSV` (+ `--classifier-bias/-threshold`) → the
-    * (weights, bias, threshold) triple `Classify.scoreLinear` takes —
-    * shared by `prepare` (batch stage 1b) and `ingest` (per-epoch
-    * gate). Weights are integer milli-units; malformed rows fail
-    * loudly. */
-  private def parseClassifier(spark: SparkSession,
-      opts: Map[String, String]): Option[(Seq[(String, Long)], Long, Double)] =
-    opts.get("classifier").map { path =>
-      val rows = spark.read.option("header", "true").csv(path)
-      if (!rows.columns.contains("token") || !rows.columns.contains("weight"))
-        throw CliError(s"--classifier: $path needs header columns token,weight")
-      val weights = rows.select("token", "weight").collect().map { r =>
-        val w = try r.getString(1).trim.toLong catch {
-          case _: NumberFormatException =>
-            throw CliError(s"--classifier: weight '${r.getString(1)}' is not an integer")
-        }
-        r.getString(0) -> w
-      }.toSeq
-      // plain signed long — a bias is not a block number
-      val bias = opts.get("classifier-bias").map(v => try v.toLong catch {
-        case _: NumberFormatException =>
-          throw CliError(s"--classifier-bias: '$v' is not an integer")
-      }).getOrElse(0L)
-      (weights, bias, doubleOpt(opts, "classifier-threshold", 0.0))
-    }
 
   /** Fetcher wiring: with --evm-rpc-nodes the RPC implementations ride
     * the same seams the simulated ones do. */
@@ -390,8 +292,11 @@ object Main {
           // --head-wait-ms: opt-in long-poll head (sub-interval latency)
           val headWait = Seq("head-wait-ms" -> "headWaitMs", "head-probe-ms" -> "headProbeMs")
             .collect { case (cli, opt) if opts.contains(cli) => opt -> longOpt(opts, cli, 0L).toString }
+          val blocksPerTrigger = intOpt(opts, "blocks-per-trigger", 64)
+          if (blocksPerTrigger < 1)
+            throw CliError(s"--blocks-per-trigger: must be at least 1, got $blocksPerTrigger")
           val receipts = spark.readStream.format("receipts")
-            .option("blocksPerTrigger", intOpt(opts, "blocks-per-trigger", 64).toString)
+            .option("blocksPerTrigger", blocksPerTrigger.toString)
             .option("trailBlocks", longOpt(opts, "trail-blocks", 0L).toString)
             .options(headWait.toMap)
             .options(TypedRangeSource.readOptions(start, longOpt(opts, "max-block", Long.MaxValue),
@@ -718,248 +623,6 @@ object Main {
             fs.exists(p) && fs.delete(p, true)
           }
           println(s"DB has been reset (${deleted.size} table(s) removed)")
-          0
-
-        case "prepare" =>
-          // the LLM-pipeline twin of `load`: the library Prepare program
-          // (every stage an already-tested operator) made operable like
-          // crawl/tail. The funnel prints as plain `stage rows` lines
-          // AND lands as parquet beside the corpus, so an operator can
-          // audit a finished run without re-executing it.
-          val Vector((_, dataDir)) = positional(pos, "prepare", "DATA_DIR")
-          val out = required(opts, "out")
-          val classifier = parseClassifier(spark, opts)
-          val bench = opts.get("bench").map(spark.read.parquet(_))
-          val funnel = Prepare.run(spark, dataDir, out,
-            qualityFrac = doubleOpt(opts, "quality-frac", 0.25),
-            nShards = intOpt(opts, "shards", 16),
-            seqLen = longOpt(opts, "seq-len", 256L),
-            classifier = classifier, bench = bench,
-            minCompressRatio = opts.get("min-compress-ratio")
-              .map(_ => doubleOpt(opts, "min-compress-ratio", 0.0)))
-          val rows = funnel.collect()
-          rows.foreach(r => println(s"${r.getString(0)} ${r.getLong(1)}"))
-          funnel.write.mode(SaveMode.Overwrite).parquet(s"$out/funnel")
-          println(s"prepared $dataDir into $out")
-          0
-
-        case "ingest" =>
-          // the STREAMING twin of `prepare`: continuously ingest parquet
-          // documents dropped into DOCS_DIR through the near-dup-aware
-          // gate stack (Ingest.startNearDupIngest) — per micro-batch
-          // band dedup against the standing index, plus the same
-          // optional classifier / decontamination gates prepare has and
-          // the chunk-grain revision gate (--cdc). Survivors land at
-          // $out/corpus; the standing indexes live beside it, so a
-          // stopped stream resumes exactly where it left off
-          // (checkpoint + epoch-partitioned idempotent sinks).
-          val Vector((_, docsDir)) = positional(pos, "ingest", "DOCS_DIR")
-          val out = required(opts, "out")
-          val checkpoint = required(opts, "checkpoint")
-          // file-stream sources need an explicit schema: infer it from
-          // the files already present (the drop dir must be seeded with
-          // at least one batch — same contract as spark.readStream)
-          val schema = spark.read.parquet(docsDir).schema
-          val stream = spark.readStream.schema(schema).parquet(docsDir)
-          val bench = opts.get("bench").map(p =>
-            graft.ops.Decontaminate.benchGate(spark.read.parquet(p)))
-          val cdc =
-            if (opts.contains("cdc"))
-              Some(graft.streaming.Ingest.CdcGate(s"$out/chunk_index",
-                dupFrac = doubleOpt(opts, "cdc-dup-frac", 0.5)))
-            else None
-          val embed =
-            if (opts.contains("embed-threshold"))
-              Some(graft.streaming.Ingest.EmbedGate(s"$out/embed_index",
-                threshold = doubleOpt(opts, "embed-threshold", 0.9),
-                usePq = opts.contains("embed-pq")))
-            else None
-          val drift = if (opts.contains("drift")) Some(s"$out/drift") else None
-          val q = graft.streaming.Ingest.startNearDupIngest(stream,
-            s"$out/band_index", s"$out/corpus", checkpoint,
-            bench = bench, classifier = parseClassifier(spark, opts), cdc = cdc,
-            embed = embed,
-            compactIndexEvery = opts.get("compact-index-every")
-              .map(v => longOpt(opts, "compact-index-every", 0L)),
-            drift = drift)
-          if (opts.contains("once")) { q.processAllAvailable(); q.stop() }
-          else q.awaitTermination()
-          println(s"ingested $docsDir into $out/corpus")
-          drift.foreach { root =>
-            graft.streaming.DriftIngest.driftHistory(spark, s"$root/ledger")
-              .orderBy(col("batch_id")).collect().foreach { r =>
-                println(s"drift batch=${r.getLong(0)} l1_ppm=${r.getLong(4)} " +
-                  s"batch_tokens=${r.getLong(2)} standing_tokens=${r.getLong(1)}")
-              }
-          }
-          0
-
-        case "index-build" =>
-          // build-once half of the ANN standing index: both quantizers
-          // trained with the deterministic integer k-means discipline,
-          // then the corpus encoded to (cell, codes, rnrm) — the 8-byte
-          // searchable form. Everything lands as plain parquet + a
-          // 1-row meta table, so search (and any other engine) can
-          // reconstruct the exact configuration without guessing.
-          val Vector((_, embDir)) = positional(pos, "index-build", "EMB_DIR")
-          val out = required(opts, "out")
-          val (m, dims, codes) = (intOpt(opts, "m", 8),
-            intOpt(opts, "dims", 64), intOpt(opts, "codes", 16))
-          val (nlist, iters) = (intOpt(opts, "nlist", 8), intOpt(opts, "iters", 2))
-          val emb = spark.read.parquet(embDir)
-          val centroids = graft.ops.Similarity.kmeansCentroids(emb, nlist, iters)
-          centroids.write.mode(SaveMode.Overwrite).parquet(s"$out/centroids")
-          val books = graft.ops.Pq.trainCodebooks(emb, m, codes, iters, dims)
-          graft.ops.Pq.booksToDf(spark, books)
-            .write.mode(SaveMode.Overwrite).parquet(s"$out/codebooks")
-          val index = graft.ops.Pq.encode(
-            graft.ops.Similarity.assignCells(graft.ops.Similarity.prep(emb),
-              spark.read.parquet(s"$out/centroids")), books, m, dims)
-          index.write.mode(SaveMode.Overwrite).parquet(s"$out/codes")
-          import spark.implicits._
-          Seq((m, dims, codes, nlist, iters))
-            .toDF("m", "dims", "codes", "nlist", "iters")
-            .write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
-          val n = spark.read.parquet(s"$out/codes").count()
-          println(s"indexed $n vectors into $out (nlist=$nlist, m=$m, codes=$codes)")
-          0
-
-        case "index-search" =>
-          // search-many half: query the standing index at --index. The
-          // compressed codes are the ONLY corpus-wide relation touched;
-          // EMB_DIR supplies the query vectors and the Q x shortlist
-          // rerank fetch (vec_id equi-join), never a full raw scan.
-          val Vector((_, embDir)) = positional(pos, "index-search", "EMB_DIR")
-          val idx = required(opts, "index")
-          val meta = spark.read.parquet(s"$idx/meta").head()
-          val (m, dims, codes) = (meta.getAs[Int]("m"),
-            meta.getAs[Int]("dims"), meta.getAs[Int]("codes"))
-          val emb = spark.read.parquet(embDir)
-          // queries: --ids picks corpus rows; --queries is an EXTERNAL
-          // (vec_id, embedding) parquet — the production shape, where
-          // the asker's vectors were never indexed
-          val queries = (opts.get("ids"), opts.get("queries")) match {
-            case (Some(ids), None) =>
-              emb.filter(col("vec_id").isin(
-                ids.split(',').map(_.trim.toLong).toSeq: _*))
-            case (None, Some(qDir)) => spark.read.parquet(qDir)
-            case _ => throw CliError(
-              "index-search needs exactly one of --ids or --queries")
-          }
-          val res = graft.ops.Pq.searchIndex(
-            spark.read.parquet(s"$idx/codes"), emb, queries,
-            k = intOpt(opts, "k", 3),
-            books = graft.ops.Pq.booksFromDf(spark.read.parquet(s"$idx/codebooks")),
-            centroids = Some(spark.read.parquet(s"$idx/centroids")),
-            nprobe = intOpt(opts, "nprobe", 2),
-            shortlist = intOpt(opts, "shortlist", 32),
-            m = m, dims = dims, codes = codes)
-          res.orderBy(col("q_id"), col("rank")).collect().foreach { r =>
-            println(s"${r.getAs[Long]("q_id")} ${r.getAs[Long]("c_id")} " +
-              s"${r.getAs[Int]("rank")} ${r.getAs[Double]("score")}")
-          }
-          0
-
-        case "fuzzy-index-build" =>
-          // build-once half of the fuzzy-match standing index: the
-          // deletion-variant rows land as plain parquet (bucket the
-          // `v` column at rest for co-located probes) + a 1-row meta
-          // table pinning k, so search never guesses the neighborhood
-          // radius the index was built for.
-          val Vector((_, srcDir)) = positional(pos, "fuzzy-index-build", "SRC_DIR")
-          val out = required(opts, "out")
-          val k = intOpt(opts, "k", 1)
-          val idCol = opts.getOrElse("id-col", "id")
-          val strCol = opts.getOrElse("str-col", "str")
-          val src = spark.read.parquet(srcDir)
-          // cast at the CLI boundary (the er-resolve convention): an
-          // int-typed id parquet must not surface later as a
-          // ClassCastException in fuzzy-search's getAs[Long] output
-          graft.ops.FuzzyJoin.deleteVariantIndex(src, col(idCol).cast("long"), col(strCol), k)
-            .write.mode(SaveMode.Overwrite).parquet(s"$out/variants")
-          import spark.implicits._
-          Seq(k).toDF("k").write.mode(SaveMode.Overwrite).parquet(s"$out/meta")
-          val n = spark.read.parquet(s"$out/variants").count()
-          println(s"indexed $n variant rows into $out (k=$k)")
-          0
-
-        case "fuzzy-search" =>
-          // search-many half: probe the standing --index with O(probe
-          // x fanout) work; the corpus is never re-enumerated. Probes
-          // come from --strings (ad hoc, ids are their position) or
-          // --queries DIR, an (id, str) parquet.
-          val idx = required(opts, "index")
-          val k = spark.read.parquet(s"$idx/meta").head().getAs[Int]("k")
-          import spark.implicits._
-          val probe = (opts.get("strings"), opts.get("queries")) match {
-            case (Some(ss), None) =>
-              ss.split(',').toSeq.zipWithIndex
-                .map { case (t, i) => (i.toLong, t.trim) }.toDF("id", "str")
-            case (None, Some(qDir)) =>
-              // normalize an int-typed external id column to long (the
-              // er-resolve convention) so the getAs[Long] output below
-              // cannot ClassCastException on a valid parquet
-              val q = spark.read.parquet(qDir)
-              q.withColumn("id", col("id").cast("long"))
-            case _ => throw CliError(
-              "fuzzy-search needs exactly one of --strings or --queries")
-          }
-          val res = graft.ops.FuzzyJoin.probeDeletes(probe, col("id"), col("str"),
-            spark.read.parquet(s"$idx/variants"), k)
-          res.orderBy(col("probe_id"), col("dist"), col("match_id"))
-            .collect().foreach { r =>
-              println(s"${r.getAs[Long]("probe_id")} ${r.getAs[Long]("match_id")} " +
-                s"${r.getAs[Long]("dist")}")
-            }
-          0
-
-        case "er-resolve" =>
-          // one-shot entity resolution over an (id, name) parquet:
-          // conjunctive rule (lev <= k AND trigram-jaccard >= tau),
-          // entities = connected components (ops/EntityResolution).
-          // Output keeps the name column so er-assign can probe it as
-          // the standing corpus.
-          val Vector((_, srcDir)) = positional(pos, "er-resolve", "SRC_DIR")
-          val out = required(opts, "out")
-          val k = intOpt(opts, "k", 1)
-          val tau = doubleOpt(opts, "tau", 0.9)
-          val idCol = opts.getOrElse("id-col", "id")
-          val nameCol = opts.getOrElse("name-col", "name")
-          val src = spark.read.parquet(srcDir)
-          graft.ops.EntityResolution.resolve(src, col(idCol), col(nameCol), k, tau)
-            .join(src.select(col(idCol).cast("long").as("record_id"),
-              col(nameCol).as("name")), Seq("record_id"))
-            .write.mode(SaveMode.Overwrite).parquet(out)
-          import spark.implicits._
-          Seq((k, tau)).toDF("k", "tau").write.mode(SaveMode.Overwrite)
-            .parquet(s"$out.meta")
-          val res = spark.read.parquet(out)
-          val nEnt = res.select("entity_id").distinct().count()
-          println(s"resolved ${res.count()} records into $nEnt entities -> $out (k=$k tau=$tau)")
-          0
-
-        case "er-assign" =>
-          // incremental half: place an (id, name) batch against a
-          // standing er-resolve output with O(batch) pairing work
-          // (standing variant index + pre-coarsened entity links —
-          // bridges merge, ops/EntityResolution.assignBatch). The rule
-          // comes from the corpus meta, so a batch can never be
-          // assigned under different thresholds than its corpus.
-          val Vector((_, batchDir)) = positional(pos, "er-assign", "BATCH_DIR")
-          val corpusDir = required(opts, "corpus")
-          val meta = spark.read.parquet(s"$corpusDir.meta").head()
-          val (k, tau) = (meta.getAs[Int]("k"), meta.getAs[Double]("tau"))
-          val idCol = opts.getOrElse("id-col", "id")
-          val nameCol = opts.getOrElse("name-col", "name")
-          val corpus = spark.read.parquet(corpusDir)
-          val res = graft.ops.EntityResolution.assignBatch(
-            corpus, col("record_id"), col("entity_id"), col("name"),
-            spark.read.parquet(batchDir), col(idCol).cast("long"), col(nameCol), k, tau)
-          opts.get("out").foreach(o =>
-            res.write.mode(SaveMode.Overwrite).parquet(o))
-          res.orderBy(col("record_id")).collect().foreach { r =>
-            println(s"${r.getAs[Long]("record_id")} ${r.getAs[Long]("entity_id")}")
-          }
           0
 
         case "fixtures-prepare" =>

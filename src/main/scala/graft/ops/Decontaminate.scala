@@ -97,38 +97,4 @@ object Decontaminate {
       .agg(count(lit(1)).as("n_overlap"))
       .filter(col("n_overlap") >= minOverlap)
   }
-
-  /** Standing benchmark gate for STREAMING ingestion: the bloom and the
-    * bench shingle relation built ONCE at stream start and probed by
-    * every micro-batch — the streaming corpus gate must match the batch
-    * gate without paying the bench scan per epoch. The shingle relation
-    * is persisted (bench-sized, small by contract) so each batch's
-    * exact-confirm join reads cache, not parquet; `release()` drops it
-    * when the stream stops. Same one-sided-error contract as
-    * [[overlapBloom]]: the bloom only PRUNES, the exact join decides —
-    * no clean doc is ever dropped by a bloom false positive. */
-  final case class BenchGate(bloom: org.apache.spark.util.sketch.BloomFilter,
-      benchShingles: DataFrame, minOverlap: Int) {
-    def release(): Unit = benchShingles.unpersist(blocking = false)
-  }
-
-  def benchGate(bench: DataFrame, minOverlap: Int = 3,
-      fpp: Double = 0.001): BenchGate = {
-    val bs = shingles(bench).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = math.max(bs.count(), 1L)
-    BenchGate(bs.stat.bloomFilter("sh", n, fpp), bs, minOverlap)
-  }
-
-  /** doc_ids of `docs` contaminated per the standing gate — the
-    * micro-batch probe: map-side bloom prune, exact confirm on the
-    * survivors, O(batch) work per call (the bench side is the cached
-    * relation + the driver-held bloom; nothing rescans the bench). */
-  def contaminatedIds(docs: DataFrame, gate: BenchGate): DataFrame =
-    shingles(docs).withColumnRenamed("doc_id", "train_id")
-      .filter(graft.expr.Bloom.mightContain(col("sh"), gate.bloom))
-      .join(broadcast(gate.benchShingles.withColumnRenamed("doc_id", "bench_id")), "sh")
-      .groupBy(col("train_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_overlap"))
-      .filter(col("n_overlap") >= gate.minOverlap)
-      .select(col("train_id").as("doc_id")).distinct()
 }

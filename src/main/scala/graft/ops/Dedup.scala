@@ -108,16 +108,9 @@ object Dedup {
     * grouping generates the same pair set from a single pass. */
   def minhashCandidatePairs(docs: DataFrame, numHashes: Int = 4,
       maxBucket: Int = 1000): DataFrame =
-    candidatePairsFromBands(bandIndex(docs, numHashes, maxBucket))
-
-  /** Pair generation from an ALREADY-BUILT band relation — callers that
-    * need the bands for more than one purpose (streaming ingest probes
-    * the corpus AND appends survivors' bands) build [[bandIndex]] once,
-    * persist it, and derive everything from that single signature pass. */
-  def candidatePairsFromBands(bands: DataFrame): DataFrame =
     // The cap window and the groupBy hash-partition on the same (band, h)
     // key, so the aggregation reuses the window's exchange — one shuffle.
-    bands
+    bandIndex(docs, numHashes, maxBucket)
       .groupBy(col("band"), col("h"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)

@@ -38,8 +38,8 @@ object Drift {
     drift(a.select(key.as("key")), b.select(key.as("key")), k)
 
   /** One-row drift summary (n_a, n_b, n_keys, l1_ppm) straight from
-    * per-key COUNT relations — the ingest-gate entry point: a standing
-    * distribution lives as counts at rest, so the batch-vs-standing
+    * per-key COUNT relations — the entry point `drift_at_rest` folds: a
+    * standing distribution lives as counts at rest, so the batch-vs-standing
     * comparison should not re-observe rows. `ca`: (key, cnt_a);
     * `cb`: (key, cnt_b). */
   def l1Summary(ca: DataFrame, cb: DataFrame): DataFrame =

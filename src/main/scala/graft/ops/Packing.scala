@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,25 +37,10 @@ object Packing {
     */
   def pack(docs: DataFrame, seqLen: Long = 256L, shards: Int = 8): DataFrame = {
     require(shards > 0, s"shards must be positive, got $shards")
-    packStream(
-      docs.withColumn("shard",
-        pmod(Sampling.hashBucket32(col("doc_id")), lit(shards)).cast("long")),
-      seqLen, Seq(col("doc_id"), col("chunk_idx")))
-  }
-
-  /** [[pack]] over a corpus that ALREADY carries its `shard` column and
-    * a within-shard order (e.g. the `pos` permutation written by
-    * `Sampling.shuffleShards`): the token stream concatenates in THAT
-    * order, so the packing index and physically ordered shard files
-    * describe the same stream — the property a trainer reading both
-    * artifacts depends on. `order` must totally order each shard's
-    * chunks (include a chunk tiebreaker; `chunk_idx` is in scope). */
-  def packWithOrder(docs: DataFrame, seqLen: Long, order: Seq[Column]): DataFrame =
-    packStream(docs, seqLen, order)
-
-  private def packStream(docs: DataFrame, seqLen: Long, order: Seq[Column]): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     val chunks = docs
+      .withColumn("shard",
+        pmod(Sampling.hashBucket32(col("doc_id")), lit(shards)).cast("long"))
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
       // greatest(0, ...) guards n_tokens = 0: sequence(0, -1) would
       // count DOWN ([0, -1]) rather than produce an empty chunk list.
@@ -63,7 +48,7 @@ object Packing {
         explode(sequence(lit(0L), greatest(lit(0L), expr(s"(n_tokens - 1) div $seqLen")))))
       .withColumn("chunk_tokens",
         least(lit(seqLen), col("n_tokens") - col("chunk_idx") * lit(seqLen)))
-    val stream = Window.partitionBy(col("shard")).orderBy(order: _*)
+    val stream = Window.partitionBy(col("shard")).orderBy(col("doc_id"), col("chunk_idx"))
     chunks
       .withColumn("start_tok", sum(col("chunk_tokens")).over(stream) - col("chunk_tokens"))
       .select(col("doc_id"), col("chunk_idx"), col("shard"), col("chunk_tokens"),

@@ -119,22 +119,6 @@ object Pq {
 
   private def sqNormOf(v: Vector[Long]): Long = v.foldLeft(0L)((s, x) => s + x * x)
 
-  /** Codebook persistence seam (the kmeansCentroids convention): the
-    * trained books as a metadata-scale (sub, code, cv, cnrm) relation
-    * the CLI writes beside the encoded index, and its inverse. */
-  def booksToDf(spark: org.apache.spark.sql.SparkSession,
-      books: Array[Book]): DataFrame = {
-    import spark.implicits._
-    books.toSeq.map(b => (b.sub, b.code, b.cv, b.cnrm))
-      .toDF("sub", "code", "cv", "cnrm")
-  }
-
-  def booksFromDf(df: DataFrame): Array[Book] =
-    df.select(col("sub"), col("code"), col("cv"), col("cnrm")).collect()
-      .map(r => Book(r.getAs[Int]("sub"), r.getAs[Long]("code"),
-        r.getAs[scala.collection.Seq[Long]]("cv").toVector, r.getAs[Long]("cnrm")))
-      .sortBy(b => (b.sub, b.code))
-
   /** Map-side per-subspace nearest-code argmin: m stable calls into the
     * CellKernels expression (one per subspace — the codebooks ride as
     * driver-held references, so Janino compiles each call site once). */
@@ -207,15 +191,6 @@ object Pq {
       element_at(col("dtf"), (lit(t * codes) + col(s"code_$t")).cast("int")))
       .reduce(_ + _)
 
-  /** Public ADC scoring seams for callers composing their own probe
-    * (the streaming embed gate): [[dotTable]] attaches the flattened
-    * m×k dot table to a relation carrying an exact `qv`; [[adcDot]] is
-    * the numerator over a joined row carrying `dtf` + `code_*`. */
-  def dotTable(books: Array[Book], m: Int = 8, dims: Int = 64,
-      codes: Int = 16): Column = dtfExpr(books, m, dims, codes)
-
-  def adcDot(m: Int = 8, codes: Int = 16): Column = adcNumerator(m, codes)
-
   /** ADC top-k: score every candidate's CODES against each query's
     * precomputed dot table. The query set must be broadcast-sized (the
     * [[Similarity.bruteForceTopK]] contract); candidates are the
@@ -250,46 +225,20 @@ object Pq {
     * ~64x, exact math only on Q·shortlist fetched rows. */
   def ivfAdcRerankTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
       books: Array[Book], centroids: DataFrame, nprobe: Int = 2,
-      shortlist: Int = 32, m: Int = 8, dims: Int = 64, codes: Int = 16): DataFrame =
-    searchIndex(
-      encode(Similarity.assignCells(Similarity.prep(embeddings), centroids),
-        books, m, dims),
-      embeddings, queries, k, books, Some(centroids), nprobe, shortlist,
-      m, dims, codes)
-
-  /** Search a STORED index — the build-once/search-many path the CLI
-    * `index-build`/`index-search` commands operate: `index` is the
-    * (vec_id[, cell], code_0.., rnrm) relation [[encode]] wrote (8
-    * bytes of codes per vector, NOT the raw vectors); `embeddings` is
-    * consulted only for the Q·shortlist rerank fetch (one vec_id
-    * equi-join) and the query vectors. With `centroids` present the
-    * scan is cell-pruned (IVFADC); without, it is the exhaustive
-    * compressed scan. q_id == vec_id pairs are excluded (the self-match
-    * guard every ANN entry point here shares) — an EXTERNAL query set
-    * should use ids disjoint from the corpus, or a colliding id would
-    * silently lose that one candidate. */
-  def searchIndex(index: DataFrame, embeddings: DataFrame, queries: DataFrame,
-      k: Int, books: Array[Book], centroids: Option[DataFrame] = None,
-      nprobe: Int = 2, shortlist: Int = 32, m: Int = 8, dims: Int = 64,
-      codes: Int = 16): DataFrame = {
+      shortlist: Int = 32, m: Int = 8, dims: Int = 64, codes: Int = 16): DataFrame = {
     require(shortlist >= k, "shortlist must be at least k")
-    val qPrepped = Similarity.prep(queries)
-    val q0 = centroids match {
-      case Some(c) => Similarity.probeCells(qPrepped, c, nprobe)
-      case None => qPrepped
-    }
-    val qCols = col("vec_id").as("q_id") +:
-      (if (centroids.isDefined) Seq(col("cell")) else Nil)
-    val q = q0.select(qCols :+ checkedQv(dims).as("qv") :+ col("nrm").as("q_nrm"): _*)
+    val index = encode(Similarity.assignCells(Similarity.prep(embeddings), centroids),
+      books, m, dims)
+    val q = Similarity.probeCells(Similarity.prep(queries), centroids, nprobe)
+      .select(col("vec_id").as("q_id"), col("cell"),
+        checkedQv(dims).as("qv"), col("nrm").as("q_nrm"))
       .withColumn("dtf", dtfExpr(books, m, dims, codes)).drop("qv")
-    // with cells: equi-join — candidates shuffle/bucket ONCE by cell and
-    // a (q, c) pair matches at most once (one cell per candidate);
-    // without: the broadcast-q compressed full scan
-    val joined = centroids match {
-      case Some(_) => index.join(broadcast(q), Seq("cell"))
-      case None => index.join(broadcast(q), col("q_id") =!= col("vec_id"))
-    }
-    val scored = joined.filter(col("q_id") =!= col("vec_id"))
+    // equi-join on cell: candidates shuffle/bucket ONCE by cell and a
+    // (q, c) pair matches at most once (one cell per candidate); the
+    // q_id == vec_id filter is the self-match guard every ANN entry
+    // point here shares
+    val scored = index.join(broadcast(q), Seq("cell"))
+      .filter(col("q_id") =!= col("vec_id"))
       .withColumn("score", adcNumerator(m, codes).cast("double") /
         (sqrt(col("q_nrm").cast("double")) * sqrt(col("rnrm").cast("double"))))
       .select(col("q_id"), col("vec_id").as("c_id"), col("score"))

@@ -66,10 +66,7 @@ object TextOps {
     * boundary is deterministic.
     *
     * Scale note: one window partitioned by language means one task per
-    * language — a 90%-English corpus serializes on one partition. At
-    * corpus scale use `qualityFilterByCutoff`: per-language cutoffs via
-    * aggregation (tiny result) broadcast back as a map-side filter,
-    * trading exact rank semantics for O(rows) parallelism. */
+    * language — a 90%-English corpus serializes on one partition. */
   def qualityFilter(docs: DataFrame, frac: Double = 0.25): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("stop_ratio").asc, col("doc_id").asc)
@@ -89,22 +86,6 @@ object TextOps {
         size(filter(toks, t => array_contains(stopArr, t))).as("n_stop"))
       .select(col("doc_id"), col("lang"),
         (col("n_stop").cast("double") / col("n_tokens").cast("double")).as("stop_ratio"))
-  }
-
-  /** Scale-path twin of `qualityFilter`: per-language approximate
-    * cutoff (approx_percentile sketch, mergeable partials) computed in
-    * one aggregation whose result is a few rows per language, then
-    * broadcast-joined back and applied map-side. No per-language
-    * serialization, no full sort — survives a monolingual 100 TB
-    * corpus. The cutoff is approximate where the window version is
-    * exact; both keep ~(1-frac) of each language. */
-  def qualityFilterByCutoff(docs: DataFrame, frac: Double = 0.25): DataFrame = {
-    val scored = scoredByLang(docs)
-    val cutoffs = scored.groupBy(col("lang"))
-      .agg(expr(s"approx_percentile(stop_ratio, $frac)").as("cutoff"))
-    scored.join(broadcast(cutoffs), "lang")
-      .filter(col("stop_ratio") >= col("cutoff"))
-      .select(col("doc_id"), col("lang"), col("stop_ratio"))
   }
 
   /** BPE-ish pre-tokenization: letter runs, digit runs, and single

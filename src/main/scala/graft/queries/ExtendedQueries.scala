@@ -807,7 +807,7 @@ object ExtendedQueries {
 
   private val driftAtRest: QFn = (s, dir) => {
     // Standing-drift ledger replay over counts AT REST — the
-    // DriftIngest math as a batch query (the x3_sketch_at_rest
+    // drift-ledger math as a batch query (the x3_sketch_at_rest
     // precedent: the 100 TB monitoring idiom stores per-epoch COUNT
     // partitions, and every drift row derives from counts, never
     // re-observing rows). Epochs = doc_id % 4; each epoch b >= 1
@@ -2682,7 +2682,7 @@ object ExtendedQueries {
          |GROUP BY id""".stripMargin
     }),
     QueryDef("drift_at_rest", driftAtRest, {
-      // the DriftIngest fold over counts at rest: epoch counts built
+      // the drift-ledger fold over counts at rest: epoch counts built
       // once (MATERIALIZED — the single-evaluation requirement), then
       // per epoch the standing-before-vs-batch L1 summary, totals as
       // a 1-row cross join

@@ -394,6 +394,9 @@ final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTri
   // a negative trail would put the available offset AHEAD of the head,
   // streaming blocks past maxBlock
   require(trailBlocks >= 0, s"trailBlocks must be non-negative, got $trailBlocks")
+  // a width below 1 never advances the head past start: every epoch
+  // is empty and an unbounded stream polls forever
+  require(blocksPerTrigger >= 1, s"blocksPerTrigger must be at least 1, got $blocksPerTrigger")
   private var head: Long = start
   // live chain-head polling when the fetcher supports it (RPC fetchers
   // do); the head still advances at most blocksPerTrigger per poll —
@@ -420,7 +423,7 @@ final class BlockRangeMicroBatchStream(start: Long, maxBlock: Long, blocksPerTri
     }
     // monotone even if a node briefly reports a lower height (reorg,
     // lagging replica): offsets never move backward
-    head = math.max(head, math.min(target, BlockWindow.satAdd(head, math.max(0L, blocksPerTrigger))))
+    head = math.max(head, math.min(target, BlockWindow.satAdd(head, blocksPerTrigger)))
     BlockOffset(math.max(start, head - trailBlocks))
   }
 

@@ -394,26 +394,53 @@ class MainCliSpec extends SparkSpec {
     assert(Main.run(spark, Seq("verify", "0", "10", "--db", tmp("cli_nodb"))) === 2)
   }
 
+  /** (exit code, stderr) of one CLI run. */
+  private def runCapturingErr(args: String*): (Int, String) = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val old = System.err
+    System.setErr(new java.io.PrintStream(bos, true))
+    try (Main.run(spark, args), bos.toString) finally System.setErr(old)
+  }
+
   test("validation: counts out of range exit 2 with a message naming the option") {
-    def run(args: String*): (Int, String) = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val old = System.err
-      System.setErr(new java.io.PrintStream(bos, true))
-      try (Main.run(spark, args), bos.toString) finally System.setErr(old)
-    }
     // 0 would divide by zero splitting the window; a negative count
     // would plan one partition per block
     Seq("0", "-1").foreach { n =>
-      val (code, err) = run("crawl", "0", "10", "--out", tmp("cli_np"), "--num-partitions", n)
+      val (code, err) = runCapturingErr("crawl", "0", "10", "--out", tmp("cli_np"),
+        "--num-partitions", n)
       assert(code === 2)
       assert(err.contains(s"--num-partitions: must be at least 1, got $n"), err)
     }
+    def tail(opt: String, n: String) = runCapturingErr("tail", "--once",
+      "--out", tmp("cli_tail"), "--config", tmp("cli_tail_cfg"),
+      "--checkpoint", tmp("cli_tail_ck"), "--start", "0", opt, n)
     // 0 is a valid --compact-every (never fold), so the bound is non-negative
-    val cfg = tmp("cli_ce_cfg")
-    val (code, err) = run("tail", "--once", "--out", tmp("cli_ce"), "--config", cfg,
-      "--checkpoint", tmp("cli_ce_ck"), "--start", "0", "--compact-every", "-1")
+    val (code, err) = tail("--compact-every", "-1")
     assert(code === 2)
     assert(err.contains("--compact-every: must be non-negative"), err)
+    // a width below 1 never advances the stream: --once would exit 0
+    // having processed nothing, an unbounded tail would spin forever
+    Seq("0", "-1").foreach { n =>
+      val (code, err) = tail("--blocks-per-trigger", n)
+      assert(code === 2)
+      assert(err.contains(s"--blocks-per-trigger: must be at least 1, got $n"), err)
+    }
+  }
+
+  test("the CLI surface is the reference's programs plus the operator utilities") {
+    val listed = Main.usage.linesIterator
+      .dropWhile(_ != "commands:").drop(1).takeWhile(_.nonEmpty)
+      .collect { case l if l.startsWith("  ") && !l.startsWith("   ") =>
+        l.trim.takeWhile(_ != ' ') }
+      .toList
+    assert(listed === List("crawl", "tail", "seed", "force", "verify", "load", "compact",
+      "block-number", "digest", "reset", "fixtures-prepare"))
+    for (retired <- Seq("prepare", "ingest", "index-build", "index-search",
+        "fuzzy-index-build", "fuzzy-search", "er-resolve", "er-assign")) {
+      val (code, err) = runCapturingErr(retired)
+      assert(code === 2, retired)
+      assert(err.contains(s"unknown command: $retired"), err)
+    }
   }
 
   test("digest: eth_call selector, --log-topic full hash (reference function_digest)") {
@@ -467,173 +494,5 @@ class MainCliSpec extends SparkSpec {
     assert(Main.run(spark, Seq("seed", "7", "--config", cfg)) === 0)
     // reset of an already-empty dir is a no-op success, not an error
     assert(Main.run(spark, Seq("reset", "--out", tmp("cli_reset_empty"))) === 0)
-  }
-
-  test("ingest: two --once runs share the standing index; --cdc builds the chunk index") {
-    import spark.implicits._
-    val drop = tmp("cli_ing_drop")
-    val out = tmp("cli_ing_out")
-    val ckpt = tmp("cli_ing_ckpt")
-    def write(rows: Seq[(Long, String, String, Long)]): Unit =
-      rows.toDF("doc_id", "text", "source", "n_chars")
-        .coalesce(1).write.mode("append").parquet(drop)
-    write(Seq(
-      (1L, "the quick brown fox jumps over the lazy dog", "s1", 43L),
-      (2L, "completely different words appear here entirely now", "s1", 51L)))
-    assert(Main.run(spark, Seq("ingest", drop, "--out", out,
-      "--checkpoint", ckpt, "--cdc", "--once")) === 0)
-    assert(spark.read.parquet(s"$out/corpus").select("doc_id")
-      .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
-    // second invocation, SAME checkpoint: only the new files process;
-    // the exact dup of doc 1 is dropped by the STANDING band index
-    // persisted by the first run, the new doc survives
-    write(Seq(
-      (10L, "the quick brown fox jumps over the lazy dog", "s2", 43L),
-      (11L, "yet another brand new unique document text", "s2", 42L)))
-    assert(Main.run(spark, Seq("ingest", drop, "--out", out,
-      "--checkpoint", ckpt, "--cdc", "--once")) === 0)
-    assert(spark.read.parquet(s"$out/corpus").select("doc_id")
-      .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 11L))
-    // --cdc maintained the standing chunk index for the survivors
-    assert(spark.read.parquet(s"$out/chunk_index").select("doc_id")
-      .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 11L))
-  }
-
-  test("prepare: end-to-end LLM pipeline with classifier + bench gates, funnel persisted") {
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
-    val out = tmp("cli_prep")
-    // classifier weights: harshly negative on a token some fixture docs
-    // contain, so the classifier stage provably gates; bench set = a
-    // fixture doc verbatim, so decontamination provably gates too
-    val docs = graft.tables.Tables.documents(spark, dir)
-      .select("doc_id", "text").collect()
-    val someTok = docs.map(_.getString(1).split(" ")).filter(_.length > 5)
-      .head.apply(2)
-    val clfCsv = tmp("cli_prep_clf") + "/weights.csv"
-    Seq(("token", "weight"), (someTok, "-900000")).toDF("token", "weight")
-      .coalesce(1).write.option("header", "false").csv(clfCsv)
-    val benchDir = tmp("cli_prep_bench") + "/bench"
-    graft.tables.Tables.documents(spark, dir).limit(3).select("doc_id", "text")
-      .write.parquet(benchDir)
-    assert(Main.run(spark, Seq("prepare", dir, "--out", out,
-      "--quality-frac", "0.5", "--shards", "2", "--seq-len", "128",
-      "--classifier", clfCsv, "--classifier-threshold", "0.0",
-      "--bench", benchDir)) === 0)
-    // outputs: sharded corpus, sequence packing, persisted funnel
-    assert(new java.io.File(s"$out/corpus").exists())
-    assert(new java.io.File(s"$out/packing").exists())
-    val funnel = spark.read.parquet(s"$out/funnel").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(funnel("input") > 0)
-    assert(funnel("quality_gated") < funnel("input"))
-    // both optional gates engaged (strictly decreasing at each)
-    assert(funnel("classifier_gated") < funnel("quality_gated"),
-      "classifier gate was idle — the fixture token did not gate")
-    assert(funnel("decontaminated") <= funnel("classifier_gated"))
-    assert(funnel("packed_chunks") > 0)
-    // the written corpus equals the funnel's sampled count
-    assert(spark.read.parquet(s"$out/corpus").count() === funnel("sampled_written"))
-  }
-
-  test("index-build + index-search: stored ANN index answers == one-shot library path") {
-    val dir = "/root/testdata/sf0.001"
-    val embPath = s"$dir/embeddings.parquet"
-    val out = tmp("cli_ann")
-    assert(Main.run(spark, Seq("index-build", embPath, "--out", out)) === 0)
-    // all four artifacts exist; codes carry (cell, 8 codes, rnrm), one
-    // row per corpus vector — the index is 8 bytes/vector, not vectors
-    val emb = spark.read.parquet(embPath)
-    val codes = spark.read.parquet(s"$out/codes")
-    assert(codes.count() === emb.count())
-    assert(codes.columns.toSet ===
-      (Set("vec_id", "cell", "rnrm") ++ (0 until 8).map(t => s"code_$t")))
-    assert(spark.read.parquet(s"$out/meta").head().getAs[Int]("codes") === 16)
-    // search from the STORED index (no retraining) must reproduce the
-    // one-shot library composition exactly
-    assert(Main.run(spark, Seq("index-search", embPath, "--index", out,
-      "--ids", "0,20", "--k", "3")) === 0)
-    val queries = emb.filter(org.apache.spark.sql.functions.col("vec_id").isin(0L, 20L))
-    val stored = graft.ops.Pq.searchIndex(codes, emb, queries, k = 3,
-        books = graft.ops.Pq.booksFromDf(spark.read.parquet(s"$out/codebooks")),
-        centroids = Some(spark.read.parquet(s"$out/centroids")))
-      .collect().map(_.toString).sorted.toSeq
-    val books = graft.ops.Pq.trainCodebooks(emb)
-    val cents = graft.ops.Similarity.kmeansCentroids(emb)
-    val oneShot = graft.ops.Pq.ivfAdcRerankTopK(emb, queries, k = 3, books, cents)
-      .collect().map(_.toString).sorted.toSeq
-    assert(stored === oneShot)
-    // missing --ids/--queries is the click-style validation error, exit 2
-    assert(Main.run(spark, Seq("index-search", embPath, "--index", out)) === 2)
-    // EXTERNAL query set (--queries): vectors never indexed, fresh ids
-    val extDir = tmp("cli_ann_q") + "/q"
-    import org.apache.spark.sql.functions.{col => c, transform => tf, lit => l}
-    emb.filter(c("vec_id") === 0L)
-      .select((c("vec_id") + 1000000L).as("vec_id"),
-        tf(c("embedding"), v => v * l(1.01f)).as("embedding"))
-      .write.parquet(extDir)
-    assert(Main.run(spark, Seq("index-search", embPath, "--index", out,
-      "--queries", extDir, "--k", "1")) === 0)
-    val extTop = graft.ops.Pq.searchIndex(codes, emb, spark.read.parquet(extDir),
-        k = 1, books = graft.ops.Pq.booksFromDf(spark.read.parquet(s"$out/codebooks")),
-        centroids = Some(spark.read.parquet(s"$out/centroids"))).head()
-    // a 1.01-scaled copy of corpus vector 0 must come home to vector 0
-    assert(extTop.getAs[Long]("q_id") === 1000000L)
-    assert(extTop.getAs[Long]("c_id") === 0L)
-  }
-
-  test("fuzzy-index-build + fuzzy-search answer from the persisted index") {
-    import spark.implicits._
-    val base = tmp("cli_fuzzy")
-    val srcDir = base + "/src"
-    val out = base + "/idx"
-    Seq((1L, "kitten"), (2L, "mitten"), (3L, "sitting"), (4L, "apple"))
-      .toDF("id", "str").write.parquet(srcDir)
-    assert(Main.run(spark, Seq("fuzzy-index-build", srcDir,
-      "--out", out, "--k", "1")) === 0)
-    // meta pins k; variants persisted
-    assert(spark.read.parquet(s"$out/meta").head().getAs[Int]("k") === 1)
-    assert(spark.read.parquet(s"$out/variants").count() > 0)
-    // ad hoc probe: "mitten" matches kitten+mitten at ed<=1, not sitting
-    assert(Main.run(spark, Seq("fuzzy-search", "--index", out,
-      "--strings", "mitten,banana")) === 0)
-    val got = graft.ops.FuzzyJoin.probeDeletes(
-        Seq((0L, "mitten")).toDF("id", "str"),
-        org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.col("str"),
-        spark.read.parquet(s"$out/variants"), 1)
-      .select("match_id").as[Long].collect().toSet
-    assert(got === Set(1L, 2L))
-    // missing probes is the click-style validation error, exit 2
-    assert(Main.run(spark, Seq("fuzzy-search", "--index", out)) === 2)
-  }
-
-  test("er-resolve + er-assign place a batch against the persisted entity table") {
-    import spark.implicits._
-    val base = tmp("cli_er")
-    val srcDir = base + "/src"
-    val out = base + "/entities"
-    // two dirty duplicates + one unrelated record (names long enough
-    // to clear the 0.9 trigram bar at 1 edit)
-    val b = "alphabravocharlie"
-    Seq((1L, "X" + b), (2L, "X" + b), (9L, "zuluyankeewhiskey"))
-      .toDF("id", "name").write.parquet(srcDir)
-    assert(Main.run(spark, Seq("er-resolve", srcDir, "--out", out)) === 0)
-    val ents = spark.read.parquet(out)
-      .select("record_id", "entity_id").as[(Long, Long)].collect().toMap
-    assert(ents === Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
-    assert(spark.read.parquet(out + ".meta").head().getAs[Int]("k") === 1)
-    // batch: a bridge-free near-dup of entity 1 plus a fresh singleton
-    val batchDir = base + "/batch"
-    val assignedDir = base + "/assigned"
-    Seq((5L, "X" + b + "z"), (6L, "somethingelse99"))
-      .toDF("id", "name").write.parquet(batchDir)
-    assert(Main.run(spark, Seq("er-assign", batchDir,
-      "--corpus", out, "--out", assignedDir)) === 0)
-    val got = spark.read.parquet(assignedDir)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(5L -> 1L, 6L -> 6L))
-    // missing --corpus is the click-style validation error, exit 2
-    assert(Main.run(spark, Seq("er-assign", batchDir)) === 2)
   }
 }

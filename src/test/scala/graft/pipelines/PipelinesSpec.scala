@@ -47,102 +47,6 @@ class PipelinesSpec extends SparkSpec {
     assert(tokensAfter === tokensBefore)
   }
 
-  test("prepare: the compression-ratio junk gate engages and gates exactly the floor") {
-    val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("prepare_cr").toString
-    // floor chosen from the corpus itself: just above its minimum ratio,
-    // so the gate provably drops the most-compressible doc(s) and no more
-    val docs = graft.tables.Tables.documents(spark, dir)
-    val ratios = graft.ops.TextOps.compressionRatio(docs)
-      .select("ratio").collect().map(_.getDouble(0)).sorted
-    val floor = ratios.head + 1e-9
-    val expectGated = ratios.count(_ < floor).toLong
-    assert(expectGated >= 1, "fixture has no most-compressible doc?")
-    val funnel = graft.pipelines.Prepare.run(spark, dir, out,
-        nShards = 2, minCompressRatio = Some(floor))
-      .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
-    assert(funnel("compress_gated") === funnel("input") - expectGated)
-    assert(funnel("quality_gated") <= funnel("compress_gated"))
-  }
-
-  test("prepare pipeline: funnel shrinks monotonically, shards written, pii gone") {
-    val out = java.nio.file.Files.createTempDirectory("prepare").toString
-    val funnel = graft.pipelines.Prepare.run(spark, "/root/testdata/sf0.001", out,
-        nShards = 4)
-      .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
-    assert(funnel("input") > 0)
-    assert(funnel("quality_gated") <= funnel("input"))
-    assert(funnel("deduped") <= funnel("quality_gated"))
-    assert(funnel("sampled_written") <= funnel("deduped"))
-    assert(funnel("sampled_written") > 0)
-    val corpus = spark.read.parquet(s"$out/corpus")
-    assert(corpus.count() === funnel("sampled_written"))
-    // shard is a pure function of doc_id -> at most 4 shard dirs
-    assert(corpus.select("shard").distinct().count() <= 4)
-    // the shuffle positions are a dense 1..n permutation within each
-    // shard — the trainer's data order is reproducible, not file-order
-    corpus.groupBy("shard")
-      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"),
-        org.apache.spark.sql.functions.min("pos").as("mn"),
-        org.apache.spark.sql.functions.max("pos").as("mx"),
-        org.apache.spark.sql.functions.countDistinct("pos").as("d"))
-      .collect().foreach { r =>
-        assert(r.getAs[Long]("mn") === 1L)
-        assert(r.getAs[Long]("mx") === r.getAs[Long]("n"))
-        assert(r.getAs[Long]("d") === r.getAs[Long]("n"))
-      }
-    // no unmasked emails survive
-    assert(corpus.filter(org.apache.spark.sql.functions.col("text").contains("@")).count() === 0)
-    // packing stage: every surviving doc appears in the sequence layout,
-    // and each shard's stream offsets are a gapless prefix sum
-    val packed = spark.read.parquet(s"$out/packing")
-    assert(funnel("packed_chunks") === packed.count())
-    assert(packed.select("doc_id").distinct().count() === funnel("sampled_written"))
-    val perShard = packed.groupBy("shard")
-      .agg(org.apache.spark.sql.functions.sum("chunk_tokens").as("toks"),
-        org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.expr("start_tok + chunk_tokens")).as("stream_end"))
-      .collect()
-    perShard.foreach(r =>
-      assert(r.getAs[Long]("toks") === r.getAs[Long]("stream_end"))) // gapless
-  }
-
-  test("prepare with classifier + decontamination gates: extra funnel stages bite") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("prepare_gates").toString
-    // classifier: penalize 'slow' hard enough that some docs fall below 0
-    val weights = Seq("slow" -> -5000L, "fast" -> 500L)
-    // bench: a verbatim 10-word span from a doc that SURVIVES stages
-    // 1+1b, computed from the same library calls — a span picked from a
-    // doc the earlier gates already dropped would leave the gate
-    // provably idle (counter-review finding: <= alone cannot tell)
-    val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
-    val gated = graft.ops.TextOps.qualityFilterByCutoff(docs, 0.25)
-      .select("doc_id").join(docs, "doc_id")
-    val survivor = graft.ops.Classify.scoreLinear(gated, weights, 0L, 0.0)
-      .filter(org.apache.spark.sql.functions.col("keep")).select("doc_id")
-      .join(gated, "doc_id")
-      .orderBy("doc_id").select("text").head().getString(0)
-    val span = survivor.split(" ").take(10).mkString(" ")
-    val bench = Seq((900L, span)).toDF("doc_id", "text")
-    val funnel = graft.pipelines.Prepare.run(spark, "/root/testdata/sf0.001", out,
-        nShards = 2, classifier = Some((weights, 0L, 0.0)), bench = Some(bench))
-      .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
-    assert(funnel("classifier_gated") < funnel("quality_gated"),
-      "the margin gate must actually drop documents on this fixture")
-    assert(funnel("decontaminated") < funnel("classifier_gated"),
-      "the decontamination gate must drop the doc whose span the bench holds")
-    assert(funnel("deduped") <= funnel("decontaminated"))
-    assert(funnel("sampled_written") > 0)
-    // without gates the two stages are pass-through (counts equal)
-    val out2 = java.nio.file.Files.createTempDirectory("prepare_nogate").toString
-    val f2 = graft.pipelines.Prepare.run(spark, "/root/testdata/sf0.001", out2,
-        nShards = 2)
-      .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
-    assert(f2("classifier_gated") === f2("quality_gated"))
-    assert(f2("decontaminated") === f2("quality_gated"))
-  }
-
   test("block-time CSV cache round-trips (S8)") {
     val out = Files.createTempDirectory("btc").toString + "/cache"
     Load.writeBlockTimeCsv(spark, dir, out)

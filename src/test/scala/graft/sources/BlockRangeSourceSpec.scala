@@ -42,6 +42,19 @@ class BlockRangeSourceSpec extends SparkSpec {
     assert(s.latestOffset().asInstanceOf[BlockOffset].block === 350L)
   }
 
+  test("a blocksPerTrigger below 1 is refused: the head would never leave start") {
+    val fetcher = BlockDataFetcher.Simulated
+    for (width <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException] {
+        new BlockRangeMicroBatchStream(0L, 600L, width, 0L, 2, fetcher, Map.empty,
+          BlockDataSource.Source.readerFactory(fetcher, Map.empty, Long.MaxValue,
+            BackoffPolicy(), BlockDataSource.Source.schema))
+      }
+      assert(e.getMessage.contains(s"blocksPerTrigger must be at least 1, got $width"),
+        e.getMessage)
+    }
+  }
+
   test("micro-batch stream advances per poll and honors trailBlocks") {
     val ckpt = java.nio.file.Files.createTempDirectory("br_ckpt").toString
     val stream = spark.readStream.format("blocks")
