@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.nft.{Collections, TokenUris}
+import graft.nft.{Collections, Derive, TokenUris}
 import graft.ops.SinkUtils
 import graft.pipelines.{Crawl, Load, VerifyPipeline}
 import graft.rpc.CallExecutor
@@ -46,7 +46,6 @@ object Main {
       |                     single-contract whole-chain backfill (--out)
       |  verify START END   reconcile chain truth against the DB tables (--db)
       |  load DATA_DIR      bulk backfill rollups from the events table (--out)
-      |  compact            fold a log-format tail sink to one row per key (--out)
       |  block-number       print the chain head via eth_blockNumber
       |                     (requires --evm-rpc-nodes)
       |  digest FUNCTION_ABI
@@ -90,11 +89,6 @@ object Main {
       |  --collections-view        tail: also maintain the collections view at
       |                            $out/collections (probes new contracts through
       |                            the call executor; needs --block-time-cache)
-      |  --merge-format NAME       tail sink storage: bucket (overwrite touched
-      |                            buckets, default) or log (append + read-time
-      |                            LWW resolve; fold with `compact`)
-      |  --compact-every N         tail: with --merge-format log, auto-fold the
-      |                            append log every N epochs (default: never)
       |  --start N                 tail: explicit starting block, overriding the
       |                            seeded bookmark (required when nothing is seeded)
       |  --trail-blocks N          reorg lag for tail (default 0)
@@ -119,8 +113,7 @@ object Main {
     "out", "config", "data-version", "increment-data-version", "stage-dir",
     "block-time-cache", "db", "collection", "trail-blocks", "blocks-per-trigger",
     "checkpoint", "max-block", "buckets", "once", "start",
-    "head-wait-ms", "head-probe-ms", "rpc-requests-per-second", "merge-format",
-    "compact-every",
+    "head-wait-ms", "head-probe-ms", "rpc-requests-per-second",
     "owners-view", "tokens-view", "uris-view", "collections-view", "log-topic")
 
   private[cli] def parse(args: Seq[String]): (String, Vector[String], Map[String, String]) = {
@@ -195,29 +188,11 @@ object Main {
         LogsFetcher.Simulated, CallExecutor.Simulated, Map.empty)
   }
 
-  // every log-format-capable tail table's (keys, versionCols) — the ONE
-  // place the tail's sinks, verify's log resolution and `compact` take
-  // identities from, so a table the tail can write is never left
-  // unresolvable/unfoldable. Transfers are append-only facts keyed by
-  // their synthetic version (K8 idempotent-append semantics).
-  private val SinkIdentity: Seq[(String, Seq[String], Seq[String])] = Seq(
-    ("transfers", Seq("collection_id", "token_id", "attribute_version"),
-      Seq("attribute_version")),
-    ("uris", TokenUris.Keys, TokenUris.Version),
-    ("collections", Collections.Keys, Collections.Version))
-  // the epoch-stamped VIEW tables' read seams, kept NEXT to SinkIdentity
-  // so every table shape the tail can write has its resolution declared
-  // in one place
+  // the epoch-stamped VIEW tables' read seams: verify reads a tail-written
+  // owners/tokens view through them
   private val ViewReaders: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     ("owners", graft.streaming.Tail.readOwners _),
     ("tokens", graft.streaming.Tail.readTokens _))
-
-  private def mergeFormat(opts: Map[String, String], buckets: Int): graft.streaming.Tail.LwwMergeFormat =
-    opts.getOrElse("merge-format", "bucket") match {
-      case "bucket" => new graft.streaming.Tail.BucketOverwriteFormat(buckets)
-      case "log"    => new graft.streaming.Tail.LogAppendFormat(buckets)
-      case other    => throw CliError(s"--merge-format: unknown format '$other' (bucket|log)")
-    }
 
   private def writeTables(tables: Map[String, DataFrame], outDir: String): Unit =
     tables.foreach { case (name, df) =>
@@ -303,17 +278,10 @@ object Main {
               numPartitions, w.receipts, w.options))
             .load()
           val buckets = intOpt(opts, "buckets", 16)
-          val compactEvery = intOpt(opts, "compact-every", 0)
-          if (compactEvery < 0) throw CliError("--compact-every: must be non-negative")
-          if (compactEvery > 0 && opts.getOrElse("merge-format", "bucket") != "log")
-            throw CliError("--compact-every requires --merge-format log " +
-              "(the bucket format already stores one row per key)")
-          // the LWW sink of a SinkIdentity table under --out
-          def lwwSink(name: String) = SinkIdentity.collectFirst {
-            case (`name`, keys, versionCols) => graft.streaming.Tail.mergeSink(s"$out/$name",
-              keys, versionCols, mergeFormat(opts, buckets), compactEvery) _
-          }.get
-          val factSink = lwwSink("transfers")
+          // the LWW sink of one of the tail's entity tables under --out
+          def lwwSink(name: String, keys: Seq[String], versionCols: Seq[String]) =
+            graft.streaming.Tail.lwwSink(s"$out/$name", keys, versionCols, buckets) _
+          val factSink = lwwSink("transfers", Derive.TransferKeys, Derive.TransferVersion)
           def blockTimeDim(flag: String) =
             opts.get("block-time-cache").map(Load.readBlockTimeCsv(spark, _))
               .getOrElse(throw CliError(
@@ -342,7 +310,7 @@ object Main {
               // views are enabled (spec-pinned by method counts)
               val epoch = rb.persist()
               val logs = epoch.select(explode(col("logs")).as("l")).select(col("l.*"))
-              val transfers = graft.nft.Derive.transfers(logs).persist()
+              val transfers = Derive.transfers(logs).persist()
               try {
                 factSink(transfers, id)
                 views.foreach(_(transfers, id))
@@ -360,7 +328,8 @@ object Main {
                   val updates = TokenUris.updates(logs,
                     TokenUris.fromMints(spark, transfers, w.calls, w.options))
                     .localCheckpoint(true)
-                  if (!updates.isEmpty) lwwSink("uris")(updates, id)
+                  if (!updates.isEmpty)
+                    lwwSink("uris", TokenUris.Keys, TokenUris.Version)(updates, id)
                 }
                 collectionsDim.foreach { bt =>
                   // new contracts this epoch, through the crawl's
@@ -368,9 +337,10 @@ object Main {
                   // created contracts) is eager-checkpointed so the
                   // sink's several actions don't re-issue its calls
                   if (!Collections.creations(epoch).isEmpty)
-                    lwwSink("collections")(Collections.fromChain(spark, epoch, bt,
-                      intOpt(opts, "data-version", 1), w.calls, w.options,
-                      _.localCheckpoint(true)), id)
+                    lwwSink("collections", Collections.Keys, Collections.Version)(
+                      Collections.fromChain(spark, epoch, bt,
+                        intOpt(opts, "data-version", 1), w.calls, w.options,
+                        _.localCheckpoint(true)), id)
                 }
               } finally { transfers.unpersist(false); epoch.unpersist(false) }
             }
@@ -413,10 +383,7 @@ object Main {
             s"ENDING_BLOCK ($end) must be greater than STARTING_BLOCK ($start)")
           val db = required(opts, "db")
           val collection = opts.get("collection").map(addressArg("--collection", _))
-          // a table written by the log-format tail sink is an epoch log
-          // (replays appended verbatim, `__bucket` partition column) —
-          // resolve it to facts before reconciling, or every replayed
-          // epoch would surface as a duplicate-fact discrepancy
+          // a tail-written table carries its sink's storage columns
           val tableCache = scala.collection.mutable.Map.empty[String, DataFrame]
           def table(name: String) = tableCache.getOrElseUpdate(name, {
             val raw = spark.read.parquet(s"$db/$name")
@@ -431,19 +398,9 @@ object Main {
                 case Some((_, read)) => read(spark, s"$db/$name")
                 case None => raw.drop("__bucket", "__epoch")
               }
-            else SinkIdentity.find(_._1 == name) match {
-              // resolve through the log format's own read seam with the
-              // TABLE'S key/version identity — a bare drop("__bucket")
-              // would hand replayed epochs and superseded versions to
-              // the reconcile as duplicate facts. The resolution stays
-              // LAZY (no checkpoint): --collection pushes its filter
-              // through the collapse grouping key into the scan, which
-              // an eager materialization would forfeit for the whole log.
-              case Some((_, keys, versionCols)) =>
-                new graft.streaming.Tail.LogAppendFormat(intOpt(opts, "buckets", 16))
-                  .read(spark, s"$db/$name", keys, versionCols)
-              case None => raw.drop("__bucket")
-            }
+            // an LWW sink table (tail transfers/uris/collections) stores
+            // one row per key under its `__bucket` partition column
+            else raw.drop("__bucket")
           })
           def narrowed(df: DataFrame) =
             collection.fold(df)(c => df.filter(col("collection_id") === c))
@@ -559,27 +516,6 @@ object Main {
           val Vector((_, dataDir)) = positional(pos, "load", "DATA_DIR")
           Load.run(spark, dataDir, required(opts, "out"), intOpt(opts, "buckets", 16))
           println(s"loaded $dataDir into ${opts("out")}")
-          0
-
-        case "compact" =>
-          positional(pos, "compact") // no positional args
-          val out = required(opts, "out")
-          // --buckets must match the tail that wrote the log, same as it
-          // must between tail restarts. Fold EVERY log-format table the
-          // tail can write (each with its own identity) — compacting
-          // only transfers would leave uris/collections logs growing
-          // unbounded, the exact problem compact exists to solve.
-          val fmt = new graft.streaming.Tail.LogAppendFormat(intOpt(opts, "buckets", 16))
-          val folded = SinkIdentity.flatMap { case (name, keys, versionCols) =>
-            // Hadoop-path probe, not java.io.File: --out may be any
-            // filesystem Spark writes to (s3a://, hdfs://, file: URIs)
-            if (graft.ops.SinkUtils.tableExists(spark, s"$out/$name")) {
-              fmt.compact(spark, s"$out/$name", keys, versionCols)
-              Some(name)
-            } else None
-          }
-          if (folded.isEmpty) throw CliError(s"compact: no log-format tables under $out")
-          println(s"compacted ${folded.map(n => s"$out/$n").mkString(", ")}")
           0
 
         case "digest" =>

@@ -21,6 +21,11 @@ object Derive {
   val Erc1155TransferBatchSig: String = Keccak.eventTopic("TransferBatch(address,address,address,uint256[],uint256[])")
   val Erc1155UriSig: String = Keccak.eventTopic("URI(string,uint256)")
 
+  /** The transfers table's LWW identity: append-only facts keyed by
+    * their synthetic version (K8 idempotent-append semantics). */
+  val TransferKeys: Seq[String] = Seq("collection_id", "token_id", "attribute_version")
+  val TransferVersion: Seq[String] = Seq("attribute_version")
+
   /** P5: synthetic monotonic version key, rendered as 40-digit
     * zero-padded hex (`nft/evm/oracles.py:8-22`). */
   def attributeVersion(block: Column, txIdx: Column, logIdx: Column): Column =
@@ -87,7 +92,7 @@ object Derive {
     * tiny batch lists, no shuffle. A TransferBatch may repeat a token
     * id (ids=[5,5], values=[1,2]); its items share one
     * attribute_version, and that triple is the storage identity every
-    * sink/verify/compact consumer keys on, so the repeat must collapse
+    * sink/verify consumer keys on, so the repeat must collapse
     * HERE with its total value preserved. (Deliberate deviation from
     * the reference, whose keyed put would keep only ONE item's value,
     * `dynamodb.py:334-363` — a silent quantity loss our balance folds

@@ -107,7 +107,12 @@ object Crawl {
     * receipt comes from a ONE-block receipts window; the probe/snapshot
     * flow classifies; `blockTimes` is the caller's block-time dimension
     * — the reference's `--block-time-cache` file (S8,
-    * `Load.readBlockTimeCsv`) or a staged blocks read. */
+    * `Load.readBlockTimeCsv`) or a blocks-source read.
+    *
+    * Every table reads the logs and the time dim again, so both are
+    * checkpointed once (the crawl's `stageDir` pattern, in memory): the
+    * logs window is swept and the blocks dim fetched once per force, not
+    * once per table. */
   def forceLoad(spark: SparkSession, collectionId: String, creationBlock: Long,
       maxBlock: Long, blockTimes: DataFrame,
       receiptsFetcher: String = graft.sources.ReceiptDataFetcher.Simulated,
@@ -125,19 +130,20 @@ object Crawl {
     // scan, and the window width becomes a sound proxy for the dim's
     // broadcast size (unpruned, a 1000-block force over a 20M-row cache
     // would broadcast the full cache)
-    val windowTimes = blockTimes.filter(
-      col("number") >= creationBlock && col("number") < maxBlock)
+    val stage = (df: DataFrame, _: String) => df.localCheckpoint(true)
+    val windowTimes = stage(blockTimes.filter(
+      col("number") >= creationBlock && col("number") < maxBlock), "block_times")
     val creationReceipts = src("receipts", receiptsFetcher, creationBlock, creationBlock + 1)
       .filter(col("contract_address") === collectionId)
-    // no transfers can precede the creation: start the log scan there
-    val logs = src("logs", logsFetcher, creationBlock, maxBlock)
-      .filter(col("address") === collectionId)
+    // no transfers can precede the creation: start the log scan there;
+    // staged after the address filter, which pushes into eth_getLogs
+    val logs = stage(src("logs", logsFetcher, creationBlock, maxBlock)
+      .filter(col("address") === collectionId), "logs")
     // the same probes as the full crawl (the shared bus wires the
     // transformers for force loads too, `nft/bin/shared.py`), each
     // probe lineage checkpointed once where the crawl stages it
     entityTables(spark, creationReceipts, logs, Derive.transfers(logs), windowTimes,
-      maxBlock - creationBlock, (df, _) => df.localCheckpoint(true),
-      callExecutor, fetcherOptions, dataVersion)
+      maxBlock - creationBlock, stage, callExecutor, fetcherOptions, dataVersion)
   }
 
   /** The five entity tables over one chain read, shared by [[fromChain]]

@@ -54,51 +54,6 @@ object Load {
     spark.read.parquet(s"$outDir/tokens")
   }
 
-  /** The reference's `force` entry point (`nft/bin/force.py:52-135`):
-    * re-derive ONE entity's state end-to-end and swap it into the
-    * existing tables, leaving everything else untouched. Here the unit
-    * of state is the owner (the reference's is a collection): the fact
-    * table replaces just that owner's rows via a bucket-scoped dynamic
-    * partition overwrite (read one bucket, not the table), and the
-    * small tokens rollup is LWW-upserted on the owner key. Returns the
-    * recomputed rollup row(s). */
-  def forceOne(spark: SparkSession, dir: String, outDir: String, owner: Int,
-               nBuckets: Int = 16): DataFrame = {
-    import graft.ops.Lww
-    val fresh = Crawl.transfers(spark, dir)
-      .filter(col("to_u") === owner) // pushed into the scan
-      .withColumn("owner_bucket", pmod(hash(col("to_u")), lit(nBuckets)))
-    // int literal on purpose: murmur3 hashes an int and a long of the
-    // same value differently, and `owner_bucket` was hashed from the
-    // int-typed to_u column
-    val bucket = pmod(hash(lit(owner)), lit(nBuckets))
-    // The owner's bucket, minus its old rows, plus the re-derived ones.
-    // localCheckpoint bounds the materialization to one bucket and cuts
-    // the lineage so the dynamic overwrite doesn't read its own output.
-    // null-SAFE exclusion: rows with null to_u (digit-less props) share
-    // bucket pmod(hash(null)); a plain =!= evaluates null for them and
-    // the rewrite would silently drop them from the bucket forever
-    val keptInBucket = spark.read.parquet(s"$outDir/transfers")
-      .filter(col("owner_bucket") === bucket && !(col("to_u") <=> owner))
-    keptInBucket.unionByName(fresh).localCheckpoint(true)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("owner_bucket")
-      .parquet(s"$outDir/transfers")
-
-    val freshTokens = fresh.groupBy(col("to_u").as("owner"))
-      .agg(
-        min_by(struct(col("event_id"), col("ts_us")), col("attribute_version")).as("first_seen"),
-        count(lit(1)).as("n_transfers"),
-        sum(when(col("transaction_type") === "burn", -col("value").cast("decimal(18,2)"))
-          .otherwise(col("value").cast("decimal(18,2)"))).cast("double").as("net_value"),
-        max(col("attribute_version")).as("attribute_version"))
-    val mergedTokens = Lww.upsert(spark.read.parquet(s"$outDir/tokens"), freshTokens,
-      Seq("owner"), Seq("attribute_version")).localCheckpoint(true)
-    mergedTokens.write.mode(SaveMode.Overwrite).parquet(s"$outDir/tokens")
-    freshTokens
-  }
-
   /** S8: the block-time CSV cache (`evm/util.py:6-24`) — a (number,
     * timestamp) dim persisted as CSV, loaded back as a broadcastable
     * dimension. */

@@ -18,192 +18,78 @@ import graft.ops.Lww
 object Tail {
 
   /** Deterministic key bucket — the sink's partition column. */
-  def bucketExpr(keys: Seq[String], numBuckets: Int): org.apache.spark.sql.Column =
+  def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
 
   /** foreachBatch LWW sink: each micro-batch upserts into `target`
     * with the A4 argmax semantics — replay-idempotent, so task retries
-    * / batch replays converge (the reference's idempotence invariant).
-    * The physical upsert goes through the [[LwwMergeFormat]] seam;
-    * the default is [[BucketOverwriteFormat]]. */
-  def lwwSink(target: String, keys: Seq[String], versionCols: Seq[String],
-              numBuckets: Int = 32)(batch: DataFrame, batchId: Long): Unit =
-    mergeSink(target, keys, versionCols,
-      new BucketOverwriteFormat(numBuckets))(batch, batchId)
-
-  /** [[lwwSink]] with an explicit storage format. The sink owns the
-    * LOGICAL step every format needs — collapsing the epoch to one
-    * winner per key — and delegates the PHYSICAL upsert. Collapse is an
-    * algebraic argmax on purpose: partial (map-side) aggregation
-    * absorbs a hot key's epoch before the shuffle, where a Window over
-    * the key would funnel it into one reducer (SkewRehearsalSpec). */
-  def mergeSink(target: String, keys: Seq[String], versionCols: Seq[String],
-                format: LwwMergeFormat)(batch: DataFrame, batchId: Long): Unit =
-    mergeSink(target, keys, versionCols, format, compactEvery = 0)(batch, batchId)
-
-  /** [[mergeSink]] with log-format auto-compaction: every `compactEvery`
-    * epochs the append log folds back to one stored row per key, INSIDE
-    * foreachBatch — the engine serializes triggers, so "between
-    * micro-batches" quiescence holds by construction and read cost
-    * stays bounded (~compactEvery epochs of log, not the stream's
-    * lifetime). A replayed compaction epoch just compacts again —
-    * idempotent, the folded state is a fixpoint of compact. Ignored for
-    * formats without a log (bucket overwrite is always one row/key). */
-  def mergeSink(target: String, keys: Seq[String], versionCols: Seq[String],
-                format: LwwMergeFormat, compactEvery: Int)
-               (batch: DataFrame, batchId: Long): Unit = {
-    format.upsert(target, collapse(batch, keys, versionCols), keys, versionCols)
-    format match {
-      case log: LogAppendFormat
-        if compactEvery > 0 && batchId % compactEvery == (compactEvery - 1) =>
-        log.compact(batch.sparkSession, target, keys, versionCols)
-      case _ => ()
-    }
-  }
-
-  /** One argmax-by-version row per key — algebraic (partial-agg
-    * friendly), shared by the sink's epoch collapse and the log
-    * format's read-time resolution. Assumes distinct writes of a key
-    * carry distinct versions (equal-version duplicates are byte-
-    * identical replays), which is what makes argmax = LWW. */
-  private[streaming] def collapse(df: DataFrame, keys: Seq[String],
-                                  versionCols: Seq[String]): DataFrame = {
-    val allCols = struct(df.columns.map(col).toIndexedSeq: _*)
-    val version = struct(versionCols.map(col).toIndexedSeq: _*)
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(allCols, version).as("__row"))
-      .select(col("__row.*"))
-  }
-
-  /** Physical upsert seam for the LWW sink — the boundary at which a
-    * row-level MERGE format (Delta/Iceberg `MERGE INTO`, a JDBC upsert)
-    * replaces bucket-granular overwrite WITHOUT touching any caller:
-    * `winners` is one already-collapsed row per key, and after the call
-    * `target` must hold the argmax-by-version row per key across every
-    * epoch so far. Implementations must be replay-idempotent (re-
-    * upserting the same winners is a no-op) — foreachBatch is
-    * at-least-once. */
-  trait LwwMergeFormat {
-    def upsert(target: String, winners: DataFrame, keys: Seq[String],
-               versionCols: Seq[String]): Unit
-
-    /** Current key→winner state as this format stores it. Formats whose
-      * physical layout IS one row per key return the table as-is; a
-      * merge-on-read format resolves here. Consumers must read through
-      * this seam, not `spark.read.parquet(target)` directly, or a
-      * format swap breaks them. */
-    def read(spark: SparkSession, target: String, keys: Seq[String],
-             versionCols: Seq[String]): DataFrame =
-      spark.read.parquet(target)
-  }
-
-  /** Default format: parquet partitioned by `__bucket = pmod(hash(keys),
-    * N)`; each epoch rewrites ONLY the buckets its keys land in (dynamic
-    * partition overwrite), so per-epoch I/O is O(touched buckets x
-    * bucket size), not O(table) — the property that lets a continuous
-    * tail run against a 100 TB target. An earlier version rewrote the
-    * whole table through a tmp dir every epoch.
+    * / batch replays converge (the reference's idempotence invariant,
+    * its DynamoDB conditional version writes).
+    *
+    * The epoch first collapses to one winner per key ([[collapse]]),
+    * then rewrites ONLY the `__bucket = pmod(hash(keys), N)` partitions
+    * its keys land in (dynamic partition overwrite), so per-epoch I/O is
+    * O(touched buckets x bucket size), not O(table) — the property that
+    * lets a continuous tail run against a 100 TB target.
     *
     * Bucket-sizing contract: stored state is one row per key, so a
     * bucket holds ~distinctKeys/N rows REGARDLESS of event-volume skew
     * (a hot key collapses before storage; hash spreads keys uniformly —
     * spec-asserted under a 90%-hot-key distribution). Size N so a
     * bucket is a few GB at the target's key cardinality. */
-  final class BucketOverwriteFormat(numBuckets: Int = 32) extends LwwMergeFormat {
-    override def upsert(target: String, winners: DataFrame, keys: Seq[String],
-                        versionCols: Seq[String]): Unit = {
-      val spark = winners.sparkSession
-      val bucket = bucketExpr(keys, numBuckets)
-      // winners is the epoch's collapse aggregation and feeds two
-      // actions (the touched collect and the merge write): persist so
-      // it runs once per epoch on the hot tail path.
-      val w = winners.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // The touched-bucket list is at most numBuckets ints — a metadata-
-        // scale collect, not a data collect.
-        val touched = w.select(bucket.as("__bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // Probe absence explicitly: an AnalysisException from an EXISTING
-        // but transiently unreadable table must fail the batch, not be
-        // treated as "first batch" and overwrite prior state winners-only.
-        // (tableExists also classifies a crashed first write's bare
-        // directory as absent, so the first epoch self-heals.)
-        val existing =
-          if (graft.ops.SinkUtils.tableExists(spark, target))
-            Some(spark.read.parquet(target)
-              .filter(col("__bucket").isin(touched: _*)) // partition-pruned scan
-              .drop("__bucket"))
-          else None // first batch
-        val merged = existing match {
-          case Some(e) => Lww.upsert(e, w, keys, versionCols)
-          case None    => w
-        }
-        // localCheckpoint materializes the merged buckets (bounded by the
-        // touched set) and cuts the plan's lineage back to `target`, so the
-        // overwrite below is not "a path that is also being read from".
-        merged.withColumn("__bucket", bucket).localCheckpoint(true)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket")
-          .parquet(target)
-      } finally w.unpersist(blocking = false)
-    }
+  def lwwSink(target: String, keys: Seq[String], versionCols: Seq[String],
+              numBuckets: Int = 32)(batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val bucket = bucketExpr(keys, numBuckets)
+    // the epoch's winners feed two actions (the touched collect and the
+    // merge write): persist so the collapse runs once per epoch on the
+    // hot tail path.
+    val w = collapse(batch, keys, versionCols)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // The touched-bucket list is at most numBuckets ints — a metadata-
+      // scale collect, not a data collect.
+      val touched = w.select(bucket.as("__bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // Probe absence explicitly: an AnalysisException from an EXISTING
+      // but transiently unreadable table must fail the batch, not be
+      // treated as "first batch" and overwrite prior state winners-only.
+      // (tableExists also classifies a crashed first write's bare
+      // directory as absent, so the first epoch self-heals.)
+      val existing =
+        if (graft.ops.SinkUtils.tableExists(spark, target))
+          Some(spark.read.parquet(target)
+            .filter(col("__bucket").isin(touched: _*)) // partition-pruned scan
+            .drop("__bucket"))
+        else None // first batch
+      val merged = existing match {
+        case Some(e) => Lww.upsert(e, w, keys, versionCols)
+        case None    => w
+      }
+      // localCheckpoint materializes the merged buckets (bounded by the
+      // touched set) and cuts the plan's lineage back to `target`, so the
+      // overwrite below is not "a path that is also being read from".
+      merged.withColumn("__bucket", bucket).localCheckpoint(true)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bucket")
+        .parquet(target)
+    } finally w.unpersist(blocking = false)
   }
 
-  /** Merge-on-read format: each epoch APPENDS its collapsed winners as
-    * new files under the same `__bucket` partitioning and defers
-    * conflict resolution to read time — the Delta/Iceberg merge-on-read
-    * tradeoff expressed without a table format. Epoch write cost is
-    * O(epoch winners) regardless of stored-key cardinality, where
-    * [[BucketOverwriteFormat]] pays O(touched-bucket size) re-written
-    * per epoch: right for a steady small-epoch tail against a table
-    * whose buckets dwarf an epoch (the 100 TB continuous-crawl shape),
-    * wrong when reads vastly outnumber writes. The price is read-side
-    * [[collapse]] work and log growth linear in epochs; [[compact]]
-    * folds the log back to one stored row per key (same bucket layout,
-    * so reads stay partition-prunable on `__bucket` either way).
-    *
-    * Replay idempotence is semantic, not physical: a replayed epoch
-    * appends byte-identical rows and resolution's argmax yields the
-    * same winner, so the READ state is unchanged — exactly the
-    * at-least-once contract foreachBatch requires. */
-  final class LogAppendFormat(numBuckets: Int = 32) extends LwwMergeFormat {
-    override def upsert(target: String, winners: DataFrame, keys: Seq[String],
-                        versionCols: Seq[String]): Unit =
-      winners.withColumn("__bucket", bucketExpr(keys, numBuckets))
-        .write.mode("append")
-        .partitionBy("__bucket")
-        .parquet(target)
-
-    override def read(spark: SparkSession, target: String, keys: Seq[String],
-                      versionCols: Seq[String]): DataFrame =
-      collapse(spark.read.parquet(target).drop("__bucket"), keys, versionCols)
-
-    /** Historical read: resolve the log over only the rows whose version
-      * satisfies `upTo` — the state "as of" a point on the DOMAIN
-      * timeline (versions here encode block/log position, so this is
-      * "the table as of block N": the read the bucket-overwrite tier
-      * cannot serve, because overwrite discards losing rows). Retention
-      * is bounded by compaction — a fold keeps only current winners, so
-      * history reaches back to the last [[compact]]; `compactEvery`
-      * is therefore also the time-travel window in epochs. */
-    def readAsOf(spark: SparkSession, target: String, keys: Seq[String],
-                 versionCols: Seq[String], upTo: Column): DataFrame =
-      collapse(spark.read.parquet(target).drop("__bucket").filter(upTo),
-        keys, versionCols)
-
-    /** Fold the log to one stored row per key. Safe to run any time the
-      * sink is quiescent (between micro-batches); the rewrite keeps the
-      * bucket layout so per-key reads stay pruned afterwards. */
-    def compact(spark: SparkSession, target: String, keys: Seq[String],
-                versionCols: Seq[String]): Unit =
-      read(spark, target, keys, versionCols)
-        .withColumn("__bucket", bucketExpr(keys, numBuckets))
-        // materialize + cut lineage back to `target` before overwriting it
-        .localCheckpoint(true)
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(target)
+  /** One argmax-by-version row per key. Algebraic on purpose: partial
+    * (map-side) aggregation absorbs a hot key's epoch before the
+    * shuffle, where a Window over the key would funnel it into one
+    * reducer (SkewRehearsalSpec). Assumes distinct writes of a key carry
+    * distinct versions (equal-version duplicates are byte-identical
+    * replays), which is what makes argmax = LWW. */
+  private def collapse(df: DataFrame, keys: Seq[String],
+                       versionCols: Seq[String]): DataFrame = {
+    val allCols = struct(df.columns.map(col).toIndexedSeq: _*)
+    val version = struct(versionCols.map(col).toIndexedSeq: _*)
+    df.groupBy(keys.map(col): _*)
+      .agg(max_by(allCols, version).as("__row"))
+      .select(col("__row.*"))
   }
 
   /** Owner-balance materialized view key. */
@@ -215,7 +101,7 @@ object Tail {
     * per-key uint256 in/out deltas (`Derive.ownerDeltas`, algebraic —
     * a hot key's epoch partial-aggregates before the shuffle), then
     * merge `balance' = balance + in − out` into the touched buckets
-    * only, like [[BucketOverwriteFormat]].
+    * only, like [[lwwSink]].
     *
     * Additive merges are NOT naturally replay-idempotent (re-adding a
     * delta double-counts), so each rewritten bucket is stamped with the

@@ -104,39 +104,6 @@ class MainCliSpec extends SparkSpec {
       org.apache.spark.sql.Row(20L, 29L))
   }
 
-  test("tail --merge-format log + compact: converges with the bucket sink") {
-    val outB = tmp("cli_mf_b"); val outL = tmp("cli_mf_l"); val cfg = tmp("cli_mf_cfg")
-    assert(Main.run(spark, Seq("seed", "19", "--config", cfg)) === 0)
-    def tailInto(out: String, extra: String*) =
-      Main.run(spark, Seq("tail", "--once", "--out", out, "--config", cfg,
-        "--checkpoint", tmp("cli_mf_ck"), "--max-block", "50") ++ extra)
-    assert(tailInto(outB) === 0)
-    assert(tailInto(outL, "--merge-format", "log") === 0)
-    // invalid format refuses loudly
-    assert(tailInto(tmp("cli_mf_x"), "--merge-format", "delta") === 2)
-    // --compact-every without the log format refuses loudly
-    assert(tailInto(tmp("cli_mf_y"), "--compact-every", "2") === 2)
-    // auto-compaction inside the stream: multi-epoch tail whose final
-    // epoch count is a multiple of --compact-every ends fully folded —
-    // the stored table equals the bucket sink's state WITHOUT a manual
-    // compact step (5 triggers of 4 blocks => epochs 0..4, folds at 1,3
-    // and a tail fold at 4... epochs are 0-indexed: folds after 1 and 3;
-    // epoch 4 appends, so one epoch of log may remain on top of the fold)
-    val outA = tmp("cli_mf_a")
-    assert(tailInto(outA, "--merge-format", "log", "--compact-every", "2",
-      "--blocks-per-trigger", "4") === 0)
-    assert(Main.run(spark, Seq("compact", "--out", outA)) === 0)
-    assert(Main.run(spark, Seq("compact", "--out", outL)) === 0)
-    // after compaction the log table holds one stored row per fact and
-    // reads equal the bucket sink's state, column for column
-    def state(out: String) = spark.read.parquet(s"$out/transfers")
-      .drop("__bucket").collect().map(_.toString).sorted.toSeq
-    assert(state(outL) === state(outB))
-    assert(state(outL).nonEmpty)
-    // the auto-compacted multi-epoch tail converged to the same state
-    assert(state(outA) === state(outB))
-  }
-
   test("tail --owners-view: the owner-balance view converges with the batch rollup") {
     val out = tmp("cli_ov"); val cfg = tmp("cli_ov_cfg")
     assert(Main.run(spark, Seq("seed", "19", "--config", cfg)) === 0)
@@ -267,27 +234,53 @@ class MainCliSpec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$out/transfers")) === rows(lib("transfers")))
   }
 
-  test("verify: clean db reconciles transfers/owners; a dropped fact is flagged") {
-    val db = tmp("cli_db")
-    assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db)) === 0)
+  /** `verify` over `db` reconciles transfers/owners cleanly; with one
+    * transfer fact dropped (the table rewritten in its own partition
+    * layout) it exits 1 and flags exactly that fact `left_only`. */
+  private def verifyFlagsOneDroppedFact(db: String, start: String, end: String): Unit = {
+    // the counts section audits db token counts against the chain's
+    // totalSupply PROBE (the reference's check) — fixture supplies
+    // intentionally disagree, so only transfers/owners must be clean
+    def sections(rpt: String) = spark.read.parquet(rpt)
+      .filter(col("check").isin("transfers", "owners")).collect()
     val rpt1 = tmp("cli_rpt") + "/clean"
-    Main.run(spark, Seq("verify", "0", "40", "--db", db, "--out", rpt1))
-    val clean = spark.read.parquet(rpt1)
-    // transfers and owners reconcile exactly; the counts section audits
-    // db token counts against the chain's totalSupply PROBE (the
-    // reference's check) — fixture supplies intentionally disagree
-    assert(clean.filter(col("check").isin("transfers", "owners")).count() === 0)
-    // corrupt: drop one transfer fact
+    Main.run(spark, Seq("verify", start, end, "--db", db, "--out", rpt1))
+    assert(sections(rpt1).isEmpty, sections(rpt1).mkString("\n"))
     val all = spark.read.parquet(s"$db/transfers")
     val dropped = all.orderBy(col("attribute_version")).limit(1)
       .collect().head.getAs[String]("attribute_version")
-    all.filter(col("attribute_version") =!= dropped).localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$db/transfers")
+    val kept = all.filter(col("attribute_version") =!= dropped).localCheckpoint(true)
+      .write.mode("overwrite")
+    (if (all.columns.contains("__bucket")) kept.partitionBy("__bucket") else kept)
+      .parquet(s"$db/transfers")
     val rpt2 = tmp("cli_rpt2") + "/corrupt"
-    val code = Main.run(spark, Seq("verify", "0", "40", "--db", db, "--out", rpt2))
-    assert(code === 1) // discrepancies -> non-zero, scriptable
-    val flagged = spark.read.parquet(rpt2).filter(col("check") === "transfers").collect()
-    assert(flagged.length === 1 && flagged.head.getAs[String]("detail") === "left_only")
+    // discrepancies -> non-zero, scriptable
+    assert(Main.run(spark, Seq("verify", start, end, "--db", db, "--out", rpt2)) === 1)
+    val flagged = sections(rpt2)
+    assert(flagged.length === 1 && flagged.head.getAs[String]("check") === "transfers" &&
+      flagged.head.getAs[String]("detail") === "left_only", flagged.mkString("\n"))
+  }
+
+  test("verify: clean db reconciles transfers/owners; a dropped fact is flagged") {
+    val db = tmp("cli_db")
+    assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db)) === 0)
+    verifyFlagsOneDroppedFact(db, "0", "40")
+  }
+
+  test("verify over a tail-written DB reads the LWW tables as facts") {
+    val db = tmp("cli_tdb"); val cfg = tmp("cli_tdb_cfg")
+    val csv = tmp("cli_tdb_csv") + "/cache"
+    spark.read.format("blocks").option("start", "0").option("maxBlock", "60").load()
+      .select(col("number"), col("timestamp"))
+      .coalesce(1).write.option("header", "true").csv(csv)
+    assert(Main.run(spark, Seq("seed", "19", "--config", cfg)) === 0)
+    assert(Main.run(spark, Seq("tail", "--once", "--owners-view", "--tokens-view",
+      "--uris-view", "--collections-view", "--out", db, "--config", cfg,
+      "--checkpoint", tmp("cli_tdb_ck"), "--max-block", "60", "--blocks-per-trigger", "10",
+      "--block-time-cache", csv)) === 0)
+    // the fact table is the LWW sink's bucketed layout
+    assert(spark.read.parquet(s"$db/transfers").columns.contains("__bucket"))
+    verifyFlagsOneDroppedFact(db, "20", "60")
   }
 
   test("verify and force over RPC: per-method wire counts are pinned") {
@@ -306,7 +299,13 @@ class MainCliSpec extends SparkSpec {
       stub.methodCounts.clear()
       assert(Main.run(spark, Seq("force", f"0x${4000L}%040x", "35", "50",
         "--out", tmp("cli_wc_force"), "--evm-rpc-nodes", stub.url)) === 0)
-      assert(counts === Seq(24, 9, 4), "force: getLogs, call, getTransactionReceipt")
+      // the logs window is swept once: one eth_getLogs per partition
+      assert(counts === Seq(4, 9, 4), "force: getLogs, call, getTransactionReceipt")
+      // closed form: the blocks time dim fetches each window block once
+      // (50 - 35), plus the creation block's hash list once for each of
+      // the two creation-receipt reads (probe requests, collections rows)
+      assert(stub.countOf("eth_getBlockByNumber") === (50 - 35) + 2,
+        "force: getBlockByNumber")
     } finally stub.stop()
   }
 
@@ -338,28 +337,6 @@ class MainCliSpec extends SparkSpec {
         .filter(col("check").isin("token_uri", "token_uri_1155", "uri")).collect()
       assert(urlRows.isEmpty, urlRows.mkString("\n"))
     } finally stub.stop()
-  }
-
-  test("verify resolves a log-format transfers table: replayed epochs are not discrepancies") {
-    val db = tmp("cli_db_log")
-    assert(Main.run(spark, Seq("crawl", "0", "40", "--out", db)) === 0)
-    val facts = spark.read.parquet(s"$db/transfers").localCheckpoint(true)
-    // rewrite the same facts as an epoch LOG with a replayed epoch
-    val p = new org.apache.hadoop.fs.Path(s"$db/transfers")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val keys = Seq("collection_id", "token_id", "attribute_version")
-    val fmt = new graft.streaming.Tail.LogAppendFormat(4)
-    val e1 = facts.filter(col("block_id") < 20)
-    val e2 = facts.filter(col("block_id") >= 20)
-    Seq(e1, e2, e2).zipWithIndex.foreach { case (e, i) =>
-      graft.streaming.Tail.mergeSink(s"$db/transfers", keys,
-        Seq("attribute_version"), fmt)(e, i.toLong)
-    }
-    assert(spark.read.parquet(s"$db/transfers").count() > facts.count()) // really a log
-    val rpt = tmp("cli_rpt_log") + "/r"
-    Main.run(spark, Seq("verify", "0", "40", "--db", db, "--out", rpt))
-    assert(spark.read.parquet(rpt)
-      .filter(col("check").isin("transfers", "owners")).count() === 0)
   }
 
   test("load: bulk backfill writes the three rollup tables") {
@@ -414,10 +391,12 @@ class MainCliSpec extends SparkSpec {
     def tail(opt: String, n: String) = runCapturingErr("tail", "--once",
       "--out", tmp("cli_tail"), "--config", tmp("cli_tail_cfg"),
       "--checkpoint", tmp("cli_tail_ck"), "--start", "0", opt, n)
-    // 0 is a valid --compact-every (never fold), so the bound is non-negative
-    val (code, err) = tail("--compact-every", "-1")
-    assert(code === 2)
-    assert(err.contains("--compact-every: must be non-negative"), err)
+    // the retired log-sink options are unknown, not silently ignored
+    Seq("--merge-format" -> "log", "--compact-every" -> "2").foreach { case (opt, v) =>
+      val (code, err) = tail(opt, v)
+      assert(code === 2)
+      assert(err.contains(s"unknown option: $opt"), err)
+    }
     // a width below 1 never advances the stream: --once would exit 0
     // having processed nothing, an unbounded tail would spin forever
     Seq("0", "-1").foreach { n =>
@@ -433,10 +412,10 @@ class MainCliSpec extends SparkSpec {
       .collect { case l if l.startsWith("  ") && !l.startsWith("   ") =>
         l.trim.takeWhile(_ != ' ') }
       .toList
-    assert(listed === List("crawl", "tail", "seed", "force", "verify", "load", "compact",
+    assert(listed === List("crawl", "tail", "seed", "force", "verify", "load",
       "block-number", "digest", "reset", "fixtures-prepare"))
     for (retired <- Seq("prepare", "ingest", "index-build", "index-search",
-        "fuzzy-index-build", "fuzzy-search", "er-resolve", "er-assign")) {
+        "fuzzy-index-build", "fuzzy-search", "er-resolve", "er-assign", "compact")) {
       val (code, err) = runCapturingErr(retired)
       assert(code === 2, retired)
       assert(err.contains(s"unknown command: $retired"), err)

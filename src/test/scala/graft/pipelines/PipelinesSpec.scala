@@ -30,23 +30,6 @@ class PipelinesSpec extends SparkSpec {
     assert(new java.io.File(s"$o1/transfers").listFiles().exists(_.getName.startsWith("owner_bucket=")))
   }
 
-  test("forceOne re-derives a single owner without disturbing the rest") {
-    val out = Files.createTempDirectory("force").toString
-    Load.run(spark, dir, out)
-    val before = spark.read.parquet(s"$out/transfers").collect().map(_.toString).sorted.toSeq
-    val tokensBefore = spark.read.parquet(s"$out/tokens").collect()
-      .map(r => r.getAs[Int]("owner") -> r.toString).toMap
-    val owner = tokensBefore.keys.head
-    val got = Load.forceOne(spark, dir, out, owner)
-    assert(got.count() === 1)
-    // same inputs -> the force pass must reproduce the bulk run exactly
-    val after = spark.read.parquet(s"$out/transfers").collect().map(_.toString).sorted.toSeq
-    assert(after === before)
-    val tokensAfter = spark.read.parquet(s"$out/tokens").collect()
-      .map(r => r.getAs[Int]("owner") -> r.toString).toMap
-    assert(tokensAfter === tokensBefore)
-  }
-
   test("block-time CSV cache round-trips (S8)") {
     val out = Files.createTempDirectory("btc").toString + "/cache"
     Load.writeBlockTimeCsv(spark, dir, out)
